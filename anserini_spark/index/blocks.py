@@ -26,7 +26,7 @@ slicing the shared byte buffer.
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import List, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -326,6 +326,74 @@ def encode_blocks_arrow(
         [arrays[f.name] for f in schema], schema=schema)
 
 
+Buffers = Tuple[np.ndarray, np.ndarray]
+
+
+def binary_buffers(arr) -> Buffers:
+    """(offsets, values) numpy views of a pyarrow ``binary`` or
+    ``large_binary`` array, zero-copy: value i is
+    ``values[offsets[i]:offsets[i + 1]]``. A sliced array's offset is
+    applied to the offsets view, so the values buffer is shared."""
+    import pyarrow as pa
+
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, off_buf, val_buf = arr.buffers()
+    offsets = np.frombuffer(off_buf, dtype=width)[
+        arr.offset:arr.offset + len(arr) + 1]
+    return offsets, np.frombuffer(val_buf, dtype=np.uint8)
+
+
+def decode_block_range(
+    docs: Buffers,
+    tfs: Buffers,
+    dls: Buffers,
+    ns: np.ndarray,
+    first_docs: np.ndarray,
+    last_docs: np.ndarray,
+    lo: int,
+    hi: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode blocks [lo, hi) of a block table (one term's run:
+    ascending doc ranges) into (doc_ids, tfs, doclens) in one
+    vectorized pass per stream. ``docs``/``tfs``/``dls`` are the
+    (offsets, values) buffers of the binary columns
+    (:func:`binary_buffers`); ``ns``/``first_docs``/``last_docs`` are
+    the table's per-block columns. A run's payloads are contiguous in
+    the values buffer, so each stream decodes from one slice of it.
+
+    Per-block delta chains are stitched by rewriting each block's first
+    delta to (first_doc_b - last_doc_{b-1}) so one global cumsum yields
+    all docids.
+    """
+    ns = np.asarray(ns[lo:hi], dtype=np.int64)
+    total = int(ns.sum())
+    if total == 0:
+        z = np.empty(0, dtype=np.int64)
+        return z, z, z
+
+    def stream(buf: Buffers) -> np.ndarray:
+        offsets, values = buf
+        return varint_decode(values[offsets[lo]:offsets[hi]],
+                             total).astype(np.int64)
+
+    deltas, tf, dl = stream(docs), stream(tfs), stream(dls)
+    starts = np.zeros(len(ns), dtype=np.int64)
+    starts[1:] = np.cumsum(ns)[:-1]
+    first = np.asarray(first_docs[lo:hi], dtype=np.int64)
+    prev_last = np.empty(len(ns), dtype=np.int64)
+    prev_last[0] = 0
+    prev_last[1:] = last_docs[lo:hi - 1]
+    deltas[starts] = first - prev_last
+    doc_ids = np.cumsum(deltas, dtype=np.int64)
+    return doc_ids, tf, dl
+
+
+def _joined(bins: Sequence[bytes]) -> Buffers:
+    offsets = np.zeros(len(bins) + 1, dtype=np.int64)
+    offsets[1:] = np.cumsum([len(b) for b in bins])
+    return offsets, np.frombuffer(b"".join(bins), dtype=np.uint8)
+
+
 def decode_block_run(
     docs_bins: Sequence[bytes],
     tfs_bins: Sequence[bytes],
@@ -334,32 +402,12 @@ def decode_block_run(
     first_docs: np.ndarray,
     last_docs: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a run of blocks (same term, ascending doc ranges) into
-    (doc_ids, tfs, doclens) in one vectorized pass over the
-    concatenated bytes.
-
-    Per-block delta chains are stitched by rewriting each block's first
-    delta to (first_doc_b - last_doc_{b-1}) so one global cumsum yields
-    all docids.
-    """
-    ns = np.asarray(ns, dtype=np.int64)
-    total = int(ns.sum())
-    if total == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z
-    deltas = varint_decode(b"".join(docs_bins), total).astype(np.int64)
-    tfs = varint_decode(b"".join(tfs_bins), total).astype(np.int64)
-    dls = varint_decode(b"".join(dls_bins), total).astype(np.int64)
-    starts = np.zeros(len(ns), dtype=np.int64)
-    starts[1:] = np.cumsum(ns)[:-1]
-    first_docs = np.asarray(first_docs, dtype=np.int64)
-    last_docs = np.asarray(last_docs, dtype=np.int64)
-    prev_last = np.empty(len(ns), dtype=np.int64)
-    prev_last[0] = 0
-    prev_last[1:] = last_docs[:-1]
-    deltas[starts] = first_docs - prev_last
-    doc_ids = np.cumsum(deltas, dtype=np.int64)
-    return doc_ids, tfs, dls
+    """:func:`decode_block_range` over a run given as per-block
+    ``bytes`` payloads (the pandas kernels' row form)."""
+    return decode_block_range(
+        _joined(docs_bins), _joined(tfs_bins), _joined(dls_bins),
+        np.asarray(ns), np.asarray(first_docs), np.asarray(last_docs),
+        0, len(ns))
 
 
 def decode_positions_run(

@@ -43,23 +43,27 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes, n: int | None = None) -> np.ndarray:
-    """Decode LEB128 bytes back to a uint64 array (vectorized)."""
+def varint_decode(buf, n: int | None = None) -> np.ndarray:
+    """Decode LEB128 bytes (``bytes`` or a uint8 array) back to a uint64
+    array (vectorized)."""
     raw = np.frombuffer(buf, dtype=np.uint8)
     if raw.size == 0:
         return np.empty(0, dtype=np.uint64)
     is_last = (raw & 0x80) == 0
-    ends = np.nonzero(is_last)[0]
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(ends.shape, dtype=np.uint64)
-    max_len = int(lengths.max())
-    for k in range(max_len):
-        mask = lengths > k
-        b = raw[starts[mask] + k].astype(np.uint64)
-        vals[mask] |= (b & np.uint64(0x7F)) << np.uint64(7 * k)
+    if is_last.all():
+        # every value is one byte (most tf streams): a widening copy
+        vals = raw.astype(np.uint64)
+    else:
+        ends = np.nonzero(is_last)[0]
+        starts = np.empty_like(ends)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        lengths = ends - starts + 1
+        vals = np.zeros(ends.shape, dtype=np.uint64)
+        for k in range(int(lengths.max())):
+            mask = lengths > k
+            b = raw[starts[mask] + k].astype(np.uint64)
+            vals[mask] |= (b & np.uint64(0x7F)) << np.uint64(7 * k)
     if n is not None and vals.size != n:
         raise ValueError(f"decoded {vals.size} values, expected {n}")
     return vals

@@ -167,3 +167,51 @@ def test_encode_blocks_arrow_empty():
     b = encode_blocks_arrow(z, pa.array([], type=pa.string()), z, z, z, z,
                             schema)
     assert b.num_rows == 0 and b.schema == schema
+
+
+def test_decode_block_range_matches_decode_block_run():
+    """The buffer-form decode over Arrow binary columns equals the
+    list-of-bytes decode on random multi-block runs: multi-byte varints
+    in every stream, sliced (non-zero offset) and large_binary arrays."""
+    import pyarrow as pa
+
+    from anserini_spark.index.blocks import (binary_buffers,
+                                             decode_block_range)
+
+    rng = np.random.default_rng(29)
+    rows = []
+    for term in ["aa", "bb", "cc"]:
+        ndocs = int(rng.integers(200, 900))
+        # sparse ids: many doc deltas need 2-3 varint bytes
+        docs = np.sort(rng.choice(1 << 22, ndocs, replace=False))
+        rows += [(term, int(d), int(rng.integers(1, 400)),
+                  int(rng.integers(1, 1 << 20))) for d in docs]
+    terms = np.array([r[0] for r in rows], dtype=object)
+    docs = np.array([r[1] for r in rows])
+    tfs = np.array([r[2] for r in rows])
+    dls = np.array([r[3] for r in rows])
+    bl = encode_blocks(terms, np.zeros(len(rows), dtype=np.int64), docs,
+                       tfs, dls)
+    assert bl.groupby("term").size().min() > 1  # multi-block runs
+    cols = ("docs_bin", "tfs_bin", "dls_bin")
+    pad = 3
+    for typ in (pa.binary(), pa.large_binary()):
+        bufs = [binary_buffers(pa.array([b"\x81junk"] * pad + list(bl[c]),
+                                        type=typ).slice(pad)) for c in cols]
+        for t in ["aa", "bb", "cc"]:
+            idx = np.flatnonzero(bl["term"].to_numpy() == t)
+            lo, hi = int(idx[0]), int(idx[-1]) + 1
+            got = decode_block_range(*bufs, bl["n"].to_numpy(),
+                                     bl["first_doc"].to_numpy(),
+                                     bl["last_doc"].to_numpy(), lo, hi)
+            g = bl.iloc[lo:hi]
+            want = decode_block_run(
+                list(g["docs_bin"]), list(g["tfs_bin"]), list(g["dls_bin"]),
+                g["n"].values, g["first_doc"].values, g["last_doc"].values)
+            mask = terms == t
+            for a, w, ref in zip(got, want, (docs, tfs, dls)):
+                assert (a == w).all() and (a == ref[mask]).all()
+        # an empty range decodes to nothing
+        assert all(len(a) == 0 for a in decode_block_range(
+            *bufs, bl["n"].to_numpy(), bl["first_doc"].to_numpy(),
+            bl["last_doc"].to_numpy(), 2, 2))
