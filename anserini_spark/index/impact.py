@@ -21,12 +21,11 @@ from __future__ import annotations
 
 from typing import Dict, Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..analysis.analyzer import analysis_version as _analysis_version
-from ..search.tieadjust import adjust_score_ties
 from .build import (
     DOCVEC_SCHEMA,
     IndexConfig,
@@ -123,87 +122,27 @@ def build_impact_index(
 
 def search_impact(
     index, queries: Dict[int, Dict[str, float]], k: int = 1000,
-    precision: int | None = None, engine: str = "kernel",
+    precision: int | None = None,
 ) -> DataFrame:
     """Dot-product retrieval over the impact index. ``queries``:
-    qid -> {latent term: query activation}. Default engine scores
-    through the term-pruned block kernel (the tf slot carries the
-    quantized activation; shape = tf/scale, so MaxScore's block
-    max_tf bound applies unchanged); ``engine="dataframe"`` keeps the
-    declarative full-docvec plan as the oracle."""
-    spark = index.spark
+    qid -> {latent term: query activation}. Scores through the
+    term-pruned block kernel: the tf slot carries the quantized
+    activation, so the shape is tf/scale and MaxScore's block max_tf
+    bound applies unchanged."""
+    from ..search.searcher import _search_blocks
+
     p = precision
     if p is None:
         p = index.manifest["docvec"]["lineage"].get("precision",
                                                     DEFAULT_PRECISION)
     scale = float(10 ** p)
-    rows = [
-        (qid, t, float(v))
-        for qid, m in queries.items()
-        for t, v in m.items()
-        if v > 0
-    ]
-    if not rows:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double"
-        )
-    if engine == "kernel":
-        import numpy as np
 
-        from ..search.searcher import (
-            ARRAY_RESULT_SCHEMA,
-            _finalize_arrays,
-            _segment_score_fn,
-        )
+    def _shape(tf, dl):
+        return tf.astype(np.float64) / scale
 
-        def _shape(tf, dl, _scale=scale):
-            return tf.astype(np.float64) / _scale
-
-        boosts: Dict[int, Dict[str, float]] = {}
-        for qid, t, v in rows:
-            boosts.setdefault(qid, {})[t] = v
-        all_terms = sorted({t for m in boosts.values() for t in m})
-        shape_fns = {t: _shape for t in all_terms}
-        seg_counts = {int(sg): int(c)
-                      for sg, c in index.stats["segments"].items()}
-        blocks = index.blocks.select(
-            "term", "segment", "first_doc", "last_doc", "n", "max_tf",
-            "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin",
-        ).filter(F.col("term").isin(all_terms))
-        fn = _segment_score_fn(boosts, (0.0, 0.0, False), seg_counts, k,
-                               prune=True, shape_fns=shape_fns,
-                               dead_by_seg=index.dead_by_segment or None)
-        from ..search.searcher import BATCH_REPARTITION_MIN_QUERIES
-
-        if len(boosts) >= BATCH_REPARTITION_MIN_QUERIES:
-            n_parts = min(512, 4 * max(1, len(seg_counts)))
-            blocks = blocks.repartition(n_parts, "segment")
-        hits = blocks.groupBy("segment").applyInPandas(
-            fn, schema=ARRAY_RESULT_SCHEMA
-        )
-        return _finalize_arrays(index, hits, k)
-    q = spark.createDataFrame(rows, "qid int, term string, qval double")
-    postings = index.live_docvec.select(
-        "doc_id", F.explode(F.arrays_zip("terms", "tfs")).alias("e")
-    ).select(
-        F.col("e.terms").alias("term"), "doc_id",
-        F.col("e.tfs").alias("tf"),
-    )
-    hits = (
-        postings.join(F.broadcast(q), "term")
-        .groupBy("qid", "doc_id")
-        .agg(
-            (F.sum(F.col("qval") * F.col("tf").cast("double"))
-             / F.lit(scale)).alias("score")
-        )
-        .filter(F.col("score") > 0)
-    )
-    docmap = index.docmap.select("doc_id", "url")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    ranked = (
-        hits.join(docmap, "doc_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("url").alias("docid"), "rank", "score")
-    )
-    return adjust_score_ties(ranked).orderBy("qid", "rank")
+    boosts = {qid: {t: float(v) for t, v in m.items() if v > 0}
+              for qid, m in queries.items()}
+    boosts = {qid: m for qid, m in boosts.items() if m}
+    shape_fns = {t: _shape for m in boosts.values() for t in m}
+    return _search_blocks(index, boosts, k, prune=True, consts=None,
+                          shape_fns=shape_fns)

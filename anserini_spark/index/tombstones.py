@@ -36,8 +36,8 @@ dead-id arrays live on the driver and ride into the kernel closure —
 bounded by delete count, not corpus size. EVERY engine consults
 liveDocs: the BM25/similarity kernel and SDM's positional kernel mask
 at decode, `postings_from_blocks` (boolean set ops) and the impact
-kernel likewise, and the declarative engines anti-join
-``live_docvec`` — pinned across all of them by
+kernel likewise, and the declarative plans (SDM's dataframe path,
+tweet search) anti-join ``live_docvec`` — pinned across all of them by
 ``tests/test_tombstones.py``.
 """
 

@@ -139,24 +139,37 @@ def _zh_text_expr():
 
 def _src_digest(sf_dir: str) -> str:
     """md5 of the documents parquet's file metadata (relpath, size,
-    mtime) — the gate-index cache key (round 7): any rewrite of the
-    source moves size or mtime, so an edited corpus gets a fresh
-    index dir without the round-6 full-content scan per call."""
+    mtime, and each parquet footer's num_rows and num_row_groups) —
+    the gate-index cache key: a rewrite of the source moves size,
+    mtime or the footer counts, so an edited corpus gets a fresh index
+    dir without a full-content scan per call. An unreadable footer
+    keys as "?"."""
     import hashlib
+
+    import pyarrow.parquet as pq
+
+    def entry(path: str, rel: str) -> str:
+        st = os.stat(path)
+        footer = "?"
+        if path.endswith(".parquet"):
+            try:
+                md = pq.ParquetFile(path).metadata
+                footer = f"{md.num_rows}:{md.num_row_groups}"
+            except (OSError, ValueError):  # ArrowInvalid is a ValueError
+                pass
+        return f"{rel}:{st.st_size}:{st.st_mtime_ns}:{footer}"
 
     src = f"{sf_dir}/documents.parquet"
     parts = []
     if os.path.isdir(src):
         for root, _, files in sorted(os.walk(src)):
             for fn in sorted(files):
-                st = os.stat(os.path.join(root, fn))
-                parts.append(
-                    f"{os.path.relpath(os.path.join(root, fn), src)}:"
-                    f"{st.st_size}:{st.st_mtime_ns}")
+                path = os.path.join(root, fn)
+                parts.append(entry(path, os.path.relpath(path, src)))
     else:
-        st = os.stat(src)
-        parts.append(f"{os.path.basename(src)}:{st.st_size}:{st.st_mtime_ns}")
+        parts.append(entry(src, os.path.basename(src)))
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+
 
 def _gate_index(spark: SparkSession, sf_dir: str,
                 positions: bool = False, bigram: bool = False,

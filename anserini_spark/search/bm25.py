@@ -22,6 +22,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .smallfloat import quantize_length
+
 
 @dataclass(frozen=True)
 class BM25Params:
@@ -41,12 +43,11 @@ def idf(df: int, doc_count: int) -> float:
 
 
 class BM25Scorer:
-    """Per-collection constants + vectorized float32 score kernel."""
+    """Per-collection float32 constants: ``cache1``/``cache2`` and the
+    per-term ``weight``; the tf-part is ``tf_part``."""
 
     def __init__(self, doc_count: int, avgdl: float, params: BM25Params):
         self.doc_count = doc_count
-        self.avgdl = avgdl
-        self.params = params
         self.cache1 = np.float32(params.k1) * (
             np.float32(1.0) - np.float32(params.b)
         )
@@ -57,23 +58,14 @@ class BM25Scorer:
     def weight(self, df: int) -> np.float32:
         return np.float32(idf(df, self.doc_count))
 
-    def _dl(self, dls: np.ndarray) -> np.ndarray:
-        if self.params.lossy:
-            from .smallfloat import quantize_length
 
-            return quantize_length(dls).astype(np.float32)
-        return np.asarray(dls).astype(np.float32)
-
-    def score(self, weight: np.float32, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        tf = tfs.astype(np.float32)
-        dl = self._dl(dls)
-        return weight * tf / (tf + self.cache1 + self.cache2 * dl)
-
-    def max_block_score(self, weight: np.float32, max_tf, min_dl) -> np.ndarray:
-        """Upper bound of any posting in a block: score is increasing in
-        tf and decreasing in dl, so (max_tf, min_dl) bounds it. The
-        lossy quantization is monotone, so quantize(min_dl) ==
-        min(quantize(dl)) and the bound stays valid."""
-        tf = np.asarray(max_tf, dtype=np.float32)
-        dl = self._dl(np.asarray(min_dl))
-        return weight * tf / (tf + self.cache1 + self.cache2 * dl)
+def tf_part(tfs, dls, cache1, cache2, lossy: bool) -> np.ndarray:
+    """float32 BM25 tf-part ``tf / (tf + cache1 + cache2 * dl)``, the
+    one copy shared by the Spark kernel and ``LocalSearcher``. Callers
+    apply the term weight after it, as ``(w * part).astype(float32)``.
+    ``lossy`` quantizes dl through the SmallFloat byte4 roundtrip;
+    that is monotone, so a block's (max_tf, min_dl) still bounds it."""
+    tf32 = np.asarray(tfs).astype(np.float32)
+    dl32 = (quantize_length(dls) if lossy
+            else np.asarray(dls)).astype(np.float32)
+    return tf32 / (tf32 + np.float32(cache1) + np.float32(cache2) * dl32)

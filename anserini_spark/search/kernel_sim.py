@@ -5,12 +5,12 @@ index/search machinery — the Similarity is a plugin
 (`SearchCollection.java:281-334`). This module is the Spark analogue:
 QLD, QLJM, DFR InL2, IB SPL, and axiomatic F2EXP/F2LOG run through
 the SAME term-pruned ``blocks.parquet`` scan + per-segment Arrow
-kernel + MaxScore pruning as BM25, by supplying a per-term "shape"
-function ``shape_t(tf, dl) -> contribution`` (float64). The previous
-round's DataFrame implementations (full docvec explode per query —
-a full-corpus scan, `search/qld.py` / `search/similarities.py`) are
-kept as the ``engine="dataframe"`` oracle path; rank-identity between
-the two is pinned by tests.
+kernel + MaxScore pruning as BM25 (``searcher._search_blocks``), by
+supplying a per-term "shape" function ``shape_t(tf, dl) ->
+contribution`` (float64). `search/qld.py` and `search/similarities.py`
+are thin named entry points over ``search_kernel_similarity``; the
+tests hold each shape to a brute-force Python recompute and the gates
+to the DuckDB SQL oracles.
 
 Validity of MaxScore here: every shape below is non-negative (QLD is
 clamped per term, Lucene ``LMSimilarity.score`` semantics),
@@ -25,14 +25,8 @@ from typing import Callable, Dict, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .searcher import (
-    ARRAY_RESULT_SCHEMA,
-    InvertedIndex,
-    _finalize_arrays,
-    _segment_score_fn,
-)
+from .searcher import InvertedIndex, _search_blocks
 
 _LOG2 = np.log(2.0)
 
@@ -187,9 +181,6 @@ def search_kernel_similarity(
              {qid: Counter(index.analyze_query(t))
               for qid, t in queries.items()})
     all_terms = sorted({t for c in per_q.values() for t in c})
-    empty = "qid int, docid string, rank int, score double"
-    if not all_terms:
-        return index.spark.createDataFrame([], empty)
     stats = index.term_stats(all_terms)  # driver-side pyarrow lookup
     n = float(index.stats["doc_count"])
     avgdl = float(index.stats["avgdl"])
@@ -203,26 +194,8 @@ def search_kernel_similarity(
         for qid, c in per_q.items()
     }
     boosts = {qid: m for qid, m in boosts.items() if m}
-    if not boosts:
-        return index.spark.createDataFrame([], empty)
-    seg_counts = {int(s): int(c) for s, c in index.stats["segments"].items()}
-    blocks = index.blocks.select(
-        "term", "segment", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin"
-    ).filter(F.col("term").isin(sorted(shape_fns)))
-    fn = _segment_score_fn(boosts, (0.0, 0.0, False), seg_counts, k, prune,
-                           shape_fns=shape_fns,
-                           dead_by_seg=index.dead_by_segment or None)
-    # 4x partitions vs segments for batches: avoid balls-in-bins
-    # straggler tasks (see search_kernel)
-    from .searcher import BATCH_REPARTITION_MIN_QUERIES
-
-    if len(boosts) >= BATCH_REPARTITION_MIN_QUERIES:
-        n_parts = min(512, 4 * max(1, len(seg_counts)))
-        blocks = blocks.repartition(n_parts, "segment")
-    hits = blocks.groupBy("segment").applyInPandas(
-        fn, schema=ARRAY_RESULT_SCHEMA
-    )
     # Lucene returns every doc matching >=1 query term, INCLUDING
     # docs whose clamped LM score is 0 (golden: QLD `1 Q0 WSJ_1 3
     # 0.000000`, `TrecEndToEndTest.java:92-96`) — no score filter
-    return _finalize_arrays(index, hits, k)
+    return _search_blocks(index, boosts, k, prune, consts=None,
+                          shape_fns=shape_fns)

@@ -33,7 +33,7 @@ Scoring is one dense float64 accumulator over the whole index
 row), one vectorized update per query term in sorted term order. Top-k
 selects every candidate tied at the kth score, then applies the
 (score desc, url asc) order and the ScoreTiesAdjuster rounding,
-exactly like the distributed engines.
+exactly like the distributed engine.
 """
 
 from __future__ import annotations
@@ -51,8 +51,7 @@ from ..analysis.analyzer import analyze_for
 from ..index.blocks import binary_buffers, decode_block_range
 from ..index.build import SEG_SHIFT
 from ..index.tombstones import drop_dead
-from .bm25 import BM25Params, idf
-from .smallfloat import quantize_length
+from .bm25 import BM25Params, BM25Scorer, tf_part
 
 _BLOCK_COLS = ["term", "segment", "first_doc", "last_doc", "n",
                "docs_bin", "tfs_bin", "dls_bin"]
@@ -237,7 +236,7 @@ class LocalSearcher:
 
     def search(self, query: str, k: int = 10) -> List[Tuple[str, int, float]]:
         """Returns [(url, rank, tie-adjusted score)] — same semantics
-        as the distributed engines (float32 BM25, url tie-break,
+        as the distributed engine (float32 BM25, url tie-break,
         ScoreTiesAdjuster rounding)."""
         p = self.params
         toks = self._analyze(query)
@@ -245,15 +244,12 @@ class LocalSearcher:
             return []
         uterms = sorted(set(toks))
         dfs = self._dictionary(uterms).lookup(uterms)
-        doc_count = self.stats["doc_count"]
-        avgdl = self.stats["avgdl"]
-        cache1 = np.float32(p.k1) * (np.float32(1.0) - np.float32(p.b))
-        cache2 = np.float32(p.k1) * np.float32(p.b) / np.float32(avgdl)
+        scorer = BM25Scorer(self.stats["doc_count"], self.stats["avgdl"], p)
         wmap: Dict[str, np.float32] = {}
         for t in toks:
             if t not in dfs:
                 continue
-            w = np.float32(idf(dfs[t], doc_count))
+            w = scorer.weight(dfs[t])
             wmap[t] = np.float32(wmap.get(t, np.float32(0.0)) + w)
         if not wmap:
             return []
@@ -265,11 +261,9 @@ class LocalSearcher:
             for t in sorted(wmap):
                 docs, tfs, dls = runs.decode(t)
                 slots = self._slots(docs)
-                tf32 = tfs.astype(np.float32)
-                dl32 = (quantize_length(dls) if p.lossy
-                        else dls).astype(np.float32)
-                contrib = (wmap[t] * (tf32 / (tf32 + cache1 + cache2 * dl32))
-                           ).astype(np.float32)
+                part = tf_part(tfs, dls, scorer.cache1, scorer.cache2,
+                               p.lossy)
+                contrib = (wmap[t] * part).astype(np.float32)
                 acc[slots] += contrib.astype(np.float64)
                 touched[slots] = True
             cand = np.flatnonzero(touched)

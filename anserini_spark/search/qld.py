@@ -20,104 +20,27 @@ The clamp is PER TERM, matching Lucene's ``LMSimilarity.score``
 score before the disjunction sums them) — a doc mixing positive and
 negative term contributions keeps its positive parts.
 
-Default engine is the block-index kernel (term-pruned scan +
-MaxScore, see `kernel_sim.py`); ``engine="dataframe"`` keeps the
-declarative full-docvec-explode plan as the rank-identity oracle
-(float64 both ways — LM parity target is formula-level, not
-Lucene-float32-bit-level; the float32 path is the BM25 engine).
+Both run through the block-index kernel (term-pruned scan +
+MaxScore, see `kernel_sim.py`) in float64 — the LM parity target is
+formula-level, not Lucene-float32-bit-level; the float32 path is BM25.
 Duplicate query terms contribute once per occurrence (bag-of-words).
 """
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Dict
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from .kernel_sim import search_kernel_similarity
 from .searcher import InvertedIndex
-from .tieadjust import adjust_score_ties
 
 
 def search_qld(index: InvertedIndex, queries: Dict[int, str], mu: float = 1000.0,
-               k: int = 1000, engine: str = "kernel") -> DataFrame:
-    if engine == "kernel":
-        from .kernel_sim import search_kernel_similarity
-
-        return search_kernel_similarity(index, queries, "qld", k=k, mu=mu)
-
-    def contrib(tf, dl):
-        return (
-            F.log(F.lit(1.0) + tf / (F.lit(mu) * F.col("p_c")))
-            + F.log(F.lit(mu) / (dl + F.lit(mu)))
-        )
-
-    return _lm_search(index, queries, contrib, k)
+               k: int = 1000) -> DataFrame:
+    return search_kernel_similarity(index, queries, "qld", k=k, mu=mu)
 
 
 def search_qljm(index: InvertedIndex, queries: Dict[int, str],
-                lam: float = 0.1, k: int = 1000,
-                engine: str = "kernel") -> DataFrame:
-    if engine == "kernel":
-        from .kernel_sim import search_kernel_similarity
-
-        return search_kernel_similarity(index, queries, "qljm", k=k, lam=lam)
-
-    def contrib(tf, dl):
-        return F.log(
-            F.lit(1.0)
-            + (F.lit(1.0 - lam) * tf / dl) / (F.lit(lam) * F.col("p_c"))
-        )
-
-    return _lm_search(index, queries, contrib, k)
-
-
-def _lm_search(index: InvertedIndex, queries: Dict[int, str], contrib_fn,
-               k: int = 1000) -> DataFrame:
-    spark = index.spark
-    sum_tf = float(index.stats["sum_tf"])
-    per_q = {qid: Counter(index.analyze_query(t)) for qid, t in queries.items()}
-    all_terms = sorted({t for c in per_q.values() for t in c})
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double"
-        )
-    cfs = {t: cf for t, (_df, cf) in index.term_stats(all_terms).items()}
-    rows = [
-        # (cf+1)/(sum+1): Lucene DefaultCollectionModel smoothing
-        (qid, t, float(cnt), (cfs[t] + 1.0) / (sum_tf + 1.0))
-        for qid, c in per_q.items()
-        for t, cnt in c.items()
-        if t in cfs
-    ]
-    if not rows:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double"
-        )
-    qterms = spark.createDataFrame(rows, "qid int, term string, boost double, p_c double")
-    postings = index.docvec.select(
-        "doc_id", "doclen", F.explode(F.arrays_zip("terms", "tfs")).alias("e")
-    ).select(
-        F.col("e.terms").alias("term"), "doc_id",
-        F.col("e.tfs").alias("tf"), "doclen",
-    )
-    tf = F.col("tf").cast("double")
-    dl = F.col("doclen").cast("double")
-    # per-term clamp at 0 (Lucene LMSimilarity.score), then sum
-    contrib = F.greatest(F.lit(0.0), F.col("boost") * contrib_fn(tf, dl))
-    # matched docs are kept even at clamped score 0 (Lucene keeps them)
-    hits = (
-        postings.join(F.broadcast(qterms), "term")
-        .groupBy("qid", "doc_id")
-        .agg(F.sum(contrib).alias("score"))
-    )
-    docmap = index.docmap.select("doc_id", "url")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    ranked = (
-        hits.join(docmap, "doc_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("url").alias("docid"), "rank", "score")
-    )
-    return adjust_score_ties(ranked).orderBy("qid", "rank")
+                lam: float = 0.1, k: int = 1000) -> DataFrame:
+    return search_kernel_similarity(index, queries, "qljm", k=k, lam=lam)

@@ -1,25 +1,22 @@
-"""BM25 top-k retrieval engines over the block index.
+"""BM25 top-k retrieval over the block index.
 
-Two interchangeable physical engines (tests pin rank-identity between
-them and vs a pure-numpy oracle):
+One physical engine, the Spark analogue of Lucene's per-segment search
+(`SearchCollection.java:459-486`): posting blocks for the query terms
+are pruned at the parquet scan (``term IN`` pushdown on
+term-range-sorted files), grouped by segment, and scored inside one
+Arrow kernel per segment: vectorized varint decode (once per term,
+shared across the whole query batch), term-at-a-time accumulation into
+a dense per-segment array with MaxScore/block-max pruning, per-segment
+top-k, then a tiny shuffle merges per-segment top-k by (score desc,
+url asc) exactly like Lucene's BREAK_SCORE_TIES_BY_DOCID collector
+(`SearchCollection.java:115-116`).
 
-* **dataframe** (Path A) — fully declarative: explode docvec ->
-  broadcast-join the analyzed query terms (with precomputed float32
-  weights) -> float32 score expression -> groupBy(qid, doc_id) sum ->
-  window top-k with url tie-break -> tie adjust. Mirrors the
-  "broadcast query ⋈ postings" mapping of SURVEY.md §2.3; everything
-  whole-stage-codegen'd; the small side is explicitly broadcast.
-
-* **kernel** (Path B) — the scale path, the Spark analogue of Lucene's
-  per-segment search (`SearchCollection.java:459-486`): posting blocks
-  for the query terms are pruned at the parquet scan (``term IN``
-  pushdown on term-range-sorted files), grouped by segment, and scored
-  inside one Arrow kernel per segment: vectorized varint decode (once
-  per term, shared across the whole query batch), float32 term-at-a-
-  time accumulation into a dense per-segment array with MaxScore/
-  block-max pruning, per-segment top-k, then a tiny shuffle merges
-  per-segment top-k by (score desc, url asc) exactly like Lucene's
-  BREAK_SCORE_TIES_BY_DOCID collector (`SearchCollection.java:115-116`).
+``_search_blocks`` is that driver. BM25 (``search_kernel``), the
+pluggable similarities (`kernel_sim.py`) and impact search
+(`index/impact.py`) differ only in the per-term weights and the
+per-posting contribution they hand it: the float32 BM25 tf-part
+(``bm25.tf_part``) or a float64 shape function. The references the
+tests hold it to are ``oracle.py`` and the DuckDB SQL oracles.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
 to float32 at the end — Lucene's DisjunctionSumScorer likewise sums
@@ -40,13 +37,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..analysis.analyzer import analyze, stem_mode
 from ..index.blocks import decode_block_run
 from ..index.build import SEG_SHIFT
-from .bm25 import BM25Params, BM25Scorer
+from .bm25 import BM25Params, BM25Scorer, tf_part
 from .tieadjust import adjust_score_ties
 
-RESULT_SCHEMA = "qid int, doc_id long, score float"
+# the ranked run every search entry point returns
+RUN_SCHEMA = "qid int, docid string, rank int, score double"
 BATCH_REPARTITION_MIN_QUERIES = 16
 # kernel paths emit ONE row per (segment, qid) with packed arrays:
 # |segments| * |queries| rows instead of |segments| * |queries| * k —
@@ -353,86 +350,18 @@ def _finalize(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
     return adjust_score_ties(ranked).orderBy("qid", "rank")
 
 
-# ---------------------------------------------------------------------------
-# Path A: declarative DataFrame engine
-# ---------------------------------------------------------------------------
-
-
-def search_dataframe(
-    index: InvertedIndex, queries: Dict[int, str], params: BM25Params
-) -> DataFrame:
-    hits = _score_dataframe(index, queries, params)
-    if hits is None:
-        return index.spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double")
-    return _finalize(index, hits, params.k)
-
-
-def _score_dataframe(
-    index: InvertedIndex, queries: Dict[int, str], params: BM25Params
-) -> Optional[DataFrame]:
-    """BM25 scoring half of the declarative engine: (qid, doc_id,
-    score float32) for every matching doc, no ranking — shared by the
-    standard (score desc, url asc) finalize and the tweet path's
-    (score desc, id_long desc) finalize (`search/tweets.py`)."""
-    weights, scorer = _query_weights(index, queries, params)
-    rows = [
-        (qid, term, float(w))
-        for qid, wmap in weights.items()
-        for term, w in wmap.items()
-    ]
-    if not rows:
-        return None
-    qterms = index.spark.createDataFrame(rows, "qid int, term string, weight float")
-    postings = index.live_docvec.select(
-        "doc_id",
-        "doclen",
-        F.explode(F.arrays_zip("terms", "tfs")).alias("e"),
-    ).select(
-        F.col("e.terms").alias("term"),
-        "doc_id",
-        F.col("e.tfs").alias("tf"),
-        "doclen",
-    )
-    tf = F.col("tf").cast("float")
-    if params.lossy:
-        from .smallfloat import quantize_expr
-
-        dl = quantize_expr(F.col("doclen")).cast("float")
-    else:
-        dl = F.col("doclen").cast("float")
-    contrib = (
-        F.col("weight")
-        * tf
-        / (tf + F.lit(float(scorer.cache1)).cast("float")
-           + F.lit(float(scorer.cache2)).cast("float") * dl)
-    )
-    return (
-        postings.join(F.broadcast(qterms), "term")
-        .withColumn("contrib", contrib.cast("float"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum(F.col("contrib").cast("double")).alias("score64"))
-        .withColumn("score", F.col("score64").cast("float"))
-        .drop("score64")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Path B: per-segment Arrow kernel engine (block decode + pruning)
-# ---------------------------------------------------------------------------
-
-
 def _segment_score_fn(
     weights: Dict[int, Dict[str, np.float32]],
-    scorer_consts: Tuple[float, float, bool],
+    scorer_consts: Optional[Tuple[float, float, bool]],
     seg_counts: Dict[int, int],
     k: int,
     prune: bool,
     shape_fns: Optional[Dict[str, object]] = None,
     dead_by_seg: Optional[Dict[int, np.ndarray]] = None,
 ):
-    """Per-segment scoring kernel. Default mode is float32 BM25
-    (cache1/cache2, optional lossy norms). When ``shape_fns`` is given
+    """Per-segment scoring kernel. Default mode is float32 BM25:
+    ``scorer_consts`` is ``(cache1, cache2, lossy)`` for
+    ``bm25.tf_part``. When ``shape_fns`` is given
     (term -> callable(tfs, dls) -> per-posting contribution, float64),
     the kernel scores an arbitrary similarity through the SAME
     term-pruned block scan + MaxScore machinery — the Spark analogue
@@ -440,26 +369,12 @@ def _segment_score_fn(
     Shape functions must be non-negative, increasing in tf and
     non-increasing in dl (all the reference's similarities are), so
     shape(max_tf, min_dl) stays a valid block upper bound."""
-    cache1 = np.float32(scorer_consts[0])
-    cache2 = np.float32(scorer_consts[1])
-    lossy = bool(scorer_consts[2]) if len(scorer_consts) > 2 else False
     f32 = shape_fns is None
-
-    def _dl32(dls: np.ndarray) -> np.ndarray:
-        # SmallFloat byte4 roundtrip for default-BM25 parity mode;
-        # monotone, so block min_dl bounds stay valid after quantizing
-        if lossy:
-            from .smallfloat import quantize_length
-
-            return quantize_length(dls).astype(np.float32)
-        return dls.astype(np.float32)
-
     out_dtype = np.float32 if f32 else np.float64
 
     def _part(t: str, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
         if f32:
-            tf32 = tfs.astype(np.float32)
-            return tf32 / (tf32 + cache1 + cache2 * _dl32(dls))
+            return tf_part(tfs, dls, *scorer_consts)
         return shape_fns[t](np.asarray(tfs), np.asarray(dls))
 
     def _empty() -> pd.DataFrame:
@@ -689,33 +604,31 @@ def _maxscore_query(terms, wmap, meta, get_decoded, decode_subset, acc,
     return cand, scores
 
 
-def search_kernel(
-    index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
-    prune: bool = True,
-    boosts: Optional[Dict[int, Dict[str, float]]] = None,
-    boosts_are_final: bool = False,
+def _search_blocks(
+    index: InvertedIndex,
+    weights: Dict[int, Dict[str, float]],
+    k: int,
+    prune: bool,
+    consts: Optional[Tuple[float, float, bool]],
+    shape_fns: Optional[Dict[str, object]] = None,
 ) -> DataFrame:
-    weights, scorer = _query_weights(index, queries, params, boosts,
-                                     boosts_are_final)
-    all_terms = sorted({t for wmap in weights.values() for t in wmap})
-    if not all_terms:
-        return index.spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double"
-        )
+    """The one Spark scoring driver: term-pruned ``blocks`` scan ->
+    per-segment kernel (``_segment_score_fn``) -> per-qid merge and
+    url order (``_finalize_arrays``). ``weights`` is qid -> term ->
+    query weight; ``consts`` feeds the float32 BM25 tf-part, or
+    ``shape_fns`` gives each term's float64 contribution instead."""
+    terms = sorted({t for wmap in weights.values() for t in wmap})
+    if not terms:
+        return index.spark.createDataFrame([], RUN_SCHEMA)
     seg_counts = {int(s): int(c) for s, c in index.stats["segments"].items()}
-    # column-pruned: positional indexes carry pos_bin, which BM25
-    # scoring never reads — keep it out of the parquet scan
+    # column-pruned: positional indexes carry pos_bin, which scoring
+    # never reads — keep it out of the parquet scan
     blocks = index.blocks.select(
         "term", "segment", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin"
-    ).filter(F.col("term").isin(all_terms))
-    fn = _segment_score_fn(
-        {qid: dict(wmap) for qid, wmap in weights.items()},
-        (float(scorer.cache1), float(scorer.cache2), params.lossy),
-        seg_counts,
-        params.k,
-        prune,
-        dead_by_seg=index.dead_by_segment or None,
-    )
+    ).filter(F.col("term").isin(terms))
+    fn = _segment_score_fn(weights, consts, seg_counts, k, prune,
+                           shape_fns=shape_fns,
+                           dead_by_seg=index.dead_by_segment or None)
     # over-provision the group hash space for BATCH workloads: with
     # |segments| groups into |segments| reducers, balls-in-bins
     # collisions put 2-3 segments on one task and leave a third of the
@@ -730,7 +643,21 @@ def search_kernel(
     hits = blocks.groupBy("segment").applyInPandas(
         fn, schema=ARRAY_RESULT_SCHEMA
     )
-    return _finalize_arrays(index, hits, params.k)
+    return _finalize_arrays(index, hits, k)
+
+
+def search_kernel(
+    index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
+    prune: bool = True,
+    boosts: Optional[Dict[int, Dict[str, float]]] = None,
+    boosts_are_final: bool = False,
+) -> DataFrame:
+    """float32 BM25 (bit-parity with the reference) through
+    ``_search_blocks``."""
+    weights, scorer = _query_weights(index, queries, params, boosts,
+                                     boosts_are_final)
+    return _search_blocks(index, weights, params.k, prune,
+                          (scorer.cache1, scorer.cache2, params.lossy))
 
 
 POSTINGS_SCHEMA = "term string, doc_id long, tf long, doclen long"
@@ -798,8 +725,7 @@ class SimpleSearcher:
     (`search/SimpleSearcher.java:80-478`; `SearchMsmarco.java:84-175`)."""
 
     def __init__(self, spark: SparkSession, index_dir,
-                 k1: float = 0.9, b: float = 0.4, engine: str = "kernel",
-                 lossy: bool = False):
+                 k1: float = 0.9, b: float = 0.4, lossy: bool = False):
         if isinstance(index_dir, (list, tuple)):
             # incremental slices, searched unmerged (Lucene's
             # multi-segment reader) — see search/multislice.py
@@ -811,7 +737,6 @@ class SimpleSearcher:
         # lossy=True is the reference's default-BM25 parity mode
         # (SmallFloat byte4 doclen quantization); False == -bm25accurate
         self.params = BM25Params(k1=k1, b=b, lossy=lossy)
-        self.engine = engine
         self._rm3: Optional[Tuple[int, int, float]] = None
         self._axiom: Optional[Tuple[int, int, float, int, int, str]] = None
         self._qld_mu: Optional[float] = None
@@ -905,8 +830,6 @@ class SimpleSearcher:
                                  fb_docs=fb_docs, fb_terms=fb_terms,
                                  alpha=alpha)
             return hits
-        if self.engine == "dataframe":
-            return search_dataframe(self.index, queries, params)
         return search_kernel(self.index, queries, params)
 
     def search(self, query: str, k: int = 10) -> List[Tuple[str, int, float]]:

@@ -28,140 +28,39 @@ float32 path remains BM25):
       F2EXP_t = c(t, q) * tfpart * ((N + 1) / df)^0.35
       F2LOG_t = c(t, q) * tfpart * ln((N + 1) / df)
 
-All three share the declarative plan of the LM family: broadcast
-query terms ⋈ exploded docvec -> per-(qid, doc) sum -> top-k with url
-tie-break -> tie adjustment. float64.
+All four run through the block-index kernel (`kernel_sim.py` shapes,
+term-pruned scan + MaxScore) in float64, like the LM family.
 """
 
 from __future__ import annotations
 
-from collections import Counter
-from typing import Callable, Dict
+from typing import Dict
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from .kernel_sim import search_kernel_similarity
 from .searcher import InvertedIndex
-from .tieadjust import adjust_score_ties
-
-LOG2 = 0.6931471805599453
-
-
-def _generic_search(index: InvertedIndex, queries: Dict[int, str],
-                    contrib_fn: Callable, k: int) -> DataFrame:
-    """contrib_fn(tf, dl, df_col, boost_col, n, avgdl) -> Column."""
-    spark = index.spark
-    n = float(index.stats["doc_count"])
-    avgdl = float(index.stats["avgdl"])
-    per_q = {qid: Counter(index.analyze_query(t))
-             for qid, t in queries.items()}
-    all_terms = sorted({t for c in per_q.values() for t in c})
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double")
-    dfs = index.term_dfs(all_terms)
-    rows = [
-        (qid, t, float(cnt), float(dfs[t]))
-        for qid, c in per_q.items()
-        for t, cnt in c.items()
-        if t in dfs
-    ]
-    if not rows:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double")
-    q = spark.createDataFrame(rows, "qid int, term string, boost double, tdf double")
-    postings = index.docvec.select(
-        "doc_id", "doclen", F.explode(F.arrays_zip("terms", "tfs")).alias("e")
-    ).select(
-        F.col("e.terms").alias("term"), "doc_id",
-        F.col("e.tfs").alias("tf"), "doclen",
-    )
-    tf = F.col("tf").cast("double")
-    dl = F.col("doclen").cast("double")
-    contrib = contrib_fn(tf, dl, F.col("tdf"), F.col("boost"), n, avgdl)
-    hits = (
-        postings.join(F.broadcast(q), "term")
-        .groupBy("qid", "doc_id")
-        .agg(F.sum(contrib).alias("score"))
-        .filter(F.col("score") > 0)
-    )
-    docmap = index.docmap.select("doc_id", "url")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    ranked = (
-        hits.join(docmap, "doc_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("url").alias("docid"), "rank", "score")
-    )
-    return adjust_score_ties(ranked).orderBy("qid", "rank")
 
 
 def search_inl2(index: InvertedIndex, queries: Dict[int, str],
-                c: float = 1.0, k: int = 1000,
-                engine: str = "kernel") -> DataFrame:
-    if engine == "kernel":
-        from .kernel_sim import search_kernel_similarity
-
-        return search_kernel_similarity(index, queries, "inl2", k=k, c=c)
-
-    def contrib(tf, dl, df, boost, n, avgdl):
-        tfn = tf * F.log(F.lit(1.0) + F.lit(c * avgdl) / dl) / F.lit(LOG2)
-        basic = tfn * (
-            F.log((F.lit(n + 1.0)) / (df + F.lit(0.5))) / F.lit(LOG2)
-        )
-        return boost * basic / (tfn + F.lit(1.0))
-
-    return _generic_search(index, queries, contrib, k)
+                c: float = 1.0, k: int = 1000) -> DataFrame:
+    return search_kernel_similarity(index, queries, "inl2", k=k, c=c)
 
 
 def search_spl(index: InvertedIndex, queries: Dict[int, str],
-               c: float = 1.0, k: int = 1000,
-               engine: str = "kernel") -> DataFrame:
+               c: float = 1.0, k: int = 1000) -> DataFrame:
     """Information-based SPL (smoothed power law) — the similarity
     behind the reference's ``-spl`` flag."""
-    if engine == "kernel":
-        from .kernel_sim import search_kernel_similarity
-
-        return search_kernel_similarity(index, queries, "spl", k=k, c=c)
-
-    def contrib(tf, dl, df, boost, n, avgdl):
-        tfn = tf * F.log(F.lit(1.0) + F.lit(c * avgdl) / dl) / F.lit(LOG2)
-        # Lucene DistributionSPL clamps lambda == 1 (df == doc_count) to
-        # 0.99; without it the fraction below is 0/0 -> NaN.
-        raw_lam = (df + F.lit(1.0)) / F.lit(n + 1.0)
-        lam = F.when(raw_lam == 1.0, F.lit(0.99)).otherwise(raw_lam)
-        frac = (F.pow(lam, tfn / (tfn + F.lit(1.0))) - lam) / (F.lit(1.0) - lam)
-        return boost * (-F.log(frac) / F.lit(LOG2))
-
-    return _generic_search(index, queries, contrib, k)
+    return search_kernel_similarity(index, queries, "spl", k=k, c=c)
 
 
 def search_f2exp(index: InvertedIndex, queries: Dict[int, str],
                  s: float = 0.5, kexp: float = 0.35,
-                 k: int = 1000, engine: str = "kernel") -> DataFrame:
-    if engine == "kernel":
-        from .kernel_sim import search_kernel_similarity
-
-        return search_kernel_similarity(index, queries, "f2exp", k=k, s=s,
-                                        kexp=kexp)
-
-    def contrib(tf, dl, df, boost, n, avgdl):
-        tfpart = tf / (tf + F.lit(s) + F.lit(s) * dl / F.lit(avgdl))
-        return boost * tfpart * F.pow(F.lit(n + 1.0) / df, F.lit(kexp))
-
-    return _generic_search(index, queries, contrib, k)
+                 k: int = 1000) -> DataFrame:
+    return search_kernel_similarity(index, queries, "f2exp", k=k, s=s,
+                                    kexp=kexp)
 
 
 def search_f2log(index: InvertedIndex, queries: Dict[int, str],
-                 s: float = 0.5, k: int = 1000,
-                 engine: str = "kernel") -> DataFrame:
-    if engine == "kernel":
-        from .kernel_sim import search_kernel_similarity
-
-        return search_kernel_similarity(index, queries, "f2log", k=k, s=s)
-
-    def contrib(tf, dl, df, boost, n, avgdl):
-        tfpart = tf / (tf + F.lit(s) + F.lit(s) * dl / F.lit(avgdl))
-        return boost * tfpart * F.log(F.lit(n + 1.0) / df)
-
-    return _generic_search(index, queries, contrib, k)
+                 s: float = 0.5, k: int = 1000) -> DataFrame:
+    return search_kernel_similarity(index, queries, "f2log", k=k, s=s)

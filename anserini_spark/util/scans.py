@@ -46,7 +46,9 @@ def _local_bytes(path: str) -> int | None:
 
 
 def _local_rows(path: str) -> int | None:
-    """Row count from local parquet footers, or None if unreadable."""
+    """Row count from local parquet footers, or None when unknown: an
+    unreadable footer, a non-local path, or a directory with no
+    ``*.parquet`` children (0 would read as "below the floor")."""
     p = path[5:] if path.startswith("file:") else path
     try:
         import pyarrow.parquet as pq
@@ -54,13 +56,10 @@ def _local_rows(path: str) -> int | None:
         if os.path.isfile(p):
             return pq.ParquetFile(p).metadata.num_rows
         if os.path.isdir(p):
-            total = 0
-            for root, _, files in os.walk(p):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, fn)).metadata.num_rows
-            return total
+            counts = [pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
+                      for root, _, files in os.walk(p)
+                      for fn in files if fn.endswith(".parquet")]
+            return sum(counts) if counts else None
     except Exception:
         return None
     return None

@@ -4,7 +4,7 @@ run file (`SearchCollection.main` / `SearchMsmarco.main` analogue).
     spark-submit --master local[32] --py-files anserini_spark.zip \\
         scripts/search.py --index /path/index --topics topics.tsv \\
         --output run.txt [--format trec|msmarco] [--hits 1000] \\
-        [--bm25 0.9,0.4] [--engine kernel|dataframe]
+        [--bm25 0.9,0.4]
 """
 
 from __future__ import annotations
@@ -41,8 +41,6 @@ def main() -> None:
                          "exact norms; rest are the -qld/-inl2/... flags")
     ap.add_argument("--sim-param", type=float, default=None,
                     help="mu / lambda / c / s for the non-BM25 models")
-    ap.add_argument("--engine", default="kernel",
-                    choices=["kernel", "dataframe"])
     ap.add_argument("--rm3", action="store_true",
                     help="enable RM3 pseudo-relevance feedback")
     ap.add_argument("--rm3-params", default="10,10,0.5",
@@ -95,7 +93,6 @@ def main() -> None:
                              BM25Params(k1=k1, b=b, k=args.hits))
     elif args.similarity in ("bm25", "bm25accurate"):
         searcher = SimpleSearcher(spark, index, k1=k1, b=b,
-                                  engine=args.engine,
                                   lossy=args.similarity == "bm25")
         if args.rm3:
             fd, ft, al = args.rm3_params.split(",")

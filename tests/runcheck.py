@@ -1,0 +1,19 @@
+"""Shared assertion for engine runs held to a brute-force recompute."""
+
+
+def assert_matches_brute(spark_df, want, qids, k):
+    """``want``: qid -> [(url, rank, float64 brute score)]. Ranks must
+    match exactly; each emitted score must be the brute score rounded
+    to 4 places minus the ScoreTiesAdjuster's 1e-6 per earlier equal
+    rounded score, so ``round(brute, 4) - got`` lies in
+    [0, 1e-6 * (k - 1)]."""
+    got = {}
+    for r in spark_df.collect():
+        got.setdefault(r["qid"], []).append(
+            (r["docid"], r["rank"], r["score"]))
+    for qid in qids:
+        g, w = got.get(qid, []), want.get(qid, [])
+        assert [h[:2] for h in g] == [h[:2] for h in w], qid
+        for (u, _, s), (_, _, b) in zip(g, w):
+            assert -1e-12 <= round(b, 4) - s <= 1e-6 * (k - 1) + 1e-12, \
+                (qid, u, s, b)

@@ -2,11 +2,11 @@
 force over deterministic synthetic latent vectors."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from anserini_spark.index.build import IndexConfig
 from anserini_spark.index.impact import build_impact_index, search_impact
 from anserini_spark.search.searcher import InvertedIndex
+from tests.runcheck import assert_matches_brute
 
 PRECISION = 4
 
@@ -42,7 +42,10 @@ QUERIES = {
 }
 
 
-def _brute(rows, queries, k=20):
+K = 20
+
+
+def _brute(rows, queries, k=K):
     out = {}
     scale = 10 ** PRECISION
     for qid, qm in queries.items():
@@ -55,19 +58,15 @@ def _brute(rows, queries, k=20):
             if s > 0:
                 hits.append((url, s))
         hits.sort(key=lambda x: (-x[1], x[0]))
-        out[qid] = [(u, r + 1) for r, (u, _) in enumerate(hits[:k])]
+        out[qid] = [(u, r + 1, s) for r, (u, s) in enumerate(hits[:k])]
     return out
 
 
 def test_impact_dot_product_matches_bruteforce(spark, impact_index):
     out, rows = impact_index
     idx = InvertedIndex(spark, out)
-    got = {}
-    for r in search_impact(idx, QUERIES, k=20).collect():
-        got.setdefault(r["qid"], []).append((r["docid"], r["rank"]))
-    want = _brute(rows, QUERIES)
-    for qid in QUERIES:
-        assert got.get(qid, []) == want.get(qid, []), qid
+    assert_matches_brute(search_impact(idx, QUERIES, k=K),
+                         _brute(rows, QUERIES), QUERIES, K)
 
 
 def test_impact_index_stats(spark, impact_index):
@@ -80,14 +79,16 @@ def test_impact_index_stats(spark, impact_index):
     assert all(t.isdigit() and len(t) == 5 for t in terms)
 
 
+
 def test_impact_kernel_matches_dataframe(spark, impact_index):
-    out, _rows = impact_index
+    """The kernel's result DataFrame at a k that cuts tied runs, over
+    three-dim weighted queries as well: ranks exactly as the brute dot
+    product, scores within the ScoreTiesAdjuster bound."""
+    out, rows = impact_index
     idx = InvertedIndex(spark, out)
     q = dict(QUERIES)
-
-    def rows(df):
-        return [(r["qid"], r["docid"], r["rank"],
-                 round(float(r["score"]), 9)) for r in df.collect()]
-
-    assert rows(search_impact(idx, q, k=20, engine="kernel")) == \
-        rows(search_impact(idx, q, k=20, engine="dataframe"))
+    q[4] = {"00002": 0.3, "00009": 0.3, "00014": 0.9}
+    q[5] = {"00005": 1.0, "00011": 1.0}
+    k = 5
+    assert_matches_brute(search_impact(idx, q, k=k),
+                         _brute(rows, q, k=k), q, k)

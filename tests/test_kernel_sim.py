@@ -1,7 +1,7 @@
-"""Pluggable-similarity kernel engine: rank-identity vs the
-declarative DataFrame path for all six similarities, and plan
-assertions that the kernel path never scans the full docvec postings
-(term-pruned blocks scan only — the round-1 scale defect)."""
+"""Pluggable-similarity kernel engine: ranks and scores of all six
+similarities vs a brute-force python recompute, and a plan assertion
+that the kernel path never scans the full docvec postings (term-pruned
+blocks scan only)."""
 
 import pytest
 
@@ -13,15 +13,32 @@ from anserini_spark.search.similarities import (
     search_inl2,
     search_spl,
 )
+from tests.runcheck import assert_matches_brute
+from tests.test_qld import brute_qld, brute_qljm
+from tests.test_similarities import (
+    brute,
+    corpus_stats,
+    f2exp_contrib,
+    f2log_contrib,
+    inl2_contrib,
+    spl_contrib,
+)
 
 QUERIES = {1: "spark merge join", 2: "customer value", 3: "the scan"}
+K = 25
 
-
-def _rows(df):
-    return [
-        (r["qid"], r["docid"], r["rank"], round(float(r["score"]), 6))
-        for r in df.collect()
-    ]
+BRUTE = {
+    search_qld: lambda docs, kw: brute_qld(docs, QUERIES, kw["mu"], k=K),
+    search_qljm: lambda docs, kw: brute_qljm(docs, QUERIES, kw["lam"], k=K),
+    search_inl2: lambda docs, kw: brute(
+        docs, corpus_stats(docs), inl2_contrib(**kw), QUERIES, K),
+    search_spl: lambda docs, kw: brute(
+        docs, corpus_stats(docs), spl_contrib(**kw), QUERIES, K),
+    search_f2exp: lambda docs, kw: brute(
+        docs, corpus_stats(docs), f2exp_contrib(**kw), QUERIES, K),
+    search_f2log: lambda docs, kw: brute(
+        docs, corpus_stats(docs), f2log_contrib(**kw), QUERIES, K),
+}
 
 
 @pytest.mark.parametrize("fn,kw", [
@@ -33,11 +50,13 @@ def _rows(df):
     (search_f2exp, {"s": 0.5}),
     (search_f2log, {"s": 0.5}),
 ])
-def test_kernel_matches_dataframe(spark, tiny_index, fn, kw):
+def test_kernel_matches_dataframe(spark, tiny_index, tiny_docs, fn, kw):
+    """The kernel's result DataFrame for each similarity and parameter
+    setting, at k=25: ranks exactly as the brute recompute, scores
+    within the ScoreTiesAdjuster bound."""
     idx = InvertedIndex(spark, tiny_index)
-    kern = _rows(fn(idx, QUERIES, k=25, engine="kernel", **kw))
-    dfrm = _rows(fn(idx, QUERIES, k=25, engine="dataframe", **kw))
-    assert kern == dfrm
+    assert_matches_brute(fn(idx, QUERIES, k=K, **kw),
+                         BRUTE[fn](tiny_docs, kw), QUERIES, K)
 
 
 def test_kernel_plan_is_term_pruned(spark, tiny_index):
@@ -45,13 +64,7 @@ def test_kernel_plan_is_term_pruned(spark, tiny_index):
     query terms pushed into the scan, and must NOT explode docvec
     postings (no full-corpus scan)."""
     idx = InvertedIndex(spark, tiny_index)
-    df = search_qld(idx, {1: "spark merge"}, k=10, engine="kernel")
+    df = search_qld(idx, {1: "spark merge"}, k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "blocks" in plan
     assert "Generate explode" not in plan and "arrays_zip" not in plan
-    # the dataframe oracle path, by contrast, explodes every posting
-    plan_df = (
-        search_qld(idx, {1: "spark merge"}, k=10, engine="dataframe")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "explode" in plan_df

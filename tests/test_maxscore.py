@@ -68,8 +68,8 @@ def test_maxscore_identical_to_dense():
         }
     seg_counts = {0: n_docs}
     for k in (5, 50, 1000):
-        fn_p = _segment_score_fn(weights, (0.54, 0.0036), seg_counts, k, True)
-        fn_d = _segment_score_fn(weights, (0.54, 0.0036), seg_counts, k, False)
+        fn_p = _segment_score_fn(weights, (0.54, 0.0036, False), seg_counts, k, True)
+        fn_d = _segment_score_fn(weights, (0.54, 0.0036, False), seg_counts, k, False)
         got, want = _run(fn_p, fn_d, bl, k)
         assert got.keys() == want.keys()
         for qid in want:
@@ -80,7 +80,7 @@ def test_maxscore_single_term_and_tiny_k():
     rng = np.random.default_rng(5)
     bl, _ = _mk_segment(rng, 500, ["only"], [0.5])
     weights = {1: {"only": np.float32(2.0)}}
-    fn_p = _segment_score_fn(weights, (0.54, 0.004), {0: 500}, 1, True)
-    fn_d = _segment_score_fn(weights, (0.54, 0.004), {0: 500}, 1, False)
+    fn_p = _segment_score_fn(weights, (0.54, 0.004, False), {0: 500}, 1, True)
+    fn_d = _segment_score_fn(weights, (0.54, 0.004, False), {0: 500}, 1, False)
     got, want = _run(fn_p, fn_d, bl, 1)
     assert got == want

@@ -1,4 +1,5 @@
-"""QLD vs brute-force python recompute (formula-level parity)."""
+"""QLD / QLJM vs brute-force python recompute (formula-level parity):
+ranks exactly, scores within the ScoreTiesAdjuster bound."""
 
 import math
 from collections import Counter
@@ -6,12 +7,13 @@ from collections import Counter
 from anserini_spark.analysis.analyzer import analyze
 from anserini_spark.search.qld import search_qld
 from anserini_spark.search.searcher import InvertedIndex
+from tests.runcheck import assert_matches_brute
 
 QUERIES = {1: "spark merge join", 2: "customer value", 3: "the scan"}
-MU = 1000.0
+K = 20
 
 
-def _brute(docs, queries, k=20):
+def brute_qld(docs, queries, mu, k=K):
     tf, dl, cf = {}, {}, Counter()
     for url, text in docs.items():
         toks = analyze(text)
@@ -32,30 +34,24 @@ def _brute(docs, queries, k=20):
                     continue
                 p_c = (cf[t] + 1.0) / (sum_tf + 1.0)
                 # per-term clamp at 0 (Lucene LMSimilarity.score)
-                s += max(0.0, boost * (math.log(1 + f / (MU * p_c))
-                                       + math.log(MU / (dl[url] + MU))))
+                s += max(0.0, boost * (math.log(1 + f / (mu * p_c))
+                                       + math.log(mu / (dl[url] + mu))))
                 matched = True
             if matched:
                 hits.append((url, s))
         hits.sort(key=lambda x: (-x[1], x[0]))
-        out[qid] = [(u, r + 1, round(s, 6)) for r, (u, s) in enumerate(hits[:k])]
+        out[qid] = [(u, r + 1, s) for r, (u, s) in enumerate(hits[:k])]
     return out
 
 
 def test_qld_matches_bruteforce(spark, tiny_index, tiny_docs):
     idx = InvertedIndex(spark, tiny_index)
-    got = {}
-    for r in search_qld(idx, QUERIES, mu=MU, k=20).collect():
-        got.setdefault(r["qid"], []).append(
-            (r["docid"], r["rank"])
-        )
-    want = _brute(tiny_docs, QUERIES)
-    for qid in QUERIES:
-        w = [(u, rk) for u, rk, _ in want.get(qid, [])]
-        assert got.get(qid, []) == w, qid
+    for mu in (1000.0, 250.0):
+        assert_matches_brute(search_qld(idx, QUERIES, mu=mu, k=K),
+                             brute_qld(tiny_docs, QUERIES, mu), QUERIES, K)
 
 
-def _brute_jm(docs, queries, lam=0.1, k=20):
+def brute_qljm(docs, queries, lam=0.1, k=K):
     tf, dl, cf = {}, {}, Counter()
     for url, text in docs.items():
         toks = analyze(text)
@@ -80,7 +76,7 @@ def _brute_jm(docs, queries, lam=0.1, k=20):
             if s > 0:
                 hits.append((url, s))
         hits.sort(key=lambda x: (-x[1], x[0]))
-        out[qid] = [(u, r + 1) for r, (u, _) in enumerate(hits[:k])]
+        out[qid] = [(u, r + 1, s) for r, (u, s) in enumerate(hits[:k])]
     return out
 
 
@@ -88,9 +84,5 @@ def test_qljm_matches_bruteforce(spark, tiny_index, tiny_docs):
     from anserini_spark.search.qld import search_qljm
 
     idx = InvertedIndex(spark, tiny_index)
-    got = {}
-    for r in search_qljm(idx, QUERIES, lam=0.1, k=20).collect():
-        got.setdefault(r["qid"], []).append((r["docid"], r["rank"]))
-    want = _brute_jm(tiny_docs, QUERIES)
-    for qid in QUERIES:
-        assert got.get(qid, []) == want.get(qid, []), qid
+    assert_matches_brute(search_qljm(idx, QUERIES, lam=0.1, k=K),
+                         brute_qljm(tiny_docs, QUERIES), QUERIES, K)

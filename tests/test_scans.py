@@ -41,3 +41,12 @@ def test_rows_identical_with_and_without_fanout(spark, small_parquet):
 
 def test_local_rows_reads_footer(small_parquet):
     assert _local_rows(small_parquet) == 1000
+
+
+def test_local_rows_unknown_without_parquet_children(tmp_path):
+    # a directory with no *.parquet files is an unknown layout, not an
+    # empty table: None keeps the caller on the fan-out path
+    d = tmp_path / "no_parquet"
+    d.mkdir()
+    (d / "_SUCCESS").write_text("")
+    assert _local_rows(str(d)) is None

@@ -1,9 +1,9 @@
-"""Golden top-k runs (FIXTURES.md §7): both Spark engines must be
+"""Golden top-k runs (FIXTURES.md §7): the Spark kernel engine must be
 rank- AND score-identical to the pure-numpy float32 oracle, with
 tie adjustment applied — the analogue of the reference's pinned
 6-decimal run lines (`integration/TrecEndToEndTest.java:83-126`).
-Also pins engine-vs-engine identity and segment-count invariance
-(merge/parallelism parity, `MultiThreadingSearchTest` analogue)."""
+Also pins segment-count invariance (merge/parallelism parity,
+`MultiThreadingSearchTest` analogue)."""
 
 import pytest
 
@@ -13,7 +13,6 @@ from anserini_spark.search.oracle import oracle_topk
 from anserini_spark.search.searcher import (
     InvertedIndex,
     SimpleSearcher,
-    search_dataframe,
     search_kernel,
 )
 
@@ -44,12 +43,6 @@ def golden(tiny_docs):
     return out
 
 
-def test_dataframe_engine_matches_oracle(spark, tiny_index, golden):
-    idx = InvertedIndex(spark, tiny_index)
-    got = _rows(search_dataframe(idx, QUERIES, BM25Params(k=20)))
-    assert got == golden
-
-
 def test_kernel_engine_matches_oracle(spark, tiny_index, golden):
     idx = InvertedIndex(spark, tiny_index)
     got = _rows(search_kernel(idx, QUERIES, BM25Params(k=20)))
@@ -68,7 +61,6 @@ def test_segment_count_invariance(spark, tiny_docs, golden, tmp_path):
                                            block_partitions=2))
     idx = InvertedIndex(spark, out)
     assert _rows(search_kernel(idx, QUERIES, BM25Params(k=20))) == golden
-    assert _rows(search_dataframe(idx, QUERIES, BM25Params(k=20))) == golden
 
 
 def test_simple_searcher_api(spark, tiny_index):

@@ -1,4 +1,5 @@
-"""InL2 / F2EXP / F2LOG vs brute-force python recompute."""
+"""InL2 / SPL / F2EXP / F2LOG vs brute-force python recompute: ranks
+exactly, scores within the ScoreTiesAdjuster bound."""
 
 import math
 from collections import Counter
@@ -11,15 +12,17 @@ from anserini_spark.search.similarities import (
     search_f2exp,
     search_f2log,
     search_inl2,
+    search_spl,
 )
+from tests.runcheck import assert_matches_brute
 
-QUERIES = {1: "spark merge join", 2: "customer value"}
+QUERIES = {1: "spark merge join", 2: "customer value", 3: "the scan"}
+K = 20
 
 
-@pytest.fixture(scope="module")
-def stats(tiny_docs):
+def corpus_stats(docs):
     tf, dl, df = {}, {}, Counter()
-    for url, text in tiny_docs.items():
+    for url, text in docs.items():
         toks = analyze(text)
         tf[url] = Counter(toks)
         dl[url] = len(toks)
@@ -29,17 +32,15 @@ def stats(tiny_docs):
     return tf, dl, df, n, avgdl
 
 
-def _rank(spark_df):
-    got = {}
-    for r in spark_df.collect():
-        got.setdefault(r["qid"], []).append((r["docid"], r["rank"]))
-    return got
+@pytest.fixture(scope="module")
+def stats(tiny_docs):
+    return corpus_stats(tiny_docs)
 
 
-def _brute(tiny_docs, stats, contrib, k=20):
+def brute(tiny_docs, stats, contrib, queries=QUERIES, k=K):
     tf, dl, df, n, avgdl = stats
     out = {}
-    for qid, qtext in QUERIES.items():
+    for qid, qtext in queries.items():
         qc = Counter(analyze(qtext))
         hits = []
         for url in tiny_docs:
@@ -51,50 +52,56 @@ def _brute(tiny_docs, stats, contrib, k=20):
             if s > 0:
                 hits.append((url, s))
         hits.sort(key=lambda x: (-x[1], x[0]))
-        out[qid] = [(u, r + 1) for r, (u, _) in enumerate(hits[:k])]
+        out[qid] = [(u, r + 1, s) for r, (u, s) in enumerate(hits[:k])]
     return out
 
 
-def test_inl2(spark, tiny_index, tiny_docs, stats):
-    c = 1.0
-
+def inl2_contrib(c=1.0):
     def contrib(f, d, dfv, n, avgdl):
         tfn = f * math.log2(1 + c * avgdl / d)
         return (1 / (tfn + 1)) * tfn * math.log2((n + 1) / (dfv + 0.5))
-
-    idx = InvertedIndex(spark, tiny_index)
-    assert _rank(search_inl2(idx, QUERIES, k=20)) == _brute(
-        tiny_docs, stats, contrib)
+    return contrib
 
 
-def test_f2exp(spark, tiny_index, tiny_docs, stats):
-    def contrib(f, d, dfv, n, avgdl):
-        return f / (f + 0.5 + 0.5 * d / avgdl) * ((n + 1) / dfv) ** 0.35
-
-    idx = InvertedIndex(spark, tiny_index)
-    assert _rank(search_f2exp(idx, QUERIES, k=20)) == _brute(
-        tiny_docs, stats, contrib)
-
-
-def test_f2log(spark, tiny_index, tiny_docs, stats):
-    def contrib(f, d, dfv, n, avgdl):
-        return f / (f + 0.5 + 0.5 * d / avgdl) * math.log((n + 1) / dfv)
-
-    idx = InvertedIndex(spark, tiny_index)
-    assert _rank(search_f2log(idx, QUERIES, k=20)) == _brute(
-        tiny_docs, stats, contrib)
-
-
-def test_spl(spark, tiny_index, tiny_docs, stats):
-    from anserini_spark.search.similarities import search_spl
-
-    c = 1.0
-
+def spl_contrib(c=1.0):
     def contrib(f, d, dfv, n, avgdl):
         tfn = f * math.log2(1 + c * avgdl / d)
         lam = (dfv + 1.0) / (n + 1.0)
         return -math.log2((lam ** (tfn / (tfn + 1)) - lam) / (1 - lam))
+    return contrib
 
+
+def f2exp_contrib(s=0.5, kexp=0.35):
+    def contrib(f, d, dfv, n, avgdl):
+        return f / (f + s + s * d / avgdl) * ((n + 1) / dfv) ** kexp
+    return contrib
+
+
+def f2log_contrib(s=0.5):
+    def contrib(f, d, dfv, n, avgdl):
+        return f / (f + s + s * d / avgdl) * math.log((n + 1) / dfv)
+    return contrib
+
+
+def test_inl2(spark, tiny_index, tiny_docs, stats):
     idx = InvertedIndex(spark, tiny_index)
-    assert _rank(search_spl(idx, QUERIES, k=20)) == _brute(
-        tiny_docs, stats, contrib)
+    assert_matches_brute(search_inl2(idx, QUERIES, k=K),
+                         brute(tiny_docs, stats, inl2_contrib()), QUERIES, K)
+
+
+def test_f2exp(spark, tiny_index, tiny_docs, stats):
+    idx = InvertedIndex(spark, tiny_index)
+    assert_matches_brute(search_f2exp(idx, QUERIES, k=K),
+                         brute(tiny_docs, stats, f2exp_contrib()), QUERIES, K)
+
+
+def test_f2log(spark, tiny_index, tiny_docs, stats):
+    idx = InvertedIndex(spark, tiny_index)
+    assert_matches_brute(search_f2log(idx, QUERIES, k=K),
+                         brute(tiny_docs, stats, f2log_contrib()), QUERIES, K)
+
+
+def test_spl(spark, tiny_index, tiny_docs, stats):
+    idx = InvertedIndex(spark, tiny_index)
+    assert_matches_brute(search_spl(idx, QUERIES, k=K),
+                         brute(tiny_docs, stats, spl_contrib()), QUERIES, K)

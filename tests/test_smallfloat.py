@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 from anserini_spark.index.build import IndexConfig, build_index
 from anserini_spark.search.bm25 import BM25Params
 from anserini_spark.search.local import LocalSearcher
-from anserini_spark.search.searcher import (
-    InvertedIndex,
-    search_dataframe,
-    search_kernel,
-)
+from anserini_spark.search.searcher import InvertedIndex, search_kernel
 from anserini_spark.search.smallfloat import (
     byte4_to_int,
     int_to_byte4,
@@ -99,22 +95,36 @@ def test_lossy_mode_changes_ranking(spark, norm_index):
     assert lossy[:2] == ["https://a.example.org/1", "https://b.example.org/1"]
 
 
+def _docs(spark, norm_index):
+    """The indexed corpus as text: each term repeated tf times (ws
+    analyzer: identity), the input ``oracle_topk`` scores."""
+    docvec = spark.read.parquet(f"{norm_index}/docvec.parquet").collect()
+    return {
+        r["url"]: " ".join(t for t, tf in zip(r["terms"], r["tfs"])
+                           for _ in range(tf))
+        for r in docvec
+    }
+
+
 def test_lossy_engines_rank_identical(spark, norm_index):
+    """Spark kernel and LocalSearcher, lossy norms, both == oracle."""
+    from anserini_spark.search.oracle import oracle_topk
+
     idx = InvertedIndex(spark, norm_index)
     q = {1: "zzz", 2: "zzz zzz w ex"}
     p = BM25Params(k=10, lossy=True)
+    want = oracle_topk(_docs(spark, norm_index), q, lambda s: s.split(), p)
+    want = [(qid, u, rk, round(s, 6))
+            for qid in sorted(want) for u, rk, s in want[qid]]
 
-    def rows(df):
-        return [(r["qid"], r["docid"], r["rank"], round(float(r["score"]), 6))
-                for r in df.collect()]
-
-    kern = rows(search_kernel(idx, q, p))
-    dfrm = rows(search_dataframe(idx, q, p))
-    assert kern == dfrm
+    kern = [(r["qid"], r["docid"], r["rank"], round(float(r["score"]), 6))
+            for r in search_kernel(idx, q, p).collect()]
+    assert kern == want
 
     ls = LocalSearcher(norm_index, lossy=True)
-    local = [(1, u, rk, round(s, 6)) for u, rk, s in ls.search("zzz", k=10)]
-    assert local == [t for t in kern if t[0] == 1]
+    local = [(qid, u, rk, round(s, 6))
+             for qid in sorted(q) for u, rk, s in ls.search(q[qid], k=10)]
+    assert local == want
 
 
 def test_lossy_oracle_agreement(spark, norm_index):
@@ -122,16 +132,9 @@ def test_lossy_oracle_agreement(spark, norm_index):
     from anserini_spark.search.oracle import oracle_topk
 
     idx = InvertedIndex(spark, norm_index)
-    docvec = spark.read.parquet(f"{norm_index}/docvec.parquet").collect()
-    # reconstruct doc text as repeated tokens (ws analyzer: identity)
-    docs = {}
-    for r in docvec:
-        docs[r["url"]] = " ".join(
-            t for t, tf in zip(r["terms"], r["tfs"]) for _ in range(tf)
-        )
     p = BM25Params(k=10, lossy=True)
     q = {1: "zzz"}
-    want = oracle_topk(docs, q, lambda s: s.split(), p)
+    want = oracle_topk(_docs(spark, norm_index), q, lambda s: s.split(), p)
     got = [(r["docid"], r["rank"], round(float(r["score"]), 6))
            for r in search_kernel(idx, q, p).collect()]
     assert got == [(u, rk, round(s, 6)) for u, rk, s in want[1]]

@@ -1,7 +1,7 @@
 """Tombstones (`index/tombstones.py`) — Lucene liveDocs semantics:
 
-* deleted docs vanish from every result list (kernel, dataframe,
-  similarity, boolean, LocalSearcher, multislice);
+* deleted docs vanish from every result list (kernel, similarity,
+  impact, SDM, boolean, LocalSearcher, multislice);
 * surviving docs keep their EXACT pre-delete scores (stats stay stale
   until a merge purges — Lucene-identical);
 * a purging merge physically drops the docs and recomputes stats, so
@@ -19,7 +19,7 @@ from anserini_spark.index.build import IndexConfig, build_index
 from anserini_spark.index.tombstones import add_tombstones
 from anserini_spark.search.bm25 import BM25Params
 from anserini_spark.search.searcher import (InvertedIndex, SimpleSearcher,
-                                            search_dataframe, search_kernel)
+                                            search_kernel)
 
 Q = "spark merge join"
 
@@ -60,14 +60,6 @@ def test_deleted_docs_vanish_surviving_scores_unchanged(spark, tombed):
         # ranks close up — compare the 4-decimal base within that
         assert u1 == u2
         assert abs(s1 - s2) < 2e-5, (u1, s1, s2)
-
-
-def test_dataframe_engine_agrees_under_tombstones(spark, tombed):
-    _, d, _, dead, _ = tombed
-    idx = InvertedIndex(spark, d)
-    p = BM25Params(k=20)
-    assert _rows(search_kernel(idx, {1: Q}, p)) == \
-        _rows(search_dataframe(idx, {1: Q}, p))
 
 
 def test_similarity_kernel_consults_tombstones(spark, tombed):
@@ -215,10 +207,8 @@ def test_impact_index_consults_tombstones(spark, tmp_path):
     assert top[0]["docid"] == "d007"  # largest alpha activation
     add_tombstones(spark, d, ["d007"])
     idx2 = InvertedIndex(spark, d)
-    for engine in ("kernel", "dataframe"):
-        got = [r["docid"] for r in search_impact(idx2, q, k=3,
-                                                 engine=engine).collect()]
-        assert "d007" not in got and got[0] == "d006", (engine, got)
+    got = [r["docid"] for r in search_impact(idx2, q, k=3).collect()]
+    assert "d007" not in got and got[0] == "d006", got
 
 
 def test_sdm_over_tombstoned_positional_slices(spark, tmp_path):
