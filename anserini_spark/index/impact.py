@@ -144,5 +144,5 @@ def search_impact(
               for qid, m in queries.items()}
     boosts = {qid: m for qid, m in boosts.items() if m}
     shape_fns = {t: _shape for m in boosts.values() for t in m}
-    return _search_blocks(index, boosts, k, prune=True, consts=None,
+    return _search_blocks(index, boosts, k, consts=None,
                           shape_fns=shape_fns)

@@ -34,11 +34,10 @@ Scale shape: tombstone lookup is one broadcast semi-join against the
 docvec (column-pruned scan) at searcher init, cached; the per-segment
 dead-id arrays live on the driver and ride into the kernel closure —
 bounded by delete count, not corpus size. EVERY engine consults
-liveDocs: the BM25/similarity kernel and SDM's positional kernel mask
-at decode, `postings_from_blocks` (boolean set ops) and the impact
-kernel likewise, and the declarative plans (SDM's dataframe path,
-tweet search) anti-join ``live_docvec`` — pinned across all of them by
-``tests/test_tombstones.py``.
+liveDocs, and every one at decode: the block kernel (BM25, the
+similarities, impact and tweet search), SDM's positional kernel and
+`postings_from_blocks` (boolean set ops) — pinned across all of them
+by ``tests/test_tombstones.py``.
 """
 
 from __future__ import annotations

@@ -166,7 +166,6 @@ def search_kernel_similarity(
     queries: Dict[int, str],
     sim: str,
     k: int = 1000,
-    prune: bool = True,
     boosts: Optional[Dict[int, Dict[str, float]]] = None,
     **params,
 ) -> DataFrame:
@@ -197,5 +196,5 @@ def search_kernel_similarity(
     # Lucene returns every doc matching >=1 query term, INCLUDING
     # docs whose clamped LM score is 0 (golden: QLD `1 Q0 WSJ_1 3
     # 0.000000`, `TrecEndToEndTest.java:92-96`) — no score filter
-    return _search_blocks(index, boosts, k, prune, consts=None,
+    return _search_blocks(index, boosts, k, consts=None,
                           shape_fns=shape_fns)

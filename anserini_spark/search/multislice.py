@@ -176,10 +176,6 @@ class MultiSliceIndex(InvertedIndex):
         return self._dfs[name]
 
     @property
-    def has_tombstones(self) -> bool:
-        return any(s.has_tombstones for s in self.slices)
-
-    @property
     def dead_by_segment(self):
         """Per-slice liveDocs with the union's segment re-namespacing
         applied (local ids within a segment are offset-invariant)."""

@@ -25,30 +25,29 @@ span doc frequencies). Final score (float64):
     0.10 * sum_p idf_o(p) * tfpart(o_p) +
     0.05 * sum_p idf_u(p) * tfpart(u_p)
 
-Two engines (rank- and score-identity pinned by tests):
-
-* ``engine="kernel"`` (default, the scale path): positional posting
-  blocks (``pos_bin``, `index/blocks.py`) are term-pruned at the
-  parquet scan and decoded per segment in one Arrow kernel that emits
-  per-doc bag contributions and per-pair ordered/unordered window
-  counts; pair document frequencies and final scoring stay
-  declarative (global exact dfs need a cross-segment aggregation
-  anyway). No full-corpus scan.
-* ``engine="dataframe"`` (the oracle path): fully declarative — the
-  position window "join" is an inner join on (qid, pair, doc) with a
-  positional range predicate over the exploded positional docvec.
+One engine, the positional analogue of the BM25 block kernel:
+positional posting blocks (``pos_bin``, `index/blocks.py`) are
+term-pruned at the parquet scan and decoded per segment in one Arrow
+kernel that emits per-doc bag contributions and per-pair
+ordered/unordered window counts; pair document frequencies and final
+scoring stay declarative (global exact dfs need a cross-segment
+aggregation anyway), and the tail is ``searcher._finalize``. No
+full-corpus scan. Tombstoned docs are masked at decode: unigram idf
+stays stale (dictionary df, Lucene's delete contract) while pair dfs
+count live docs only. The tests hold it to a brute-force Python
+recompute (``tests/test_sdm.py``) and the gates to the DuckDB
+``sdm_topk`` SQL oracle.
 """
 
 from __future__ import annotations
 
 from typing import Dict
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bm25 import BM25Params
-from .searcher import InvertedIndex
-from .tieadjust import adjust_score_ties
+from .searcher import RUN_SCHEMA, InvertedIndex
 
 W_TERM = 0.85
 W_ORDERED = 0.1
@@ -60,157 +59,6 @@ UNORDERED_MAX_DIST = 8  # slop 8, unordered
 def _idf(df_col, n: float):
     return F.log(F.lit(1.0) + (F.lit(n) - df_col + 0.5) / (df_col + 0.5))
 
-
-def search_sdm(index: InvertedIndex, queries: Dict[int, str],
-               params: BM25Params, engine: str = "kernel") -> DataFrame:
-    if engine == "kernel":
-        return _search_sdm_kernel(index, queries, params)
-    spark = index.spark
-    docvec = index.docvec_with_positions
-    if index.has_tombstones:
-        # liveDocs for the declarative engine: unigram idf stays stale
-        # (dictionary df), candidates/pair windows come from live docs
-        # only — matching the kernel's decode-time mask exactly
-        docvec = index.live_docvec
-        assert "positions" in docvec.columns
-    n = float(index.stats["doc_count"])
-    avgdl = float(index.stats["avgdl"])
-    k1, b = params.k1, params.b
-
-    per_q = {qid: index.analyze_query(t) for qid, t in queries.items()}
-    term_rows = [
-        (qid, t) for qid, toks in per_q.items() for t in toks
-    ]
-    pair_rows = [
-        (qid, i, toks[i], toks[i + 1])
-        for qid, toks in per_q.items()
-        for i in range(len(toks) - 1)
-    ]
-    if not term_rows:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double"
-        )
-    all_terms = sorted({t for _, t in term_rows} |
-                       {t for r in pair_rows for t in (r[2], r[3])})
-    qterms = spark.createDataFrame(term_rows, "qid int, term string")
-
-    posvec = (
-        docvec.select(
-            "doc_id", "doclen",
-            F.explode(F.arrays_zip("terms", "tfs", "positions")).alias("e"),
-        )
-        .select(
-            F.col("e.terms").alias("term"), "doc_id",
-            F.col("e.tfs").alias("tf"), "doclen",
-            F.col("e.positions").alias("pos"),
-        )
-        .filter(F.col("term").isin(all_terms))
-        .persist()
-    )
-
-    def tfpart(tf_col, dl_col):
-        return tf_col / (
-            tf_col + F.lit(k1 * (1 - b)) + F.lit(k1 * b / avgdl) * dl_col
-        )
-
-    # ---- bag-of-words part (term df from the global dictionary) ----
-    dfs = index.term_dfs(all_terms)
-    tdf = spark.createDataFrame(
-        [(t, float(d)) for t, d in dfs.items()], "term string, tdf double"
-    )
-    bag = (
-        posvec.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(tdf), "term")
-        .groupBy("qid", "doc_id")
-        .agg(
-            F.sum(
-                _idf(F.col("tdf"), n)
-                * tfpart(F.col("tf").cast("double"),
-                         F.col("doclen").cast("double"))
-            ).alias("bag"),
-            F.first("doclen").alias("doclen"),
-        )
-    )
-
-    score_df = bag.withColumn("score",
-                              F.lit(W_TERM) * F.col("bag")).select(
-        "qid", "doc_id", "doclen", "score")
-
-    if pair_rows:
-        qpairs = spark.createDataFrame(
-            pair_rows, "qid int, pid int, term_a string, term_b string"
-        )
-        pa = (
-            posvec.join(F.broadcast(qpairs),
-                        posvec.term == qpairs.term_a)
-            .select("qid", "pid", "doc_id", "doclen",
-                    F.explode("pos").alias("pos_a"))
-        )
-        pb = (
-            posvec.join(F.broadcast(qpairs.select("qid", "pid", "term_b")),
-                        posvec.term == F.col("term_b"))
-            .select(F.col("qid").alias("qid_b"), F.col("pid").alias("pid_b"),
-                    F.col("doc_id").alias("doc_id_b"),
-                    F.explode("pos").alias("pos_b"))
-        )
-        joined = pa.join(
-            pb,
-            (pa.qid == pb.qid_b) & (pa.pid == pb.pid_b)
-            & (pa.doc_id == pb.doc_id_b),
-        )
-        d = F.col("pos_b") - F.col("pos_a")
-        counts = joined.groupBy("qid", "pid", "doc_id", "doclen").agg(
-            F.sum(d.between(1, ORDERED_MAX_DIST).cast("long")).alias("o"),
-            F.sum(((d != 0) & (F.abs(d) <= UNORDERED_MAX_DIST)).cast("long")
-                  ).alias("u"),
-        ).persist()
-        pair_dfs = counts.groupBy("qid", "pid").agg(
-            F.sum((F.col("o") > 0).cast("long")).cast("double").alias("df_o"),
-            F.sum((F.col("u") > 0).cast("long")).cast("double").alias("df_u"),
-        )
-        pair_scores = (
-            counts.join(F.broadcast(pair_dfs), ["qid", "pid"])
-            .withColumn(
-                "pscore",
-                F.when(
-                    F.col("o") > 0,
-                    F.lit(W_ORDERED) * _idf(F.col("df_o"), n)
-                    * tfpart(F.col("o").cast("double"),
-                             F.col("doclen").cast("double")),
-                ).otherwise(0.0)
-                + F.when(
-                    F.col("u") > 0,
-                    F.lit(W_UNORDERED) * _idf(F.col("df_u"), n)
-                    * tfpart(F.col("u").cast("double"),
-                             F.col("doclen").cast("double")),
-                ).otherwise(0.0),
-            )
-            .groupBy("qid", "doc_id")
-            .agg(F.sum("pscore").alias("pairs"))
-        )
-        score_df = (
-            score_df.join(pair_scores, ["qid", "doc_id"], "left")
-            .withColumn(
-                "score",
-                F.col("score") + F.coalesce(F.col("pairs"), F.lit(0.0)),
-            )
-            .select("qid", "doc_id", "doclen", "score")
-        )
-
-    docmap = index.docmap.select("doc_id", "url")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    ranked = (
-        score_df.join(docmap, "doc_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= params.k)
-        .select("qid", F.col("url").alias("docid"), "rank", "score")
-    )
-    return adjust_score_ties(ranked).orderBy("qid", "rank")
-
-
-# ---------------------------------------------------------------------------
-# kernel engine: positional blocks, term-pruned scan, per-segment counts
-# ---------------------------------------------------------------------------
 
 SDM_ROWS_SCHEMA = ("qid int, pid int, doc_id long, doclen long, "
                    "o long, u long, bag double")
@@ -224,7 +72,7 @@ def _sdm_segment_fn(bag_weights, pairs, consts, dead_global=None):
     absolute doc ids of tombstoned docs — masked at decode (this
     kernel never prunes, so the mask is exact; unigram idf stays
     stale per the Lucene delete contract, pair window dfs are counted
-    over live postings in BOTH engines)."""
+    over live postings)."""
     import numpy as np
     import pandas as pd
 
@@ -322,8 +170,8 @@ def _sdm_segment_fn(bag_weights, pairs, consts, dead_global=None):
     return fn
 
 
-def _search_sdm_kernel(index: InvertedIndex, queries: Dict[int, str],
-                       params: BM25Params) -> DataFrame:
+def search_sdm(index: InvertedIndex, queries: Dict[int, str],
+               params: BM25Params) -> DataFrame:
     spark = index.spark
     n = float(index.stats["doc_count"])
     avgdl = float(index.stats["avgdl"])
@@ -332,20 +180,20 @@ def _search_sdm_kernel(index: InvertedIndex, queries: Dict[int, str],
     blocks = index.blocks
     if "pos_bin" not in blocks.columns:
         raise ValueError(
-            "index was built without store_positions=True; the SDM "
-            "kernel engine needs positional posting blocks"
+            "index was built without store_positions=True "
+            "(-storePositions analogue); SDM needs positional posting "
+            "blocks"
         )
 
     per_q = {qid: index.analyze_query(t) for qid, t in queries.items()}
     all_terms = sorted({t for toks in per_q.values() for t in toks})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double")
+        return spark.createDataFrame([], RUN_SCHEMA)
     dfs = index.term_dfs(all_terms)
     import math
 
-    # bag weights: occurrences * idf (matches the dataframe path's
-    # one-row-per-occurrence join)
+    # bag weights: occurrences * idf (a duplicated query term counts
+    # once per occurrence, bag-of-words)
     bag_weights: Dict[int, Dict[str, float]] = {}
     pairs = []
     pid = 0

@@ -11,11 +11,14 @@ top-k, then a tiny shuffle merges per-segment top-k by (score desc,
 url asc) exactly like Lucene's BREAK_SCORE_TIES_BY_DOCID collector
 (`SearchCollection.java:115-116`).
 
-``_search_blocks`` is that driver. BM25 (``search_kernel``), the
-pluggable similarities (`kernel_sim.py`) and impact search
-(`index/impact.py`) differ only in the per-term weights and the
-per-posting contribution they hand it: the float32 BM25 tf-part
-(``bm25.tf_part``) or a float64 shape function. The references the
+``_search_blocks`` is that driver: ``_score_blocks`` (the scan and
+the per-segment kernel) then ``_finalize_arrays`` (the per-qid merge
+and url order). BM25 (``search_kernel``), the pluggable similarities
+(`kernel_sim.py`) and impact search (`index/impact.py`) differ only
+in the per-term weights and the per-posting contribution they hand
+it: the float32 BM25 tf-part (``bm25.tf_part``) or a float64 shape
+function. Tweet search (`tweets.py`) takes ``_score_blocks``' hits
+and applies its own id filter and tie order. The references the
 tests hold it to are ``oracle.py`` and the DuckDB SQL oracles.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
@@ -90,15 +93,11 @@ class InvertedIndex:
         self._dead: Optional[Dict[int, np.ndarray]] = None
 
     @property
-    def has_tombstones(self) -> bool:
-        from ..index.tombstones import has_tombstones
-
-        return has_tombstones(self.dir)
-
-    @property
     def live_docvec(self) -> DataFrame:
-        """docvec minus tombstoned docs (broadcast anti-join; the
-        declarative-path liveDocs consult)."""
+        """docvec minus tombstoned docs (broadcast anti-join), for
+        readers of docvec rows rather than postings:
+        ``SimpleSearcher.doc``, axiom's pool urls and the multi-slice
+        disjointness check."""
         from ..index.tombstones import read_tombstones
 
         dead = read_tombstones(self.spark, self.dir)
@@ -158,16 +157,6 @@ class InvertedIndex:
     @property
     def dictionary(self) -> DataFrame:
         return self._load("dictionary", self._cache)
-
-    @property
-    def docvec_with_positions(self) -> DataFrame:
-        df = self.docvec
-        if "positions" not in df.columns:
-            raise ValueError(
-                "index was built without store_positions=True "
-                "(-storePositions analogue); SDM needs positional postings"
-            )
-        return df
 
     def analyze_query(self, text: str) -> List[str]:
         from ..analysis.analyzer import analyze_for
@@ -301,13 +290,20 @@ def _finalize_arrays(index: InvertedIndex, hits: DataFrame,
     merged = hits.groupBy("qid").applyInPandas(
         _merge_topk_fn(k), schema="qid int, doc_id long, score double"
     )
-    # url attach: broadcast the ~k-per-qid survivors into a streamed
-    # docmap scan (guide §3.1) — the candidate side is bounded by
-    # queries x k regardless of corpus size, while the round-6
-    # shuffle_hash hint exchanged the FULL docmap by doc_id per batch
-    # (2 exchanges removed from every kernel search)
+    return _rank_with_urls(index, merged, k)
+
+
+def _rank_with_urls(index: InvertedIndex, survivors: DataFrame,
+                    k: int) -> DataFrame:
+    """The shared tail: url attach, final (score desc, url asc) order
+    cut to k, score-ties adjust. ``survivors`` (qid, doc_id, score)
+    must already be bounded to ~k rows per qid: they are broadcast
+    into a streamed docmap scan (guide §3.1), so the candidate side
+    is queries x k regardless of corpus size, while the round-6
+    shuffle_hash hint exchanged the FULL docmap by doc_id per batch
+    (2 exchanges removed from every kernel search)."""
     docmap = index.docmap.select("doc_id", "url")
-    joined = docmap.join(F.broadcast(merged), "doc_id")
+    joined = docmap.join(F.broadcast(survivors), "doc_id")
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
     ranked = (
         joined.withColumn("rank", F.row_number().over(w))
@@ -337,17 +333,7 @@ def _finalize(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
         .filter(F.col("r0") <= k)
         .drop("r0")
     )
-    # see _finalize_arrays: broadcast the bounded survivor set into a
-    # streamed docmap scan instead of shuffling the full docmap
-    docmap = index.docmap.select("doc_id", "url")
-    joined = docmap.join(F.broadcast(pruned), "doc_id")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    ranked = (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("url").alias("docid"), "rank", "score")
-    )
-    return adjust_score_ties(ranked).orderBy("qid", "rank")
+    return _rank_with_urls(index, pruned, k)
 
 
 def _segment_score_fn(
@@ -355,7 +341,6 @@ def _segment_score_fn(
     scorer_consts: Optional[Tuple[float, float, bool]],
     seg_counts: Dict[int, int],
     k: int,
-    prune: bool,
     shape_fns: Optional[Dict[str, object]] = None,
     dead_by_seg: Optional[Dict[int, np.ndarray]] = None,
 ):
@@ -369,11 +354,10 @@ def _segment_score_fn(
     Shape functions must be non-negative, increasing in tf and
     non-increasing in dl (all the reference's similarities are), so
     shape(max_tf, min_dl) stays a valid block upper bound."""
-    f32 = shape_fns is None
-    out_dtype = np.float32 if f32 else np.float64
+    out_dtype = np.float32 if shape_fns is None else np.float64
 
     def _part(t: str, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        if f32:
+        if shape_fns is None:
             return tf_part(tfs, dls, *scorer_consts)
         return shape_fns[t](np.asarray(tfs), np.asarray(dls))
 
@@ -420,38 +404,32 @@ def _segment_score_fn(
         # full-run decode cache, shared across queries
         decoded: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
 
-        def get_decoded(t: str):
-            if t not in decoded:
-                g = groups[t]
-                docs, tfs, dls = decode_block_run(
-                    list(g["docs_bin"]), list(g["tfs_bin"]), list(g["dls_bin"]),
-                    g["n"].to_numpy(), g["first_doc"].to_numpy(),
-                    g["last_doc"].to_numpy(),
-                )
-                decoded[t] = _live((docs - base).astype(np.int64),
-                                   _part(t, tfs, dls))
-            return decoded[t]
-
-        def decode_subset(t: str, lo: int, hi: int):
-            """Decode only blocks of t overlapping local-doc range
-            [lo, hi] (block-max skipping); falls back to the cache if
-            the full run is already decoded."""
+        def decode(t: str, lo: Optional[int] = None,
+                   hi: Optional[int] = None):
+            """t's live postings here as (sorted local ids, parts).
+            Full runs are cached across queries. Given a local-doc
+            range [lo, hi], decode only the blocks overlapping it
+            (block-max skipping), unless the full run is cached."""
             if t in decoded:
                 return decoded[t]
             g = groups[t]
-            first = g["first_doc"].to_numpy() - base
-            last = g["last_doc"].to_numpy() - base
-            mask = (last >= lo) & (first <= hi)
-            if not mask.any():
-                return (np.empty(0, dtype=np.int64), np.empty(0, out_dtype))
-            sub = g.iloc[np.nonzero(mask)[0]]
+            if lo is not None:
+                first = g["first_doc"].to_numpy() - base
+                last = g["last_doc"].to_numpy() - base
+                overlap = (last >= lo) & (first <= hi)
+                if not overlap.any():
+                    return (np.empty(0, dtype=np.int64),
+                            np.empty(0, out_dtype))
+                g = g.iloc[np.nonzero(overlap)[0]]
             docs, tfs, dls = decode_block_run(
-                list(sub["docs_bin"]), list(sub["tfs_bin"]), list(sub["dls_bin"]),
-                sub["n"].to_numpy(), sub["first_doc"].to_numpy(),
-                sub["last_doc"].to_numpy(),
+                list(g["docs_bin"]), list(g["tfs_bin"]), list(g["dls_bin"]),
+                g["n"].to_numpy(), g["first_doc"].to_numpy(),
+                g["last_doc"].to_numpy(),
             )
-            return _live((docs - base).astype(np.int64),
-                         _part(t, tfs, dls))
+            run = _live((docs - base).astype(np.int64), _part(t, tfs, dls))
+            if lo is None:
+                decoded[t] = run
+            return run
 
         out_qid: List[np.ndarray] = []
         out_doc: List[np.ndarray] = []
@@ -474,24 +452,8 @@ def _segment_score_fn(
                            key=lambda t: (-float(wmap[t]), t))
             if not terms:
                 continue
-            if not prune:
-                for t in terms:
-                    idx, part = get_decoded(t)
-                    if f32:
-                        contrib = (wmap[t] * part).astype(np.float32)
-                        acc[idx] += contrib.astype(np.float64)
-                    else:
-                        acc[idx] += wmap[t] * part
-                    mask[idx] = True
-                cand = np.flatnonzero(mask)
-                scores = acc[cand].astype(out_dtype)
-                acc[cand] = 0.0
-                mask[cand] = False
-            else:
-                cand, scores = _maxscore_query(
-                    terms, wmap, meta, get_decoded, decode_subset, acc,
-                    mask, k, f32=f32,
-                )
+            cand, scores = _maxscore_query(terms, wmap, meta, decode, acc,
+                                           mask, k, out_dtype)
             if len(cand) > k:
                 # keep every doc scoring >= the kth-largest score (ties
                 # included — a superset of the exact top-k, O(n)
@@ -519,8 +481,7 @@ def _segment_score_fn(
     return score_segment
 
 
-def _maxscore_query(terms, wmap, meta, get_decoded, decode_subset, acc,
-                    mask, k, f32=True):
+def _maxscore_query(terms, wmap, meta, decode, acc, mask, k, out_dtype):
     """MaxScore evaluation of one query over one segment.
 
     Dense-accumulate terms in descending upper-bound order; once the
@@ -529,21 +490,17 @@ def _maxscore_query(terms, wmap, meta, get_decoded, decode_subset, acc,
     remaining terms can no longer introduce new top-k docs — finish
     them with sorted lookups (searchsorted) restricted to the candidate
     set, decoding only candidate-overlapping blocks (block-max skip).
-    Final scores of emitted docs are exact; rank-identical to the
-    unpruned path (pinned by tests). ``mask`` is the segment-wide
-    touched-doc workspace (candidate collection = one O(doc-count)
-    flatnonzero scan, no per-term unique/sort); it is returned to
-    all-False before exit."""
-    if f32:
-        ubs = {
-            t: float(np.float32(wmap[t]) * np.float32(m[1].max()))
-            for t, m in ((t, meta[t]) for t in terms)
-        }
-    else:
-        ubs = {
-            t: float(wmap[t] * m[1].max())
-            for t, m in ((t, meta[t]) for t in terms)
-        }
+    Final scores of emitted docs are exact, and the top k equals a
+    dense recompute (pinned by ``tests/test_maxscore.py``).
+
+    A term's contribution is ``w * part`` in ``out_dtype`` (float32
+    for BM25, as Lucene multiplies floats), widened into the float64
+    accumulator by ``+=``. ``mask`` is the segment-wide touched-doc
+    workspace (candidate collection = one O(doc-count) flatnonzero
+    scan, no per-term unique/sort); it is returned to all-False before
+    exit."""
+    ws = {t: out_dtype(wmap[t]) for t in terms}
+    ubs = {t: float(ws[t] * meta[t][1].max()) for t in terms}
     # keep the caller's segment-independent order (weight desc, term):
     # the per-segment ubs feed the suffix-bound THRESHOLD math, which is
     # valid in any processing order; re-sorting by segment-local ubs
@@ -564,69 +521,58 @@ def _maxscore_query(terms, wmap, meta, get_decoded, decode_subset, acc,
                 if suffix[i - 1] < theta:
                     switch = i
                     break
-        idx, part = get_decoded(t)
-        if f32:
-            acc[idx] += (np.float32(wmap[t]) * part).astype(np.float32).astype(np.float64)
-        else:
-            acc[idx] += wmap[t] * part
+        idx, part = decode(t)
+        acc[idx] += (ws[t] * part).astype(out_dtype, copy=False)
         mask[idx] = True
     cand = np.flatnonzero(mask)
+    out = cand
     if switch < len(order):
         # candidates that cannot reach theta are dead: their final score
         # is < theta <= final kth score, so dropping them is exact
         rem_ub = suffix[switch - 1]
-        alive = acc[cand] + rem_ub >= theta
-        live = cand[alive]
-        if live.size:
-            lo, hi = int(live[0]), int(live[-1])
+        out = cand[acc[cand] + rem_ub >= theta]
+        if out.size:
+            lo, hi = int(out[0]), int(out[-1])
             for t in order[switch:]:
-                d, part = decode_subset(t, lo, hi)
+                d, part = decode(t, lo, hi)
                 if d.size == 0:
                     continue
-                pos = np.searchsorted(d, live)
+                pos = np.searchsorted(d, out)
                 pos_c = np.minimum(pos, d.size - 1)
-                hit = d[pos_c] == live
+                hit = d[pos_c] == out
                 hpos = pos_c[hit]
-                if f32:
-                    acc[live[hit]] += (
-                        (np.float32(wmap[t]) * part[hpos]).astype(np.float32)
-                    ).astype(np.float64)
-                else:
-                    acc[live[hit]] += wmap[t] * part[hpos]
-        out_dt = np.float32 if f32 else np.float64
-        scores = acc[live].astype(out_dt)
-        acc[cand] = 0.0
-        mask[cand] = False
-        return live, scores
-    scores = acc[cand].astype(np.float32 if f32 else np.float64)
+                acc[out[hit]] += (ws[t] * part[hpos]).astype(out_dtype,
+                                                             copy=False)
+    scores = acc[out].astype(out_dtype)
     acc[cand] = 0.0
     mask[cand] = False
-    return cand, scores
+    return out, scores
 
 
-def _search_blocks(
+def _score_blocks(
     index: InvertedIndex,
     weights: Dict[int, Dict[str, float]],
     k: int,
-    prune: bool,
     consts: Optional[Tuple[float, float, bool]],
     shape_fns: Optional[Dict[str, object]] = None,
-) -> DataFrame:
-    """The one Spark scoring driver: term-pruned ``blocks`` scan ->
-    per-segment kernel (``_segment_score_fn``) -> per-qid merge and
-    url order (``_finalize_arrays``). ``weights`` is qid -> term ->
+) -> Optional[DataFrame]:
+    """The scoring stage of ``_search_blocks``: term-pruned
+    ``blocks`` scan -> per-segment kernel (``_segment_score_fn``) ->
+    packed ``ARRAY_RESULT_SCHEMA`` hits, each segment's top k per qid
+    (docs tied at the kth score kept). ``weights`` is qid -> term ->
     query weight; ``consts`` feeds the float32 BM25 tf-part, or
-    ``shape_fns`` gives each term's float64 contribution instead."""
+    ``shape_fns`` gives each term's float64 contribution instead.
+    None when no query term has postings."""
     terms = sorted({t for wmap in weights.values() for t in wmap})
     if not terms:
-        return index.spark.createDataFrame([], RUN_SCHEMA)
+        return None
     seg_counts = {int(s): int(c) for s, c in index.stats["segments"].items()}
     # column-pruned: positional indexes carry pos_bin, which scoring
     # never reads — keep it out of the parquet scan
     blocks = index.blocks.select(
         "term", "segment", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin"
     ).filter(F.col("term").isin(terms))
-    fn = _segment_score_fn(weights, consts, seg_counts, k, prune,
+    fn = _segment_score_fn(weights, consts, seg_counts, k,
                            shape_fns=shape_fns,
                            dead_by_seg=index.dead_by_segment or None)
     # over-provision the group hash space for BATCH workloads: with
@@ -640,15 +586,28 @@ def _search_blocks(
     if len(weights) >= BATCH_REPARTITION_MIN_QUERIES:
         n_parts = min(512, 4 * max(1, len(seg_counts)))
         blocks = blocks.repartition(n_parts, "segment")
-    hits = blocks.groupBy("segment").applyInPandas(
+    return blocks.groupBy("segment").applyInPandas(
         fn, schema=ARRAY_RESULT_SCHEMA
     )
+
+
+def _search_blocks(
+    index: InvertedIndex,
+    weights: Dict[int, Dict[str, float]],
+    k: int,
+    consts: Optional[Tuple[float, float, bool]],
+    shape_fns: Optional[Dict[str, object]] = None,
+) -> DataFrame:
+    """The one Spark scoring driver: ``_score_blocks`` -> per-qid
+    merge and url order (``_finalize_arrays``)."""
+    hits = _score_blocks(index, weights, k, consts, shape_fns)
+    if hits is None:
+        return index.spark.createDataFrame([], RUN_SCHEMA)
     return _finalize_arrays(index, hits, k)
 
 
 def search_kernel(
     index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
-    prune: bool = True,
     boosts: Optional[Dict[int, Dict[str, float]]] = None,
     boosts_are_final: bool = False,
 ) -> DataFrame:
@@ -656,7 +615,7 @@ def search_kernel(
     ``_search_blocks``."""
     weights, scorer = _query_weights(index, queries, params, boosts,
                                      boosts_are_final)
-    return _search_blocks(index, weights, params.k, prune,
+    return _search_blocks(index, weights, params.k,
                           (scorer.cache1, scorer.cache2, params.lossy))
 
 

@@ -61,18 +61,3 @@ def quantize_length(dl) -> np.ndarray:
     shift = np.maximum(exp - 4, 0)
     return (dl >> shift) << shift
 
-
-def quantize_expr(col):
-    """The same roundtrip as a Spark Column expression over an
-    integral column: bit_length via length(bin(x)), then clear the
-    low bits. Whole-stage-codegen'd, no UDF."""
-    from pyspark.sql import functions as F
-
-    shift = F.greatest(F.length(F.bin(col)) - F.lit(4), F.lit(0))
-    # the SQL shiftright/shiftleft accept expression shift amounts;
-    # the typed python wrappers only take int literals
-    return F.call_function(
-        "shiftleft",
-        F.call_function("shiftright", col.cast("long"), shift),
-        shift,
-    )

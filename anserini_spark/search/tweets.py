@@ -12,72 +12,25 @@
   ``BREAK_SCORE_TIES_BY_TWEETID`` (`SearchCollection.java:117-119`),
   not the default (score desc, docid asc).
 
-Implemented as a declarative plan of its own (``_score_dataframe``):
-full-collection float32 BM25 over the live docvec postings, then the
-per-query id range filter on the candidate rows, BEFORE the top-k,
-then the tweet tie-break order. The filter is a plain comparison on a
+Scoring is the block kernel's scoring stage (``searcher._score_blocks``,
+float32 BM25, tombstones masked at decode) with k = the index's slot
+count: MaxScore never cuts and no per-segment top-k fires, so every
+matching live doc comes out. The packed hits are exploded, joined to
+the docmap, cut by the per-query id range (BEFORE the top-k), and
+ranked in the tweet tie order. The filter is a plain comparison on a
 numeric column, so at scale it is a pushed predicate, never a join.
-The tweet path keeps this plan instead of the block kernel: the filter
-must cut each query's candidates before top-k, and putting it in the
-kernel would make the kernel branch on this single caller.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from typing import Dict
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .searcher import RUN_SCHEMA, BM25Params, InvertedIndex, _query_weights
-from .smallfloat import quantize_expr
+from .searcher import (RUN_SCHEMA, BM25Params, InvertedIndex,
+                       _query_weights, _score_blocks)
 from .tieadjust import adjust_score_ties
-
-
-def _score_dataframe(
-    index: InvertedIndex, queries: Dict[int, str], params: BM25Params
-) -> Optional[DataFrame]:
-    """(qid, doc_id, score float32) for every matching live doc, no
-    ranking: explode docvec -> broadcast-join the query terms with
-    their float32 weights -> float32 contribution -> float64 sum per
-    (qid, doc_id), narrowed to float32. None when no query term has
-    postings."""
-    weights, scorer = _query_weights(index, queries, params)
-    rows = [
-        (qid, term, float(w))
-        for qid, wmap in weights.items()
-        for term, w in wmap.items()
-    ]
-    if not rows:
-        return None
-    qterms = index.spark.createDataFrame(rows, "qid int, term string, weight float")
-    postings = index.live_docvec.select(
-        "doc_id",
-        "doclen",
-        F.explode(F.arrays_zip("terms", "tfs")).alias("e"),
-    ).select(
-        F.col("e.terms").alias("term"),
-        "doc_id",
-        F.col("e.tfs").alias("tf"),
-        "doclen",
-    )
-    tf = F.col("tf").cast("float")
-    dl = (quantize_expr(F.col("doclen")) if params.lossy
-          else F.col("doclen")).cast("float")
-    contrib = (
-        F.col("weight")
-        * tf
-        / (tf + F.lit(float(scorer.cache1)).cast("float")
-           + F.lit(float(scorer.cache2)).cast("float") * dl)
-    )
-    return (
-        postings.join(F.broadcast(qterms), "term")
-        .withColumn("contrib", contrib.cast("float"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum(F.col("contrib").cast("double")).alias("score64"))
-        .withColumn("score", F.col("score64").cast("float"))
-        .drop("score64")
-    )
 
 
 def search_tweets(index: InvertedIndex, queries: Dict[int, str],
@@ -87,9 +40,15 @@ def search_tweets(index: InvertedIndex, queries: Dict[int, str],
     per-qid ``querytweettime`` range filter and the (score desc,
     id_long desc) tie order. ``docid`` stays the string column the
     run-file sinks expect; ``id_long`` is its numeric value."""
-    hits = _score_dataframe(index, queries, params)
-    if hits is None:
+    weights, scorer = _query_weights(index, queries, params)
+    slots = sum(int(c) for c in index.stats["segments"].values())
+    packed = _score_blocks(index, weights, slots,
+                           (scorer.cache1, scorer.cache2, params.lossy))
+    if packed is None:
         return index.spark.createDataFrame([], RUN_SCHEMA)
+    hits = packed.select(
+        "qid", F.posexplode("doc_id").alias("i", "doc_id"), "score"
+    ).select("qid", "doc_id", F.col("score")[F.col("i")].alias("score"))
     times = index.spark.createDataFrame(
         [(int(q), int(t)) for q, t in tweet_times.items()],
         "qid int, tweet_time long")

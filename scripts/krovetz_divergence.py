@@ -139,8 +139,7 @@ def main() -> None:
 
     from anserini_spark.session import get_spark
 
-    spark = get_spark(app="krovetz-div", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app="krovetz-div", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     report = measure(spark, topics_limit=args.topics, k=args.k)
     print(json.dumps(report))

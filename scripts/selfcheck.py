@@ -40,7 +40,7 @@ def norm_rows(cols, rows):
 
 
 def main(sf_dir: str):
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

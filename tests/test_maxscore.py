@@ -1,9 +1,9 @@
-"""MaxScore/block-max pruned kernel vs brute-force dense scoring —
+"""MaxScore/block-max pruned kernel vs a dense numpy recompute —
 property-style randomized identity test, no Spark session (drives
-``_segment_score_fn`` directly on encoded blocks)."""
+``_segment_score_fn`` directly on encoded blocks). float32 scores
+must match exactly."""
 
 import numpy as np
-import pandas as pd
 
 from anserini_spark.index.blocks import encode_blocks
 from anserini_spark.search.searcher import _segment_score_fn
@@ -29,26 +29,43 @@ def _mk_segment(rng, n_docs, terms, zipf_df):
     return bl, rows
 
 
-def _run(fn_prune, fn_dense, pdf, k):
-    a = fn_prune(pdf.copy())
-    b = fn_dense(pdf.copy())
+def _kernel_topk(fn, pdf, k):
+    """Run the kernel on one segment's blocks; the kernel emits packed
+    per-qid arrays (possibly a superset of the top-k when scores tie
+    at the kth boundary): explode, apply the deterministic (score
+    desc, doc asc) order, cut to k."""
+    out = {}
+    for _, row in fn(pdf.copy()).iterrows():
+        out.setdefault(int(row["qid"]), []).extend(
+            (int(d), float(np.float32(s)))
+            for d, s in zip(row["doc_id"], row["score"])
+        )
+    return {qid: sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
+            for qid, pairs in out.items()}
 
-    def norm(df):
-        # kernel emits packed per-qid arrays (possibly a superset of
-        # the top-k when scores tie at the kth boundary); explode,
-        # apply the deterministic (score desc, doc asc) order, cut to k
-        out = {}
-        for _, row in df.iterrows():
-            out.setdefault(int(row["qid"]), []).extend(
-                (int(d), float(np.float32(s)))
-                for d, s in zip(row["doc_id"], row["score"])
-            )
-        return {
-            qid: sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
-            for qid, pairs in out.items()
-        }
 
-    return norm(a), norm(b)
+def _dense_topk(rows, weights, c1, c2, k):
+    """Dense float32 BM25 over every posting, no pruning: each term's
+    contribution ``w * part``, with ``part = tf / (tf + c1 + c2 * dl)``,
+    both in float32, is added into a float64 per-doc sum in the
+    kernel's (weight desc, term) order, then narrowed to float32."""
+    by_term = {}
+    for t, _seg, d, tf, dl in rows:
+        by_term.setdefault(t, []).append((d, tf, dl))
+    out = {}
+    for qid, wmap in weights.items():
+        acc = {}
+        for t in sorted(wmap, key=lambda t: (-float(wmap[t]), t)):
+            post = np.array(by_term[t], dtype=np.int64)
+            tf = post[:, 1].astype(np.float32)
+            dl = post[:, 2].astype(np.float32)
+            part = tf / (tf + np.float32(c1) + np.float32(c2) * dl)
+            contrib = np.float32(wmap[t]) * part
+            for d, c in zip(post[:, 0], contrib):
+                acc[int(d)] = acc.get(int(d), 0.0) + float(c)
+        pairs = [(d, float(np.float32(s))) for d, s in acc.items()]
+        out[qid] = sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
+    return out
 
 
 def test_maxscore_identical_to_dense():
@@ -57,7 +74,7 @@ def test_maxscore_identical_to_dense():
     terms = [f"t{i}" for i in range(12)]
     zipf_df = [0.6, 0.4, 0.25, 0.15, 0.1, 0.06, 0.04, 0.02, 0.01,
                0.005, 0.002, 0.0005]
-    bl, _ = _mk_segment(rng, n_docs, terms, zipf_df)
+    bl, rows = _mk_segment(rng, n_docs, terms, zipf_df)
     weights = {}
     for qid in range(1, 21):
         qterms = rng.choice(len(terms), rng.integers(1, 6), replace=False)
@@ -68,9 +85,9 @@ def test_maxscore_identical_to_dense():
         }
     seg_counts = {0: n_docs}
     for k in (5, 50, 1000):
-        fn_p = _segment_score_fn(weights, (0.54, 0.0036, False), seg_counts, k, True)
-        fn_d = _segment_score_fn(weights, (0.54, 0.0036, False), seg_counts, k, False)
-        got, want = _run(fn_p, fn_d, bl, k)
+        fn = _segment_score_fn(weights, (0.54, 0.0036, False), seg_counts, k)
+        got = _kernel_topk(fn, bl, k)
+        want = _dense_topk(rows, weights, 0.54, 0.0036, k)
         assert got.keys() == want.keys()
         for qid in want:
             assert got[qid] == want[qid], f"qid {qid} k={k}"
@@ -78,9 +95,8 @@ def test_maxscore_identical_to_dense():
 
 def test_maxscore_single_term_and_tiny_k():
     rng = np.random.default_rng(5)
-    bl, _ = _mk_segment(rng, 500, ["only"], [0.5])
+    bl, rows = _mk_segment(rng, 500, ["only"], [0.5])
     weights = {1: {"only": np.float32(2.0)}}
-    fn_p = _segment_score_fn(weights, (0.54, 0.004, False), {0: 500}, 1, True)
-    fn_d = _segment_score_fn(weights, (0.54, 0.004, False), {0: 500}, 1, False)
-    got, want = _run(fn_p, fn_d, bl, 1)
-    assert got == want
+    fn = _segment_score_fn(weights, (0.54, 0.004, False), {0: 500}, 1)
+    assert _kernel_topk(fn, bl, 1) == _dense_topk(rows, weights, 0.54,
+                                                  0.004, 1)

@@ -19,6 +19,7 @@ from anserini_spark.search.sdm import (
     search_sdm,
 )
 from anserini_spark.search.searcher import InvertedIndex
+from tests.runcheck import assert_matches_brute_exactly
 
 QUERIES = {1: "spark merge join", 2: "customer value", 3: "scan"}
 
@@ -48,7 +49,11 @@ def test_analyze_with_positions_gaps():
     assert tp == [("quick", 1), ("dog", 2)]
 
 
-def _brute_sdm(docs, queries, k=20):
+def _brute_sdm(docs, queries, k=20, dead=frozenset()):
+    """qid -> [(url, rank, float64 score)] by the documented SDM
+    semantics. ``dead`` urls are tombstoned: they never match, unigram
+    df/N/avgdl stay stale (they count every doc, Lucene's delete
+    contract), pair dfs count live docs only."""
     tf, dl, dfreq, pos = {}, {}, Counter(), {}
     for url, text in docs.items():
         toks = analyze(text)
@@ -63,6 +68,7 @@ def _brute_sdm(docs, queries, k=20):
     n = sum(1 for v in dl.values() if v > 0)
     avgdl = sum(dl.values()) / n
     k1, b = 0.9, 0.4
+    live = [url for url in docs if url not in dead]
 
     def idf(d):
         return math.log(1 + (n - d + 0.5) / (d + 0.5))
@@ -77,7 +83,7 @@ def _brute_sdm(docs, queries, k=20):
         # pair counts per doc
         o_counts, u_counts = defaultdict(dict), defaultdict(dict)
         for pi, (a, bterm) in enumerate(pairs):
-            for url in docs:
+            for url in live:
                 pa, pb = pos[url].get(a, []), pos[url].get(bterm, [])
                 o = sum(1 for p in pa for q in pb
                         if 1 <= q - p <= ORDERED_MAX_DIST)
@@ -91,7 +97,7 @@ def _brute_sdm(docs, queries, k=20):
         df_u = {pi: sum(1 for v in u_counts[pi].values() if v > 0)
                 for pi in u_counts}
         scores = defaultdict(float)
-        for url in docs:
+        for url in live:
             s = 0.0
             for t in toks:
                 f = tf[url].get(t)
@@ -107,7 +113,7 @@ def _brute_sdm(docs, queries, k=20):
             if s > 0:
                 scores[url] = s
         hits = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
-        out[qid] = [(u, r + 1) for r, (u, _) in enumerate(hits)]
+        out[qid] = [(u, r + 1, s) for r, (u, s) in enumerate(hits)]
     return out
 
 
@@ -118,7 +124,7 @@ def test_sdm_matches_bruteforce(spark, pos_index, tiny_docs):
         got.setdefault(r["qid"], []).append((r["docid"], r["rank"]))
     want = _brute_sdm(tiny_docs, QUERIES)
     for qid in QUERIES:
-        assert got.get(qid, []) == want.get(qid, []), qid
+        assert got.get(qid, []) == [h[:2] for h in want.get(qid, [])], qid
 
 
 def test_sdm_requires_positions(spark, tiny_index):
@@ -127,21 +133,15 @@ def test_sdm_requires_positions(spark, tiny_index):
         search_sdm(idx, {1: "spark join"}, BM25Params(k=5))
 
 
-def test_sdm_kernel_matches_dataframe(spark, pos_index):
-    """Rank+score identity between the positional-blocks kernel engine
-    and the declarative oracle path."""
+def test_sdm_kernel_matches_dataframe(spark, pos_index, tiny_docs):
+    """Rank and score identity between the positional-blocks kernel
+    and the brute-force recompute, incl. a duplicated query term (bag
+    boost) and a same-term pair."""
     idx = InvertedIndex(spark, pos_index)
-    p = BM25Params(k=25)
     q = dict(QUERIES)
     q[4] = "spark spark merge"  # duplicate-term bag boost + same-term pair
-
-    def rows(df):
-        return [(r["qid"], r["docid"], r["rank"],
-                 round(float(r["score"]), 9)) for r in df.collect()]
-
-    kern = rows(search_sdm(idx, q, p, engine="kernel"))
-    dfrm = rows(search_sdm(idx, q, p, engine="dataframe"))
-    assert kern == dfrm
+    assert_matches_brute_exactly(search_sdm(idx, q, BM25Params(k=25)),
+                                 _brute_sdm(tiny_docs, q, k=25), q)
 
 
 def test_sdm_kernel_plan_is_term_pruned(spark, pos_index):

@@ -1,13 +1,11 @@
 """SmallFloat byte4 lossy-norm mode — the reference's DEFAULT BM25
 (`util/ExtractDocumentLengths.java:85-93`; Lucene BM25Similarity's
-1-byte norm). Pins: the encode/decode algorithm, the vectorized and
-Spark-expression variants, and a golden corpus where the exact and
-lossy modes produce DIFFERENT rankings (so the mode is actually
-exercised, not a no-op)."""
+1-byte norm). Pins: the encode/decode algorithm, its vectorized
+variant, and a golden corpus where the exact and lossy modes produce
+DIFFERENT rankings (so the mode is actually exercised, not a no-op)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from anserini_spark.index.build import IndexConfig, build_index
 from anserini_spark.search.bm25 import BM25Params
@@ -16,7 +14,6 @@ from anserini_spark.search.searcher import InvertedIndex, search_kernel
 from anserini_spark.search.smallfloat import (
     byte4_to_int,
     int_to_byte4,
-    quantize_expr,
     quantize_length,
 )
 
@@ -45,16 +42,6 @@ def test_byte4_monotone_and_vectorized():
     assert np.all(np.diff(q) >= 0)  # monotone -> block-max bound valid
     for i in (0, 1, 7, 8, 127, 128, 999, 99999):
         assert int(q[i]) == byte4_to_int(int_to_byte4(i))
-
-
-def test_quantize_expr_matches_scalar(spark):
-    df = (
-        spark.range(0, 3000)
-        .select(F.col("id").alias("dl"))
-        .withColumn("q", quantize_expr(F.col("dl")))
-    )
-    for r in df.collect():
-        assert r["q"] == byte4_to_int(int_to_byte4(r["dl"])), r["dl"]
 
 
 @pytest.fixture(scope="module")

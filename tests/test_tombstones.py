@@ -1,7 +1,7 @@
 """Tombstones (`index/tombstones.py`) — Lucene liveDocs semantics:
 
 * deleted docs vanish from every result list (kernel, similarity,
-  impact, SDM, boolean, LocalSearcher, multislice);
+  impact, SDM, boolean, tweet search, LocalSearcher, multislice);
 * surviving docs keep their EXACT pre-delete scores (stats stay stale
   until a merge purges — Lucene-identical);
 * a purging merge physically drops the docs and recomputes stats, so
@@ -20,6 +20,8 @@ from anserini_spark.index.tombstones import add_tombstones
 from anserini_spark.search.bm25 import BM25Params
 from anserini_spark.search.searcher import (InvertedIndex, SimpleSearcher,
                                             search_kernel)
+from tests.runcheck import assert_matches_brute_exactly
+from tests.test_sdm import _brute_sdm
 
 Q = "spark merge join"
 
@@ -99,10 +101,10 @@ def test_local_searcher_consults_tombstones(spark, tombed):
     assert got == want
 
 
-def test_sdm_consults_tombstones_both_engines(spark, tmp_path):
-    """SDM liveDocs: deleted docs vanish, kernel == dataframe engine
-    under tombstones (decode-time mask vs live-docvec anti-join;
-    unigram idf stale in both, pair window dfs live in both)."""
+def test_sdm_consults_tombstones_both_engines(spark, tmp_path, tiny_docs):
+    """SDM liveDocs: deleted docs vanish and the kernel's decode-time
+    mask equals the brute-force recompute over the same deletes
+    (unigram idf stale, pair window dfs over live docs)."""
     from anserini_spark.search.sdm import search_sdm
 
     corpus = web_corpus(spark, "/root/testdata/sf0.001")
@@ -115,10 +117,10 @@ def test_sdm_consults_tombstones_both_engines(spark, tmp_path):
     dead = [before[0][1], before[3][1]]
     add_tombstones(spark, d, dead)
     idx2 = InvertedIndex(spark, d)
-    kern = _rows(search_sdm(idx2, {1: Q}, BM25Params(k=10)))
-    assert not set(dead) & {u for _, u, _, _ in kern}
-    assert kern == _rows(search_sdm(idx2, {1: Q}, BM25Params(k=10),
-                                    engine="dataframe"))
+    kern = search_sdm(idx2, {1: Q}, BM25Params(k=10))
+    assert not set(dead) & {u for _, u, _, _ in _rows(kern)}
+    assert_matches_brute_exactly(
+        kern, _brute_sdm(tiny_docs, {1: Q}, k=10, dead=set(dead)), [1])
 
 
 def test_merge_purges_scores_match_fresh_build(spark, tombed):
@@ -211,10 +213,10 @@ def test_impact_index_consults_tombstones(spark, tmp_path):
     assert "d007" not in got and got[0] == "d006", got
 
 
-def test_sdm_over_tombstoned_positional_slices(spark, tmp_path):
+def test_sdm_over_tombstoned_positional_slices(spark, tmp_path, tiny_docs):
     """The full stack at once: positional slices, searched unmerged,
-    with per-slice tombstones — SDM must exclude dead docs and agree
-    with the declarative engine over the same union."""
+    with per-slice tombstones — SDM must exclude dead docs and equal
+    the brute-force recompute over the union corpus."""
     from anserini_spark.search.multislice import MultiSliceIndex
     from anserini_spark.search.sdm import search_sdm
 
@@ -233,10 +235,39 @@ def test_sdm_over_tombstoned_positional_slices(spark, tmp_path):
     for d in dirs:
         add_tombstones(spark, d, dead)
     mi2 = MultiSliceIndex(spark, dirs)
-    kern = _rows(search_sdm(mi2, {1: Q}, BM25Params(k=10)))
-    assert not set(dead) & {u for _, u, _, _ in kern}
-    assert kern == _rows(search_sdm(mi2, {1: Q}, BM25Params(k=10),
-                                    engine="dataframe"))
+    kern = search_sdm(mi2, {1: Q}, BM25Params(k=10))
+    assert not set(dead) & {u for _, u, _, _ in _rows(kern)}
+    assert_matches_brute_exactly(
+        kern, _brute_sdm(tiny_docs, {1: Q}, k=10, dead=set(dead)), [1])
+
+
+def test_tweet_search_consults_tombstones(spark, tmp_path):
+    """Tweet search masks a tombstoned tweet at decode; the other
+    tweets keep their exact scores (stats stay stale)."""
+    from anserini_spark.search.tweets import search_tweets
+
+    corpus = spark.createDataFrame(
+        [("100", "spark is fast", "en"),
+         ("200", "spark spark join", "en"),
+         ("300", "spark rocks @dev and more", "en"),
+         ("400", "nothing to see", "en")],
+        "url string, text string, lang string")
+    d = str(tmp_path / "tweet_idx")
+    build_index(spark, corpus, IndexConfig(out_dir=d, analyzer="tweet",
+                                           doc_partitions=2,
+                                           block_partitions=2))
+
+    def scores():
+        hits = search_tweets(InvertedIndex(spark, d), {1: "spark"},
+                             {1: 10**18}, BM25Params(k=10))
+        return {r["docid"]: r["score"] for r in hits.collect()}
+
+    before = scores()
+    assert set(before) == {"100", "200", "300"}
+    add_tombstones(spark, d, ["200"])
+    after = scores()
+    assert "200" not in after
+    assert after == {u: s for u, s in before.items() if u != "200"}
 
 
 def test_rm3_excludes_tombstoned_docs(spark, tombed):

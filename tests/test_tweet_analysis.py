@@ -126,3 +126,36 @@ def test_tweet_search_range_and_tiebreak(spark, tweet_idx):
     assert sall["500"] > sall["300"]
     for d in s450:
         assert s450[d] == sall[d]
+
+
+def test_tweet_search_plan_is_term_pruned(spark, tweet_idx):
+    """Tweet search scores through the term-pruned block kernel: the
+    executed plan scans ``blocks`` and explodes no docvec postings."""
+    from anserini_spark.search.searcher import BM25Params, InvertedIndex
+    from anserini_spark.search.tweets import search_tweets
+
+    idx = InvertedIndex(spark, tweet_idx)
+    plan = (search_tweets(idx, {1: "spark"}, {1: 450}, BM25Params(k=5))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "blocks" in plan
+    assert "arrays_zip" not in plan  # no docvec posting explode
+
+
+def test_tweet_search_scores_equal_kernel(spark, tweet_idx):
+    """With no id cut-off and no score ties, tweet search returns
+    exactly ``search_kernel``'s (docid, score) list: one BM25
+    arithmetic."""
+    from anserini_spark.search.searcher import (BM25Params, InvertedIndex,
+                                                search_kernel)
+    from anserini_spark.search.tweets import search_tweets
+
+    idx = InvertedIndex(spark, tweet_idx)
+    q = {1: "@dev future nothing"}  # three docs, three doclens
+    p = BM25Params(k=10)
+    tweets = [(r["docid"], r["score"]) for r in
+              search_tweets(idx, q, {1: 10**18}, p).collect()]
+    kern = [(r["docid"], r["score"]) for r in
+            search_kernel(idx, q, p).collect()]
+    assert len(tweets) == 3
+    assert len({s for _, s in tweets}) == 3  # no ties to order apart
+    assert tweets == kern
