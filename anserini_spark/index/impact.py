@@ -129,7 +129,7 @@ def search_impact(
     term-pruned block kernel: the tf slot carries the quantized
     activation, so the shape is tf/scale and MaxScore's block max_tf
     bound applies unchanged."""
-    from ..search.searcher import _search_blocks
+    from ..search.searcher import _search_blocks, run_frame
 
     p = precision
     if p is None:
@@ -144,5 +144,5 @@ def search_impact(
               for qid, m in queries.items()}
     boosts = {qid: m for qid, m in boosts.items() if m}
     shape_fns = {t: _shape for m in boosts.values() for t in m}
-    return _search_blocks(index, boosts, k, consts=None,
-                          shape_fns=shape_fns)
+    return run_frame(index.spark, _search_blocks(
+        index, boosts, k, consts=None, shape_fns=shape_fns))

@@ -130,19 +130,7 @@ def _bm25_topk_with(spark: SparkSession, sf_dir: str, k1: float,
     one aggregate over the cached tf table. The round-6 plan tokenized
     the corpus twice (tf + dl scans), cached both, and joined dl back
     into the scored stream."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias(
-            "toks"),
-    )
-    tf = (
-        d.select("doc_id", F.size("toks").alias("doclen"),
-                 F.explode("toks").alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("doc_id", "doclen", "term")
-        .agg(F.count("*").alias("tf"))
-        .persist()
-    )
+    tf = _tf_table(spark, sf_dir)
     q = spark.createDataFrame(FIXED_QUERIES, "qid int, term string")
     # n docs = distinct doc_id; sum of tf over all rows = sum(doclen):
     # same integers the old dl-side aggregate produced
@@ -184,6 +172,40 @@ def _bm25_topk_with(spark: SparkSession, sf_dir: str, k1: float,
         .filter(F.col("rank") <= TOPK)
         .select("qid", "doc_id", "rank", F.round("score", 4).alias("score"))
     )
+
+
+# sf_dir -> (source digest, persisted tf table). Spark's cache matches
+# a new plan to a cached one by path, so a rewritten documents table
+# must release the old entry before its own table is persisted.
+_TF_TABLES: dict[str, tuple[str, DataFrame]] = {}
+
+
+def _tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, doclen, term, tf) over the documents, persisted and
+    reused while ``_src_digest`` of the source is unchanged."""
+    from .index_queries import _src_digest
+
+    digest = _src_digest(sf_dir)
+    hit = _TF_TABLES.get(sf_dir)
+    if hit is not None and hit[1].sparkSession is spark:
+        if hit[0] == digest:
+            return hit[1]
+        hit[1].unpersist()
+    d = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias(
+            "toks"),
+    )
+    tf = (
+        d.select("doc_id", F.size("toks").alias("doclen"),
+                 F.explode("toks").alias("term"))
+        .filter(F.col("term") != "")
+        .groupBy("doc_id", "doclen", "term")
+        .agg(F.count("*").alias("tf"))
+        .persist()
+    )
+    _TF_TABLES[sf_dir] = (digest, tf)
+    return tf
 
 
 def doclen_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -194,10 +194,8 @@ def search_background_linking(
     if boosts_all:
         hits_df = search_kernel(index, {k: "" for k in boosts_all},
                                 params, boosts=boosts_all)
-        for r in hits_df.collect():
+        for r in hits_df.collect():  # in (qid, rank) order
             by_key.setdefault(r["qid"], []).append(r)
-        for rows in by_key.values():
-            rows.sort(key=lambda r: r["rank"])
 
     # ---- batched candidate-vector fetch: one isin-pruned scan for
     # ALL topics' candidates (round-6: one scan per topic)

@@ -18,8 +18,9 @@ A query reads three columnar views of the index:
   ``bytes``;
 - the dictionary as sorted (term, df) arrays: df lookup is a
   searchsorted;
-- doc urls keyed by accumulator slot, with each url's rank in url
-  order, so the final (score desc, url asc) order is one ``np.lexsort``.
+- doc urls keyed by accumulator slot (``tieadjust.Urls``), with each
+  url's rank in url order, so the final (score desc, url asc) order is
+  one ``np.lexsort``.
 
 Serving mode (``preload=True``, the latency-bench configuration and
 the honest analogue of Lucene's warm mmap) builds the three views once
@@ -30,10 +31,9 @@ scoring and ordering are the same code in both modes.
 
 Scoring is one dense float64 accumulator over the whole index
 (segments are dense id ranges: global slot = seg_offset[segment] +
-row), one vectorized update per query term in sorted term order. Top-k
-selects every candidate tied at the kth score, then applies the
-(score desc, url asc) order and the ScoreTiesAdjuster rounding,
-exactly like the distributed engine.
+row), one vectorized update per query term in sorted term order. The
+final order and tie rounding are ``tieadjust.rank_hits``, the same
+function the distributed engine's driver tail calls.
 """
 
 from __future__ import annotations
@@ -52,6 +52,7 @@ from ..index.blocks import binary_buffers, decode_block_range
 from ..index.build import SEG_SHIFT
 from ..index.tombstones import drop_dead
 from .bm25 import BM25Params, BM25Scorer, tf_part
+from .tieadjust import Hit, Urls, rank_hits
 
 _BLOCK_COLS = ["term", "segment", "first_doc", "last_doc", "n",
                "docs_bin", "tfs_bin", "dls_bin"]
@@ -112,20 +113,6 @@ class _Dictionary:
         pos = np.minimum(np.searchsorted(self.terms, q), len(self.terms) - 1)
         hit = self.terms[pos] == q
         return {t: int(df) for t, df in zip(q[hit], self.dfs[pos[hit]])}
-
-
-class _Urls:
-    """Doc urls in accumulator-slot order, plus each url's rank in url
-    order (Arrow's stable byte-wise sort: UTF-8 byte order is code-point
-    order, the order Python compares ``str`` in)."""
-
-    def __init__(self, slots: np.ndarray, urls: pa.Array):
-        order = np.argsort(slots, kind="stable")
-        self.slots = slots[order]
-        self.urls = urls.take(pa.array(order))
-        self.rank = np.empty(len(order), dtype=np.int64)
-        self.rank[pc.sort_indices(self.urls).to_numpy()] = np.arange(
-            len(order))
 
 
 class LocalSearcher:
@@ -189,7 +176,7 @@ class LocalSearcher:
                 )
                 self._dead_slots = np.sort(self._slots(
                     t["doc_id"].to_numpy().astype(np.int64)))
-        self._pre: Optional[Tuple[_BlockRuns, _Dictionary, _Urls]] = None
+        self._pre: Optional[Tuple[_BlockRuns, _Dictionary, Urls]] = None
         if preload:
             self._pre = (self._block_runs(None), self._dictionary(None),
                          self._urls(None))
@@ -207,13 +194,13 @@ class LocalSearcher:
             return self._pre[1]
         return _Dictionary(_read(self._dict, ["term", "df"], "term", terms))
 
-    def _urls(self, slots: Optional[np.ndarray]) -> _Urls:
+    def _urls(self, slots: Optional[np.ndarray]) -> Urls:
         if self._pre is not None:
             return self._pre[2]
         ids = None if slots is None else self._unslot(slots).tolist()
         t = _read(self._docvec, ["doc_id", "url"], "doc_id", ids)
-        return _Urls(self._slots(t["doc_id"].to_numpy().astype(np.int64)),
-                     t["url"].combine_chunks())
+        return Urls(self._slots(t["doc_id"].to_numpy().astype(np.int64)),
+                    t["url"].combine_chunks())
 
     def set_bm25(self, k1: float, b: float) -> None:
         self.params = BM25Params(k1=k1, b=b, k=self.params.k,
@@ -234,7 +221,7 @@ class LocalSearcher:
         return (self._seg_ids[idx] << SEG_SHIFT) + (
             slots - self._seg_bounds[idx])
 
-    def search(self, query: str, k: int = 10) -> List[Tuple[str, int, float]]:
+    def search(self, query: str, k: int = 10) -> List[Hit]:
         """Returns [(url, rank, tie-adjusted score)] — same semantics
         as the distributed engine (float32 BM25, url tie-break,
         ScoreTiesAdjuster rounding)."""
@@ -276,28 +263,7 @@ class LocalSearcher:
         keep = drop_dead(cand, self._dead_slots)
         if keep is not None:
             cand, scores = cand[keep], scores[keep]
-        if len(cand) > k:
-            # keep everything tied at the kth score, then url-order
-            kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-            keep = scores >= kth
-            cand, scores = cand[keep], scores[keep]
-        if not len(cand):
-            return []
-        urls = self._urls(cand)
-        pos = np.searchsorted(urls.slots, cand)
-        order = np.lexsort((urls.rank[pos], -scores))[:k]
-        names = urls.urls.take(pa.array(pos[order])).to_pylist()
-        # tie adjustment (ScoreTiesAdjusterReranker.java:36-73): Python
-        # round() per emitted score (np.round is not bit-identical), then
-        # each score steps down 1e-6 per earlier equal rounded score
-        r = np.array([round(s, 4) for s in scores[order].tolist()])
-        pos_in_run = np.arange(len(r))
-        run_start = np.ones(len(r), dtype=bool)
-        run_start[1:] = r[1:] != r[:-1]
-        dup = pos_in_run - np.maximum.accumulate(
-            np.where(run_start, pos_in_run, 0))
-        return list(zip(names, range(1, len(r) + 1),
-                        (r - dup * 1e-6).tolist()))
+        return rank_hits(cand, scores, self._urls, k)
 
     def batch_search(self, queries: Dict[int, str], k: int = 10):
         return {qid: self.search(q, k) for qid, q in queries.items()}

@@ -47,6 +47,9 @@ from __future__ import annotations
 from functools import reduce
 from typing import Dict, Iterable, List, Sequence, Tuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -205,3 +208,18 @@ class MultiSliceIndex(InvertedIndex):
                 d0, c0 = out.get(t, (0, 0))
                 out[t] = (d0 + df_, c0 + cf_)
         return out
+
+    def urls(self, doc_ids: np.ndarray) -> pa.Table:
+        """Split the ids by slice offset and ask each slice (its ids
+        are the union's minus ``offset << SEG_SHIFT``)."""
+        ids = np.asarray(doc_ids, dtype=np.int64)
+        seg = ids >> SEG_SHIFT
+        parts = []
+        for s, lo, hi in zip(self.slices, self.offsets,
+                             self.offsets[1:] + [np.inf]):
+            sh = lo << SEG_SHIFT
+            t = s.urls(ids[(seg >= lo) & (seg < hi)] - sh)
+            # a fresh schema: slices may differ in url nullability
+            parts.append(pa.table({"doc_id": pc.add(t["doc_id"], sh),
+                                   "url": t["url"]}))
+        return pa.concat_tables(parts)

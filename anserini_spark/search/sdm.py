@@ -31,8 +31,10 @@ term-pruned at the parquet scan and decoded per segment in one Arrow
 kernel that emits per-doc bag contributions and per-pair
 ordered/unordered window counts; pair document frequencies and final
 scoring stay declarative (global exact dfs need a cross-segment
-aggregation anyway), and the tail is ``searcher._finalize``. No
-full-corpus scan. Tombstoned docs are masked at decode: unigram idf
+aggregation anyway), pruned per qid by ``rank() <= k``. The survivors
+come to the driver, which attaches urls, orders and tie-adjusts them
+through the tail every kernel search shares (``searcher.rank_runs``).
+No full-corpus scan. Tombstoned docs are masked at decode: unigram idf
 stays stale (dictionary df, Lucene's delete contract) while pair dfs
 count live docs only. The tests hold it to a brute-force Python
 recompute (``tests/test_sdm.py``) and the gates to the DuckDB
@@ -43,11 +45,11 @@ from __future__ import annotations
 
 from typing import Dict
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .bm25 import BM25Params
-from .searcher import RUN_SCHEMA, InvertedIndex
+from .searcher import InvertedIndex, rank_runs, run_frame
 
 W_TERM = 0.85
 W_ORDERED = 0.1
@@ -188,7 +190,7 @@ def search_sdm(index: InvertedIndex, queries: Dict[int, str],
     per_q = {qid: index.analyze_query(t) for qid, t in queries.items()}
     all_terms = sorted({t for toks in per_q.values() for t in toks})
     if not all_terms:
-        return spark.createDataFrame([], RUN_SCHEMA)
+        return run_frame(spark, {})
     dfs = index.term_dfs(all_terms)
     import math
 
@@ -214,7 +216,8 @@ def search_sdm(index: InvertedIndex, queries: Dict[int, str],
         dead_global=dead if len(dead) else None)
     # three consumers (bag agg, pair dfs, pair scores): persist the
     # kernel output or the positional decode + O(positions^2) window
-    # counting re-runs once per consumer (round 7, guide §1.2)
+    # counting re-runs once per consumer (round 7, guide §1.2); released
+    # once the survivors are on the driver
     rows = (
         blocks.filter(F.col("term").isin(all_terms))
         .groupBy("segment")
@@ -264,11 +267,14 @@ def search_sdm(index: InvertedIndex, queries: Dict[int, str],
                     F.col("score") + F.coalesce(F.col("pairs"), F.lit(0.0)))
         .select("qid", "doc_id", "score")
     )
-    # two-phase merge (searcher._finalize): rank-prune on the narrow
-    # (qid, doc_id, score) rows first — rank() keeps kth-score ties so
-    # the url tie-break stays exact — then broadcast the bounded
-    # survivors into a streamed docmap scan; the round-6 tail joined
-    # the FULL matching-doc stream with docmap before any pruning
-    from .searcher import _finalize
-
-    return _finalize(index, score_df, params.k)
+    # rank() <= k, not row_number(): docs tied at the kth score survive,
+    # so the driver tail's url tie-break stays exact
+    w = Window.partitionBy("qid").orderBy(F.desc("score"))
+    try:
+        t = (score_df.withColumn("r0", F.rank().over(w))
+             .filter(F.col("r0") <= params.k).drop("r0").toArrow())
+    finally:
+        rows.unpersist()
+    return run_frame(spark, rank_runs(index, t["qid"].to_numpy(),
+                                      t["doc_id"].to_numpy(),
+                                      t["score"].to_numpy(), params.k))

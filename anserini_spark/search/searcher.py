@@ -6,20 +6,24 @@ are pruned at the parquet scan (``term IN`` pushdown on
 term-range-sorted files), grouped by segment, and scored inside one
 Arrow kernel per segment: vectorized varint decode (once per term,
 shared across the whole query batch), term-at-a-time accumulation into
-a dense per-segment array with MaxScore/block-max pruning, per-segment
-top-k, then a tiny shuffle merges per-segment top-k by (score desc,
-url asc) exactly like Lucene's BREAK_SCORE_TIES_BY_DOCID collector
-(`SearchCollection.java:115-116`).
+a dense per-segment array with MaxScore/block-max pruning, and a
+per-segment top k. That scan and kernel (``_score_blocks``) are a
+search's one Spark job; its packed hits, |segments| rows per qid, come
+to the driver through ``toArrow()``. There ``rank_runs`` keeps each
+qid's docs scoring at or above the kth score, reads only their urls
+(``InvertedIndex.urls``), and orders by (score desc, url asc) — Lucene's
+BREAK_SCORE_TIES_BY_DOCID (`SearchCollection.java:115-116`) — and
+tie-adjusts through ``tieadjust.rank_hits``, the tail ``LocalSearcher``
+calls too.
 
-``_search_blocks`` is that driver: ``_score_blocks`` (the scan and
-the per-segment kernel) then ``_finalize_arrays`` (the per-qid merge
-and url order). BM25 (``search_kernel``), the pluggable similarities
-(`kernel_sim.py`) and impact search (`index/impact.py`) differ only
-in the per-term weights and the per-posting contribution they hand
-it: the float32 BM25 tf-part (``bm25.tf_part``) or a float64 shape
-function. Tweet search (`tweets.py`) takes ``_score_blocks``' hits
-and applies its own id filter and tie order. The references the
-tests hold it to are ``oracle.py`` and the DuckDB SQL oracles.
+BM25 (``kernel_runs``), the pluggable similarities (`kernel_sim.py`)
+and impact search (`index/impact.py`) differ only in the per-term
+weights and the per-posting contribution they hand ``_search_blocks``:
+the float32 BM25 tf-part (``bm25.tf_part``) or a float64 shape
+function. The DataFrame entry points wrap its driver runs with
+``run_frame``. Tweet search (`tweets.py`) takes ``_score_blocks``'
+hits and applies its own id filter and tie order. The tests hold it
+to ``oracle.py`` and the DuckDB SQL oracles.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
 to float32 at the end — Lucene's DisjunctionSumScorer likewise sums
@@ -37,22 +41,21 @@ from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.blocks import decode_block_run
 from ..index.build import SEG_SHIFT
 from .bm25 import BM25Params, BM25Scorer, tf_part
-from .tieadjust import adjust_score_ties
+from .tieadjust import Hit, Urls, keep_topk, rank_hits
 
 # the ranked run every search entry point returns
 RUN_SCHEMA = "qid int, docid string, rank int, score double"
 BATCH_REPARTITION_MIN_QUERIES = 16
-# kernel paths emit ONE row per (segment, qid) with packed arrays:
-# |segments| * |queries| rows instead of |segments| * |queries| * k —
-# the per-qid merge then runs as a numpy kernel, not a 30M-row
-# JVM sort window (batch-throughput path; same bytes, ~1000x fewer
-# row headers/comparisons)
+# the kernel emits ONE row per (segment, qid) with packed arrays:
+# |segments| * |queries| rows reach the driver, not ... * k rows
 ARRAY_RESULT_SCHEMA = "qid int, doc_id array<bigint>, score array<double>"
 
 
@@ -90,6 +93,7 @@ class InvertedIndex:
         self._cache_blocks = cache_blocks
         self._dfs: Dict[str, DataFrame] = {}
         self._dict_ds = None  # lazy pyarrow dataset for term_stats
+        self._docvec_ds = None  # lazy pyarrow dataset for urls
         self._dead: Optional[Dict[int, np.ndarray]] = None
 
     @property
@@ -198,6 +202,26 @@ class InvertedIndex:
             )
             return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
 
+    def urls(self, doc_ids: np.ndarray) -> pa.Table:
+        """``(doc_id, url)`` of the given docs: a driver-side pyarrow
+        docvec read with ``doc_id IN doc_ids`` pushed into the scan.
+        Only the dataset handle is cached, never a url table. Falls
+        back to a Spark scan for non-local stores, as ``term_stats``."""
+        ids = pa.array(np.asarray(doc_ids, dtype=np.int64))
+        try:
+            import pyarrow.dataset as ds
+
+            if self._docvec_ds is None:
+                self._docvec_ds = ds.dataset(
+                    os.path.join(self.dir, "docvec.parquet"),
+                    format="parquet")
+            return self._docvec_ds.to_table(
+                filter=ds.field("doc_id").isin(ids),
+                columns=["doc_id", "url"])
+        except Exception:
+            return (self.docmap.filter(F.col("doc_id").isin(ids.to_pylist()))
+                    .select("doc_id", "url").toArrow())
+
     def term_dfs(self, terms: Iterable[str]) -> Dict[str, int]:
         return {t: df for t, (df, _cf) in self.term_stats(terms).items()}
 
@@ -250,90 +274,6 @@ def _query_weights(
                 if t in dfs
             }
     return weights, scorer
-
-
-def _merge_topk_fn(k: int):
-    """Per-qid merge of the segments' packed top-k arrays: concatenate
-    <= |segments| rows, keep every doc scoring >= the kth-largest
-    (ties included — exact superset of the top-k), explode back to
-    rows. O(candidates) numpy, no comparison sort."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in pdf["doc_id"]]
-        )
-        scores = np.concatenate(
-            [np.asarray(x, dtype=np.float64) for x in pdf["score"]]
-        )
-        if len(docs) > k:
-            kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-            keep = scores >= kth
-            docs, scores = docs[keep], scores[keep]
-        return pd.DataFrame(
-            {
-                "qid": np.full(len(docs), int(pdf["qid"].iloc[0]),
-                               dtype=np.int32),
-                "doc_id": docs,
-                "score": scores,
-            }
-        )
-
-    return merge
-
-
-def _finalize_arrays(index: InvertedIndex, hits: DataFrame,
-                     k: int) -> DataFrame:
-    """Global merge for the kernel paths' packed-array output: per-qid
-    numpy top-k merge (|segments| rows per qid through the shuffle,
-    not |segments| * k), then url join + exact (score desc, url asc)
-    final order for only the ~k survivors per qid."""
-    merged = hits.groupBy("qid").applyInPandas(
-        _merge_topk_fn(k), schema="qid int, doc_id long, score double"
-    )
-    return _rank_with_urls(index, merged, k)
-
-
-def _rank_with_urls(index: InvertedIndex, survivors: DataFrame,
-                    k: int) -> DataFrame:
-    """The shared tail: url attach, final (score desc, url asc) order
-    cut to k, score-ties adjust. ``survivors`` (qid, doc_id, score)
-    must already be bounded to ~k rows per qid: they are broadcast
-    into a streamed docmap scan (guide §3.1), so the candidate side
-    is queries x k regardless of corpus size, while the round-6
-    shuffle_hash hint exchanged the FULL docmap by doc_id per batch
-    (2 exchanges removed from every kernel search)."""
-    docmap = index.docmap.select("doc_id", "url")
-    joined = docmap.join(F.broadcast(survivors), "doc_id")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    ranked = (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("url").alias("docid"), "rank", "score")
-    )
-    return adjust_score_ties(ranked).orderBy("qid", "rank")
-
-
-def _finalize(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
-    """Merge candidates globally: top-k per qid by (score desc,
-    url asc), assign ranks, adjust score ties.
-
-    Two-phase for batch scale: segments emit up to |segments| * k rows
-    per qid, so joining urls first would shuffle that whole candidate
-    stream through the docmap join. Phase 1 prunes on the NARROW
-    (qid, doc_id, score) rows with ``rank() <= k`` over score alone —
-    rank() (not row_number) keeps every row tied at the kth score, so
-    the url tie-break in phase 2 stays exact, while WindowGroupLimit
-    pushes a partial top-k map-side before the qid shuffle. Phase 2
-    joins urls for only the ~k survivors per qid and applies the final
-    (score desc, url asc) order — BREAK_SCORE_TIES_BY_DOCID on the
-    collection docid string (`SearchCollection.java:115-116`)."""
-    w0 = Window.partitionBy("qid").orderBy(F.desc("score"))
-    pruned = (
-        hits.withColumn("r0", F.rank().over(w0))
-        .filter(F.col("r0") <= k)
-        .drop("r0")
-    )
-    return _rank_with_urls(index, pruned, k)
 
 
 def _segment_score_fn(
@@ -454,17 +394,9 @@ def _segment_score_fn(
                 continue
             cand, scores = _maxscore_query(terms, wmap, meta, decode, acc,
                                            mask, k, out_dtype)
-            if len(cand) > k:
-                # keep every doc scoring >= the kth-largest score (ties
-                # included — a superset of the exact top-k, O(n)
-                # argpartition instead of a full lexsort); the global
-                # merge applies the final (score desc, url asc) order
-                # (BREAK_SCORE_TIES_BY_DOCID,
-                # `SearchCollection.java:115-116`), so emitting tied
-                # extras never changes the ranked result
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                keep = scores >= kth
-                cand, scores = cand[keep], scores[keep]
+            # ties at the kth score are kept: the driver tail applies
+            # the final (score desc, url asc) order
+            cand, scores = keep_topk(cand, scores, k)
             out_qid.append(qid)
             out_doc.append(cand + base)
             out_score.append(scores.astype(np.float64))
@@ -597,26 +529,67 @@ def _search_blocks(
     k: int,
     consts: Optional[Tuple[float, float, bool]],
     shape_fns: Optional[Dict[str, object]] = None,
-) -> DataFrame:
-    """The one Spark scoring driver: ``_score_blocks`` -> per-qid
-    merge and url order (``_finalize_arrays``)."""
+) -> Dict[int, List[Hit]]:
+    """The one Spark search: ``_score_blocks`` is its only job; its
+    packed hits come to the driver as Arrow for ``rank_runs``."""
     hits = _score_blocks(index, weights, k, consts, shape_fns)
     if hits is None:
-        return index.spark.createDataFrame([], RUN_SCHEMA)
-    return _finalize_arrays(index, hits, k)
+        return {}
+    t = hits.toArrow()
+    lens = pc.list_value_length(t["doc_id"]).to_numpy()
+    return rank_runs(index, np.repeat(t["qid"].to_numpy(), lens),
+                     pc.list_flatten(t["doc_id"]).to_numpy(),
+                     pc.list_flatten(t["score"]).to_numpy(), k)
 
 
-def search_kernel(
+def rank_runs(index: InvertedIndex, qids: np.ndarray, doc_ids: np.ndarray,
+              scores: np.ndarray, k: int) -> Dict[int, List[Hit]]:
+    """The driver tail of a Spark search over its collected candidate
+    ``(qid, doc_id, score)`` rows: per qid, the segments' top k merge to
+    every doc scoring >= the kth score (``keep_topk``); one url read
+    serves all survivors; each qid is ranked by ``rank_hits``."""
+    order = np.argsort(qids, kind="stable")
+    qids, doc_ids, scores = qids[order], doc_ids[order], scores[order]
+    uq, starts = np.unique(qids, return_index=True)
+    ends = np.append(starts[1:], len(qids))
+    cands = {int(q): keep_topk(doc_ids[a:b], scores[a:b], k)
+             for q, a, b in zip(uq, starts, ends)}
+    if not cands:
+        return {}
+    t = index.urls(np.unique(np.concatenate([d for d, _ in cands.values()])))
+    urls = Urls(t["doc_id"].to_numpy(), t["url"].combine_chunks())
+    return {q: rank_hits(d, s, lambda _ids: urls, k)
+            for q, (d, s) in cands.items()}
+
+
+def run_frame(spark: SparkSession, runs: Dict[int, List[Hit]]) -> DataFrame:
+    """Driver runs as a ``RUN_SCHEMA`` DataFrame in (qid, rank) order:
+    a local Arrow relation, so reading it launches no Spark job."""
+    cols = list(zip(*[(q, *h) for q in sorted(runs) for h in runs[q]]))
+    types = [pa.int32(), pa.string(), pa.int32(), pa.float64()]
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, t) for c, t in zip(cols or [()] * 4, types)],
+        names=["qid", "docid", "rank", "score"]), RUN_SCHEMA)
+
+
+def kernel_runs(
     index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
     boosts: Optional[Dict[int, Dict[str, float]]] = None,
     boosts_are_final: bool = False,
-) -> DataFrame:
-    """float32 BM25 (bit-parity with the reference) through
-    ``_search_blocks``."""
+) -> Dict[int, List[Hit]]:
+    """float32 BM25 (bit-parity with the reference) as driver runs."""
     weights, scorer = _query_weights(index, queries, params, boosts,
                                      boosts_are_final)
     return _search_blocks(index, weights, params.k,
                           (scorer.cache1, scorer.cache2, params.lossy))
+
+
+def search_kernel(index: InvertedIndex, queries: Dict[int, str],
+                  params: BM25Params, boosts=None,
+                  boosts_are_final: bool = False) -> DataFrame:
+    """``kernel_runs`` as a ``RUN_SCHEMA`` DataFrame."""
+    return run_frame(index.spark, kernel_runs(index, queries, params,
+                                              boosts, boosts_are_final))
 
 
 POSTINGS_SCHEMA = "term string, doc_id long, tf long, doclen long"
@@ -748,6 +721,10 @@ class SimpleSearcher:
           Spark job whose parallelism is the cluster's (the packed
           per-(segment, qid) kernel), so it is accepted for signature
           compatibility and validated only.
+
+        Both forms run the same search; the list form (and ``search``)
+        hand back the driver runs as they are, the dict form wraps
+        them with ``run_frame``.
         """
         if not isinstance(queries, dict):
             if qids is None or len(qids) != len(queries):
@@ -755,14 +732,16 @@ class SimpleSearcher:
                                  "with one id per query")
             if threads == 0 or threads < -1:
                 raise ValueError(f"invalid threads {threads}")
-            surrogate = {i: q for i, q in enumerate(queries)}
-            df = self.batch_search(surrogate, k=k)
-            out: Dict[str, List[Tuple[str, int, float]]] = {
-                str(q): [] for q in qids}
-            for r in df.collect():
-                out[str(qids[r["qid"]])].append(
-                    (r["docid"], r["rank"], r["score"]))
+            runs = self._search(dict(enumerate(queries)), k)
+            out: Dict[str, List[Hit]] = {str(q): [] for q in qids}
+            for i, q in enumerate(qids):
+                out[str(q)] += runs.get(i, [])
             return out
+        return run_frame(self.index.spark, self._search(queries, k))
+
+    def _search(self, queries: Dict[int, str],
+                k: int) -> Dict[int, List[Hit]]:
+        """qid -> [(docid, rank, score)] on the driver."""
         params = BM25Params(k1=self.params.k1, b=self.params.b, k=k,
                             lossy=self.params.lossy)
         if self._qld_mu is not None:
@@ -772,28 +751,31 @@ class SimpleSearcher:
                     "before set_qld or keep BM25 as the base similarity")
             from .kernel_sim import search_kernel_similarity
 
-            return search_kernel_similarity(self.index, queries, "qld",
+            hits = search_kernel_similarity(self.index, queries, "qld",
                                             k=k, mu=self._qld_mu)
-        if self._axiom is not None:
+        elif self._axiom is not None:
             from .axiom import search_axiom
 
             r, n, beta, m, seed, pool = self._axiom
             hits, _ = search_axiom(self.index, queries, params, r=r, n=n,
                                    beta=beta, m=m, seed=seed, pool=pool)
-            return hits
-        if self._rm3 is not None:
+        elif self._rm3 is not None:
             from .rm3 import search_rm3
 
             fb_docs, fb_terms, alpha = self._rm3
             hits, _ = search_rm3(self.index, queries, params,
                                  fb_docs=fb_docs, fb_terms=fb_terms,
                                  alpha=alpha)
-            return hits
-        return search_kernel(self.index, queries, params)
+        else:
+            return kernel_runs(self.index, queries, params)
+        runs: Dict[int, List[Hit]] = {}
+        for h in hits.collect():  # a local relation: no Spark job
+            runs.setdefault(h["qid"], []).append(
+                (h["docid"], h["rank"], h["score"]))
+        return runs
 
-    def search(self, query: str, k: int = 10) -> List[Tuple[str, int, float]]:
-        df = self.batch_search({0: query}, k=k)
-        return [(r["docid"], r["rank"], r["score"]) for r in df.collect()]
+    def search(self, query: str, k: int = 10) -> List[Hit]:
+        return self._search({0: query}, k).get(0, [])
 
     def doc(self, docid: str) -> Optional[str]:
         """Stored contents for a docid — the `SimpleSearcher.document`

@@ -41,3 +41,21 @@ def assert_matches_brute_exactly(spark_df, want, qids, tol=1e-9):
             assert abs(s - (rounded - seen[rounded] * 1e-6)) <= tol, \
                 (qid, u, s, b)
             seen[rounded] += 1
+
+
+def scoring_plan(monkeypatch, run):
+    """Executed plan of the DataFrame a search collects to the driver
+    (``toArrow``) while ``run()`` searches: its Spark scoring stage,
+    since the run it returns is a local relation."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = []
+    orig = DataFrame.toArrow
+
+    def spy(self):
+        seen.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    run()
+    return seen[-1]._jdf.queryExecution().executedPlan().toString()

@@ -13,7 +13,7 @@ from anserini_spark.search.similarities import (
     search_inl2,
     search_spl,
 )
-from tests.runcheck import assert_matches_brute
+from tests.runcheck import assert_matches_brute, scoring_plan
 from tests.test_qld import brute_qld, brute_qljm
 from tests.test_similarities import (
     brute,
@@ -59,12 +59,13 @@ def test_kernel_matches_dataframe(spark, tiny_index, tiny_docs, fn, kw):
                          BRUTE[fn](tiny_docs, kw), QUERIES, K)
 
 
-def test_kernel_plan_is_term_pruned(spark, tiny_index):
-    """The kernel similarity plan must read blocks.parquet with the
-    query terms pushed into the scan, and must NOT explode docvec
-    postings (no full-corpus scan)."""
+def test_kernel_plan_is_term_pruned(spark, tiny_index, monkeypatch):
+    """The kernel similarity's scoring stage must read blocks.parquet
+    with the query terms pushed into the scan, and must NOT explode
+    docvec postings (no full-corpus scan)."""
     idx = InvertedIndex(spark, tiny_index)
-    df = search_qld(idx, {1: "spark merge"}, k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = scoring_plan(monkeypatch,
+                        lambda: search_qld(idx, {1: "spark merge"}, k=10))
     assert "blocks" in plan
+    assert "PushedFilters: [In(term" in plan
     assert "Generate explode" not in plan and "arrays_zip" not in plan

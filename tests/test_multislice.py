@@ -45,6 +45,33 @@ def test_union_matches_batch_bm25(spark, sliced):
     assert union == batch
 
 
+def test_union_reads_urls_across_slice_schemas(spark, sliced, tmp_path):
+    """Slices whose docvecs differ in url nullability (a compacted
+    slice's url is nullable, a fresh build's is not) union in the
+    driver-side url read."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    batch_dir, dirs = sliced
+    copy = str(tmp_path / "slice2")
+    shutil.copytree(dirs[2], copy)
+    dv = os.path.join(copy, "docvec.parquet")
+    for f in os.listdir(dv):
+        path = os.path.join(dv, f)
+        if f.endswith(".crc"):
+            os.remove(path)
+        elif f.endswith(".parquet"):
+            t = pq.read_table(path)
+            i = t.schema.get_field_index("url")
+            fld = t.schema.field(i)
+            pq.write_table(t.cast(t.schema.set(
+                i, fld.with_nullable(not fld.nullable))), path)
+    union = _hits(MultiSliceIndex(spark, dirs[:2] + [copy]))
+    assert union == _hits(InvertedIndex(spark, batch_dir))
+
+
 def test_union_matches_batch_similarity_and_rm3(spark, sliced):
     from anserini_spark.search.kernel_sim import search_kernel_similarity
     from anserini_spark.search.rm3 import search_rm3

@@ -19,7 +19,7 @@ from anserini_spark.search.sdm import (
     search_sdm,
 )
 from anserini_spark.search.searcher import InvertedIndex
-from tests.runcheck import assert_matches_brute_exactly
+from tests.runcheck import assert_matches_brute_exactly, scoring_plan
 
 QUERIES = {1: "spark merge join", 2: "customer value", 3: "scan"}
 
@@ -144,9 +144,24 @@ def test_sdm_kernel_matches_dataframe(spark, pos_index, tiny_docs):
                                  _brute_sdm(tiny_docs, q, k=25), q)
 
 
-def test_sdm_kernel_plan_is_term_pruned(spark, pos_index):
+def test_sdm_kernel_plan_is_term_pruned(spark, pos_index, monkeypatch):
+    """SDM's scoring stage reads the term-pruned positional blocks."""
     idx = InvertedIndex(spark, pos_index)
-    plan = (search_sdm(idx, {1: "spark merge"}, BM25Params(k=5))
-            ._jdf.queryExecution().executedPlan().toString())
+    plan = scoring_plan(monkeypatch, lambda: search_sdm(
+        idx, {1: "spark merge"}, BM25Params(k=5)))
     assert "blocks" in plan
+    assert "PushedFilters: [In(term" in plan
     assert "arrays_zip" not in plan  # no positional docvec explode
+
+
+def test_sdm_releases_its_cache(spark, pos_index):
+    """search_sdm persists its kernel rows for three consumers and must
+    release them once the survivors are collected: repeated calls (with
+    different queries, so no call reuses another's cached plan) do not
+    grow the persistent-RDD count."""
+    idx = InvertedIndex(spark, pos_index)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    for qid, text in QUERIES.items():
+        search_sdm(idx, {qid: text}, BM25Params(k=5)).collect()
+    assert jsc.getPersistentRDDs().size() == before

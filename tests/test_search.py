@@ -130,3 +130,29 @@ def test_simple_searcher_set_qld(spark, tiny_index):
     s.unset_rm3()
     s.set_bm25(0.9, 0.4)
     assert s.search("spark merge join", k=5) == bm25
+
+
+def test_search_is_one_spark_job(spark, tiny_index):
+    """A search() and a 50-query list-form batch_search each run only
+    the scoring job (a scan stage and a per-segment kernel stage under
+    AQE): the merge, url lookup, order and tie rounding run on the
+    driver. The first search also opens the index's parquet sources,
+    so it is asked before the job group is set."""
+    s = SimpleSearcher(spark, tiny_index)
+    s.search("spark merge join", k=10)
+    sc = spark.sparkContext
+    texts = [QUERIES[q] for q in (1, 2, 4, 5, 6)] * 10
+    calls = {
+        "single": lambda: s.search("customer value", k=1000),
+        "batch50": lambda: s.batch_search(
+            texts, [str(i) for i in range(50)], k=1000),
+    }
+    try:
+        for name, call in calls.items():
+            group = f"one-job-{name}"
+            sc.setJobGroup(group, name)
+            assert call()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert 1 <= len(jobs) <= 2, (name, len(jobs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
