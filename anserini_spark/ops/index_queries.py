@@ -259,24 +259,17 @@ def _fixed_queries() -> dict[int, str]:
     return queries
 
 
-def _gate_rows(hits: DataFrame) -> DataFrame:
-    """A run as gate rows (qid, doc_id, rank, score): gate-index urls
-    are the ``%020d`` doc ids."""
-    return hits.select("qid", F.col("docid").cast("long").alias("doc_id"),
-                       "rank", "score").orderBy("qid", "rank")
-
-
-def _gate_topk(idx, sim: str, queries=None, **params) -> DataFrame:
-    """Top TOPK of ``queries`` (default: the fixed set) through the
-    block-index kernel, as gate rows."""
-    return _gate_rows(search_kernel_similarity(
-        idx, queries or _fixed_queries(), sim, k=TOPK, **params))
-
-
 def _index_topk(spark: SparkSession, sf_dir: str, sim: str,
                 **params) -> DataFrame:
-    return _gate_topk(InvertedIndex(spark, _gate_index(spark, sf_dir)),
-                      sim, **params)
+    idx = InvertedIndex(spark, _gate_index(spark, sf_dir))
+    hits = search_kernel_similarity(idx, _fixed_queries(), sim, k=TOPK,
+                                    **params)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -302,7 +295,14 @@ def multislice_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dirs = [_gate_index(spark, sf_dir, slice_part=p) for p in ("a", "b")]
     idx = MultiSliceIndex(spark, dirs)
-    return _gate_topk(idx, "bm25", k1=K1, b=B)
+    hits = search_kernel_similarity(idx, _fixed_queries(), "bm25", k=TOPK,
+                                    k1=K1, b=B)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 TOMB_MOD, TOMB_REM = 7, 3
@@ -391,7 +391,12 @@ def impact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = InvertedIndex(spark, _impact_gate_index(spark, sf_dir))
     hits = search_impact(idx, IMPACT_QUERIES, k=TOPK)
-    return _gate_rows(hits)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def boolean_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,7 +413,12 @@ def boolean_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = InvertedIndex(spark, _gate_index(spark, sf_dir))
     hits = search_boolean(idx, BOOL_QUERIES, BM25Params(k1=K1, b=B, k=TOPK))
-    return _gate_rows(hits)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def _tombstoned_gate_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -439,7 +449,14 @@ def tombstone_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs. Own fingerprint-keyed dir (variant tag) so the tombstone
     append never pollutes the shared gate index."""
     idx = InvertedIndex(spark, _tombstoned_gate_dir(spark, sf_dir))
-    return _gate_topk(idx, "bm25", k1=K1, b=B)
+    hits = search_kernel_similarity(idx, _fixed_queries(), "bm25", k=TOPK,
+                                    k1=K1, b=B)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def purged_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,7 +475,14 @@ def purged_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   IndexConfig(out_dir=out, analyzer="ws",
                               doc_partitions=8, block_partitions=16))
     idx = InvertedIndex(spark, out)
-    return _gate_topk(idx, "bm25", k1=K1, b=B)
+    hits = search_kernel_similarity(idx, _fixed_queries(), "bm25", k=TOPK,
+                                    k1=K1, b=B)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def qld_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,7 +521,14 @@ def zh_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenation with periodic break chars, bigram segmentation per
     CJK run (lone chars emit unigrams), then accurate BM25."""
     idx = InvertedIndex(spark, _gate_index(spark, sf_dir, zh=True))
-    return _gate_topk(idx, "bm25", dict(ZH_QUERIES), k1=K1, b=B)
+    hits = search_kernel_similarity(idx, dict(ZH_QUERIES), "bm25",
+                                    k=TOPK, k1=K1, b=B)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 BGL_K = 10
@@ -566,7 +597,14 @@ def fr_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (-aux -> -al, sequential x/s/r/e/é strips, doubled-letter
     collapse) — then accurate BM25."""
     idx = InvertedIndex(spark, _gate_index(spark, sf_dir, fr=True))
-    return _gate_topk(idx, "bm25", dict(FR_QUERIES), k1=K1, b=B)
+    hits = search_kernel_similarity(idx, dict(FR_QUERIES), "bm25",
+                                    k=TOPK, k1=K1, b=B)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def spl_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,7 +643,14 @@ def rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     boosts = rm3_boosts(idx, queries, first, fb_docs=RM3_FB_DOCS,
                         fb_terms=RM3_FB_TERMS, alpha=RM3_ALPHA,
                         max_df_ratio=RM3_MAX_DF_RATIO)
-    return _gate_topk(idx, "bm25", queries, k1=K1, b=B, boosts=boosts)
+    hits = search_kernel_similarity(idx, queries, "bm25", k=TOPK,
+                                    k1=K1, b=B, boosts=boosts)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 BM25PRF_FB_DOCS = 10
@@ -631,7 +676,14 @@ def bm25prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     boosts = bm25prf_boosts(idx, queries, first,
                             fb_docs=BM25PRF_FB_DOCS,
                             fb_terms=BM25PRF_FB_TERMS)
-    return _gate_topk(idx, "bm25prf", queries, k1=K1, b=B, boosts=boosts)
+    hits = search_kernel_similarity(idx, queries, "bm25prf", k=TOPK,
+                                    k1=K1, b=B, boosts=boosts)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 AXIOM_R = 20
@@ -687,7 +739,14 @@ def axiom_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     boosts = axiom_boosts(idx, queries, first, r=AXIOM_R, n=1,
                           beta=AXIOM_BETA, m=AXIOM_M)
-    return _gate_topk(idx, "bm25", queries, k1=K1, b=B, boosts=boosts)
+    hits = search_kernel_similarity(idx, queries, "bm25", k=TOPK,
+                                    k1=K1, b=B, boosts=boosts)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 EVAL_K = 50
@@ -718,11 +777,12 @@ def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = _fixed_queries()
     hits = search_kernel_similarity(idx, queries, "bm25", k=EVAL_K,
                                     k1=K1, b=B)
-    run = hits.select(  # a local relation: nothing to persist
+    run = hits.select(
         "qid",
         F.col("docid").cast("long").cast("string").alias("docid"),
         "rank", "score",
-    )
+    ).persist()
+    run.count()
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -773,6 +833,7 @@ def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = [(n, pool.submit(fn)) for n, fn in tasks]
         vals = [(n, f.result()) for n, f in futs]
+    run.unpersist()
     qrels.unpersist()
     return spark.createDataFrame(
         [(n, round(v, 6)) for n, v in vals], "metric string, value double"
@@ -791,7 +852,12 @@ def sdm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = InvertedIndex(spark, _gate_index(spark, sf_dir, positions=True))
     hits = search_sdm(idx, _fixed_queries(), BM25Params(k1=K1, b=B, k=TOPK))
-    return _gate_rows(hits)
+    return hits.select(
+        "qid",
+        F.col("docid").cast("long").alias("doc_id"),
+        "rank",
+        "score",
+    ).orderBy("qid", "rank")
 
 
 def _pair_values_clause() -> str:

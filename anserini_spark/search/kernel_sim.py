@@ -5,7 +5,7 @@ index/search machinery — the Similarity is a plugin
 (`SearchCollection.java:281-334`). This module is the Spark analogue:
 QLD, QLJM, DFR InL2, IB SPL, and axiomatic F2EXP/F2LOG run through
 the SAME term-pruned ``blocks.parquet`` scan + per-segment Arrow
-kernel, MaxScore pruning and driver tail as BM25
+kernel, MaxScore pruning and tail as BM25
 (``searcher._search_blocks``), by
 supplying a per-term "shape" function ``shape_t(tf, dl) ->
 contribution`` (float64). `search/qld.py` and `search/similarities.py`
@@ -27,7 +27,7 @@ from typing import Callable, Dict, Optional
 import numpy as np
 from pyspark.sql import DataFrame
 
-from .searcher import InvertedIndex, _search_blocks, run_frame
+from .searcher import InvertedIndex, Run, _search_blocks, run_frame
 
 _LOG2 = np.log(2.0)
 
@@ -170,6 +170,19 @@ def search_kernel_similarity(
     boosts: Optional[Dict[int, Dict[str, float]]] = None,
     **params,
 ) -> DataFrame:
+    """``kernel_similarity_runs`` as a ``RUN_SCHEMA`` DataFrame."""
+    return run_frame(index.spark, kernel_similarity_runs(
+        index, queries, sim, k, boosts, **params))
+
+
+def kernel_similarity_runs(
+    index: InvertedIndex,
+    queries: Dict[int, str],
+    sim: str,
+    k: int = 1000,
+    boosts: Optional[Dict[int, Dict[str, float]]] = None,
+    **params,
+) -> Run:
     """Retrieve with a named similarity through the block-index
     kernel. Per-query term boosts are occurrence counts (bag of
     words) unless explicit ``boosts`` maps (qid -> term -> weight)
@@ -197,5 +210,5 @@ def search_kernel_similarity(
     # Lucene returns every doc matching >=1 query term, INCLUDING
     # docs whose clamped LM score is 0 (golden: QLD `1 Q0 WSJ_1 3
     # 0.000000`, `TrecEndToEndTest.java:92-96`) — no score filter
-    return run_frame(index.spark, _search_blocks(
-        index, boosts, k, consts=None, shape_fns=shape_fns))
+    return _search_blocks(index, boosts, k, consts=None,
+                          shape_fns=shape_fns)

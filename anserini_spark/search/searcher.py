@@ -16,14 +16,22 @@ BREAK_SCORE_TIES_BY_DOCID (`SearchCollection.java:115-116`) — and
 tie-adjusts through ``tieadjust.rank_hits``, the tail ``LocalSearcher``
 calls too.
 
+A batch whose segments could hand the driver more than
+``DRIVER_TAIL_MAX_CANDIDATES`` candidates keeps that tail in Spark
+instead (``_spark_tail``: a per-qid merge shuffle, a docmap join for
+the survivors' urls, a window order and ``adjust_score_ties``), so
+whole-dev-set batches never leave the executors. Both tails give the
+same run.
+
 BM25 (``kernel_runs``), the pluggable similarities (`kernel_sim.py`)
 and impact search (`index/impact.py`) differ only in the per-term
 weights and the per-posting contribution they hand ``_search_blocks``:
 the float32 BM25 tf-part (``bm25.tf_part``) or a float64 shape
-function. The DataFrame entry points wrap its driver runs with
-``run_frame``. Tweet search (`tweets.py`) takes ``_score_blocks``'
-hits and applies its own id filter and tie order. The tests hold it
-to ``oracle.py`` and the DuckDB SQL oracles.
+function. A run is driver rows or, from the Spark tail, a DataFrame;
+``run_frame`` and ``run_rows`` give either form. Tweet search
+(`tweets.py`) takes ``_score_blocks``' hits and applies its own id
+filter and tie order. The tests hold it to ``oracle.py`` and the
+DuckDB SQL oracles.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
 to float32 at the end — Lucene's DisjunctionSumScorer likewise sums
@@ -37,19 +45,19 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..index.blocks import decode_block_run
 from ..index.build import SEG_SHIFT
 from .bm25 import BM25Params, BM25Scorer, tf_part
-from .tieadjust import Hit, Urls, keep_topk, rank_hits
+from .tieadjust import Hit, Urls, adjust_score_ties, keep_topk, rank_hits
 
 # the ranked run every search entry point returns
 RUN_SCHEMA = "qid int, docid string, rank int, score double"
@@ -57,6 +65,17 @@ BATCH_REPARTITION_MIN_QUERIES = 16
 # the kernel emits ONE row per (segment, qid) with packed arrays:
 # |segments| * |queries| rows reach the driver, not ... * k rows
 ARRAY_RESULT_SCHEMA = "qid int, doc_id array<bigint>, score array<double>"
+# bound on the (doc_id, score) candidates a search may send the driver,
+# counted as |queries| x sum over segments of min(k, segment docs).
+# Past it the merge stays in Spark (``_spark_tail``): its extra jobs
+# cost ~1 s, which the driver tail's per-candidate work matched at
+# ~2M candidates on 4 cores (BENCH.md), and 1K queries x k=1000 over 32
+# segments would put ~0.5 GB of task results on the driver, 10K more
+# than spark.driver.maxResultSize (1g)
+DRIVER_TAIL_MAX_CANDIDATES = 1_000_000
+# a search's ranked run: qid -> [(docid, rank, score)] on the driver,
+# or a RUN_SCHEMA DataFrame when the tail ran in Spark
+Run = Union[Dict[int, List[Hit]], DataFrame]
 
 
 class InvertedIndex:
@@ -205,22 +224,17 @@ class InvertedIndex:
     def urls(self, doc_ids: np.ndarray) -> pa.Table:
         """``(doc_id, url)`` of the given docs: a driver-side pyarrow
         docvec read with ``doc_id IN doc_ids`` pushed into the scan.
-        Only the dataset handle is cached, never a url table. Falls
-        back to a Spark scan for non-local stores, as ``term_stats``."""
-        ids = pa.array(np.asarray(doc_ids, dtype=np.int64))
-        try:
-            import pyarrow.dataset as ds
+        Only the dataset handle is cached, never a url table. Like
+        ``stats.json``, it reads a local index directory."""
+        import pyarrow.dataset as ds
 
-            if self._docvec_ds is None:
-                self._docvec_ds = ds.dataset(
-                    os.path.join(self.dir, "docvec.parquet"),
-                    format="parquet")
-            return self._docvec_ds.to_table(
-                filter=ds.field("doc_id").isin(ids),
-                columns=["doc_id", "url"])
-        except Exception:
-            return (self.docmap.filter(F.col("doc_id").isin(ids.to_pylist()))
-                    .select("doc_id", "url").toArrow())
+        if self._docvec_ds is None:
+            self._docvec_ds = ds.dataset(
+                os.path.join(self.dir, "docvec.parquet"), format="parquet")
+        return self._docvec_ds.to_table(
+            filter=ds.field("doc_id").isin(
+                pa.array(np.asarray(doc_ids, dtype=np.int64))),
+            columns=["doc_id", "url"])
 
     def term_dfs(self, terms: Iterable[str]) -> Dict[str, int]:
         return {t: df for t, (df, _cf) in self.term_stats(terms).items()}
@@ -529,12 +543,16 @@ def _search_blocks(
     k: int,
     consts: Optional[Tuple[float, float, bool]],
     shape_fns: Optional[Dict[str, object]] = None,
-) -> Dict[int, List[Hit]]:
+) -> Run:
     """The one Spark search: ``_score_blocks`` is its only job; its
-    packed hits come to the driver as Arrow for ``rank_runs``."""
+    packed hits come to the driver as Arrow for ``rank_runs``, unless
+    they could exceed ``DRIVER_TAIL_MAX_CANDIDATES`` (``_spark_tail``)."""
     hits = _score_blocks(index, weights, k, consts, shape_fns)
     if hits is None:
         return {}
+    per_q = sum(min(k, int(c)) for c in index.stats["segments"].values())
+    if len(weights) * per_q > DRIVER_TAIL_MAX_CANDIDATES:
+        return _spark_tail(index, hits, k)
     t = hits.toArrow()
     lens = pc.list_value_length(t["doc_id"]).to_numpy()
     return rank_runs(index, np.repeat(t["qid"].to_numpy(), lens),
@@ -562,9 +580,38 @@ def rank_runs(index: InvertedIndex, qids: np.ndarray, doc_ids: np.ndarray,
             for q, (d, s) in cands.items()}
 
 
-def run_frame(spark: SparkSession, runs: Dict[int, List[Hit]]) -> DataFrame:
-    """Driver runs as a ``RUN_SCHEMA`` DataFrame in (qid, rank) order:
-    a local Arrow relation, so reading it launches no Spark job."""
+def _spark_tail(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
+    """``rank_runs`` kept in Spark for a batch too large for the driver:
+    a per-qid shuffle merges the packed hits (``keep_topk``), the ~k
+    survivors per qid are broadcast into a streamed docmap scan for
+    their urls, then ordered (score desc, url asc) and tie-adjusted."""
+
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        docs, scores = keep_topk(
+            np.concatenate([np.asarray(x, np.int64) for x in pdf["doc_id"]]),
+            np.concatenate([np.asarray(x, np.float64) for x in pdf["score"]]),
+            k)
+        return pd.DataFrame({"qid": np.full(len(docs), pdf["qid"].iloc[0],
+                                            dtype=np.int32),
+                             "doc_id": docs, "score": scores})
+
+    merged = hits.groupBy("qid").applyInPandas(
+        merge, schema="qid int, doc_id long, score double")
+    joined = index.docmap.select("doc_id", "url").join(
+        F.broadcast(merged), "doc_id")
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
+    ranked = (joined.withColumn("rank", F.row_number().over(w))
+              .filter(F.col("rank") <= k)
+              .select("qid", F.col("url").alias("docid"), "rank", "score"))
+    return adjust_score_ties(ranked).orderBy("qid", "rank")
+
+
+def run_frame(spark: SparkSession, runs: Run) -> DataFrame:
+    """A run as a ``RUN_SCHEMA`` DataFrame in (qid, rank) order. Driver
+    rows become an Arrow-built relation over data already on the
+    driver: reading it re-runs no search."""
+    if isinstance(runs, DataFrame):
+        return runs
     cols = list(zip(*[(q, *h) for q in sorted(runs) for h in runs[q]]))
     types = [pa.int32(), pa.string(), pa.int32(), pa.float64()]
     return spark.createDataFrame(pa.table(
@@ -572,12 +619,24 @@ def run_frame(spark: SparkSession, runs: Dict[int, List[Hit]]) -> DataFrame:
         names=["qid", "docid", "rank", "score"]), RUN_SCHEMA)
 
 
+def run_rows(runs: Run) -> Dict[int, List[Hit]]:
+    """A run as qid -> [(docid, rank, score)]: a DataFrame is collected."""
+    if not isinstance(runs, DataFrame):
+        return runs
+    out: Dict[int, List[Hit]] = {}
+    for r in runs.collect():
+        out.setdefault(r["qid"], []).append((r["docid"], r["rank"],
+                                             r["score"]))
+    return out
+
+
 def kernel_runs(
     index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
     boosts: Optional[Dict[int, Dict[str, float]]] = None,
     boosts_are_final: bool = False,
-) -> Dict[int, List[Hit]]:
-    """float32 BM25 (bit-parity with the reference) as driver runs."""
+) -> Run:
+    """float32 BM25 (bit-parity with the reference) through
+    ``_search_blocks``."""
     weights, scorer = _query_weights(index, queries, params, boosts,
                                      boosts_are_final)
     return _search_blocks(index, weights, params.k,
@@ -723,8 +782,8 @@ class SimpleSearcher:
           compatibility and validated only.
 
         Both forms run the same search; the list form (and ``search``)
-        hand back the driver runs as they are, the dict form wraps
-        them with ``run_frame``.
+        take its run as driver rows (``run_rows``), the dict form as a
+        DataFrame (``run_frame``).
         """
         if not isinstance(queries, dict):
             if qids is None or len(qids) != len(queries):
@@ -732,16 +791,15 @@ class SimpleSearcher:
                                  "with one id per query")
             if threads == 0 or threads < -1:
                 raise ValueError(f"invalid threads {threads}")
-            runs = self._search(dict(enumerate(queries)), k)
+            runs = run_rows(self._search(dict(enumerate(queries)), k))
             out: Dict[str, List[Hit]] = {str(q): [] for q in qids}
             for i, q in enumerate(qids):
                 out[str(q)] += runs.get(i, [])
             return out
         return run_frame(self.index.spark, self._search(queries, k))
 
-    def _search(self, queries: Dict[int, str],
-                k: int) -> Dict[int, List[Hit]]:
-        """qid -> [(docid, rank, score)] on the driver."""
+    def _search(self, queries: Dict[int, str], k: int) -> Run:
+        """The run of the configured similarity and reranker."""
         params = BM25Params(k1=self.params.k1, b=self.params.b, k=k,
                             lossy=self.params.lossy)
         if self._qld_mu is not None:
@@ -749,33 +807,29 @@ class SimpleSearcher:
                 raise NotImplementedError(
                     "rerankers run over the BM25 first pass; unset them "
                     "before set_qld or keep BM25 as the base similarity")
-            from .kernel_sim import search_kernel_similarity
+            from .kernel_sim import kernel_similarity_runs
 
-            hits = search_kernel_similarity(self.index, queries, "qld",
-                                            k=k, mu=self._qld_mu)
-        elif self._axiom is not None:
+            return kernel_similarity_runs(self.index, queries, "qld",
+                                          k=k, mu=self._qld_mu)
+        if self._axiom is not None:
             from .axiom import search_axiom
 
             r, n, beta, m, seed, pool = self._axiom
             hits, _ = search_axiom(self.index, queries, params, r=r, n=n,
                                    beta=beta, m=m, seed=seed, pool=pool)
-        elif self._rm3 is not None:
+            return hits
+        if self._rm3 is not None:
             from .rm3 import search_rm3
 
             fb_docs, fb_terms, alpha = self._rm3
             hits, _ = search_rm3(self.index, queries, params,
                                  fb_docs=fb_docs, fb_terms=fb_terms,
                                  alpha=alpha)
-        else:
-            return kernel_runs(self.index, queries, params)
-        runs: Dict[int, List[Hit]] = {}
-        for h in hits.collect():  # a local relation: no Spark job
-            runs.setdefault(h["qid"], []).append(
-                (h["docid"], h["rank"], h["score"]))
-        return runs
+            return hits
+        return kernel_runs(self.index, queries, params)
 
     def search(self, query: str, k: int = 10) -> List[Hit]:
-        return self._search({0: query}, k).get(0, [])
+        return run_rows(self._search({0: query}, k)).get(0, [])
 
     def doc(self, docid: str) -> Optional[str]:
         """Stored contents for a docid — the `SimpleSearcher.document`

@@ -156,3 +156,33 @@ def test_search_is_one_spark_job(spark, tiny_index):
             assert 1 <= len(jobs) <= 2, (name, len(jobs))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_spark_tail_matches_driver_tail(spark, tiny_index, monkeypatch):
+    """A batch past DRIVER_TAIL_MAX_CANDIDATES keeps its merge, url
+    join, order and tie rounding in Spark; that tail must give the run
+    the driver tail gives, exactly (BM25, a float64 similarity and the
+    list-form batch_search, ties included)."""
+    import pyspark.sql
+
+    from anserini_spark.search import searcher
+    from anserini_spark.search.kernel_sim import kernel_similarity_runs
+
+    idx = InvertedIndex(spark, tiny_index)
+    p = BM25Params(k=20)
+    s = SimpleSearcher(spark, tiny_index)
+    texts = list(QUERIES.values())
+
+    def runs():
+        return (searcher.kernel_runs(idx, QUERIES, p),
+                kernel_similarity_runs(idx, QUERIES, "qld", k=20, mu=1000.0),
+                s.batch_search(texts, [str(q) for q in QUERIES], k=20))
+
+    driver = runs()
+    assert isinstance(driver[0], dict) and isinstance(driver[1], dict)
+    monkeypatch.setattr(searcher, "DRIVER_TAIL_MAX_CANDIDATES", 0)
+    spark_side = runs()
+    assert all(isinstance(r, pyspark.sql.DataFrame) for r in spark_side[:2])
+    assert [searcher.run_rows(r) for r in spark_side[:2]] == list(driver[:2])
+    assert spark_side[2] == driver[2]
+    assert any(r for r in driver[0].values())
