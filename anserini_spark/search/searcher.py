@@ -133,12 +133,14 @@ class InvertedIndex:
         """Lucene-liveDocs view: segment -> sorted local doc ids of
         tombstoned docs ({} when none). Computed once (broadcast
         semi-join against the column-pruned docvec), cached driver-
-        side — O(deletes), rides into the kernel closures."""
+        side — O(deletes), rides into the kernel closures. An index
+        without the tombstone marker never opens docvec (a Spark job)."""
         if self._dead is None:
-            from ..index.tombstones import dead_by_segment
+            from ..index.tombstones import dead_by_segment, has_tombstones
 
-            self._dead = dead_by_segment(self.spark, self.dir,
-                                         self.docvec, SEG_SHIFT)
+            self._dead = (dead_by_segment(self.spark, self.dir, self.docvec,
+                                          SEG_SHIFT)
+                          if has_tombstones(self.dir) else {})
         return self._dead
 
     @property
@@ -191,35 +193,27 @@ class InvertedIndex:
         index and term-range-sorted, so this reads it driver-side via
         pyarrow row-group pruning — no Spark job on the per-query hot
         path (the analogue of Lucene's in-memory term dictionary).
-        Falls back to a Spark scan for non-local index stores."""
+        Like ``stats.json``, it reads a local index directory."""
+        import pyarrow.dataset as ds
+
         terms = sorted(set(terms))
         if not terms:
             return {}
-        try:
-            import pyarrow.dataset as ds
-
-            if self._dict_ds is None:
-                self._dict_ds = ds.dataset(
-                    os.path.join(self.dir, "dictionary.parquet"),
-                    format="parquet",
-                )
-            t = self._dict_ds.to_table(
-                filter=ds.field("term").isin(terms),
-                columns=["term", "df", "cf"],
+        if self._dict_ds is None:
+            self._dict_ds = ds.dataset(
+                os.path.join(self.dir, "dictionary.parquet"),
+                format="parquet",
             )
-            return {
-                t_: (int(d), int(c))
-                for t_, d, c in zip(t["term"].to_pylist(),
-                                    t["df"].to_pylist(),
-                                    t["cf"].to_pylist())
-            }
-        except Exception:
-            rows = (
-                self.dictionary.filter(F.col("term").isin(terms))
-                .select("term", "df", "cf")
-                .collect()
-            )
-            return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+        t = self._dict_ds.to_table(
+            filter=ds.field("term").isin(terms),
+            columns=["term", "df", "cf"],
+        )
+        return {
+            t_: (int(d), int(c))
+            for t_, d, c in zip(t["term"].to_pylist(),
+                                t["df"].to_pylist(),
+                                t["cf"].to_pylist())
+        }
 
     def urls(self, doc_ids: np.ndarray) -> pa.Table:
         """``(doc_id, url)`` of the given docs: a driver-side pyarrow

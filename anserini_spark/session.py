@@ -1,4 +1,12 @@
-"""SparkSession factory with the engine's recommended configuration."""
+"""SparkSession factory with the engine's recommended configuration.
+
+Python workers run under ``anserini_spark.pyworker``, a daemon that stops
+every Python task from re-reading ``pyspark.zip`` (~255 ms of a ~740 ms
+single-query task's worker ``main`` at local[4]). Spark starts it before
+any ``--py-files`` arrive, so the worker Python must import
+``anserini_spark`` by itself: from PYTHONPATH, the working directory or
+an installed package.
+"""
 
 from __future__ import annotations
 
@@ -77,5 +85,9 @@ def get_spark(app: str = "anserini-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # skip re-reading unchanged zip archives on every Python task: a
+        # no-op one-partition mapInArrow job 260-352 -> 124-131 ms p50
+        # (BENCH.md)
+        .config("spark.python.daemon.module", "anserini_spark.pyworker")
         .getOrCreate()
     )

@@ -11,9 +11,12 @@ queries sampled log-uniformly from head/mid term ranks, plus the open
 time of both modes (preload and cold). Next to them it reports the
 Spark engine on the same index and queries: ``SimpleSearcher.search``
 p50 and the Spark jobs each query launches, so the serving gap shows
-in one command. The fixture index is built once under the temp dir on
-the session default ``local[$SPARK_GRAFT_CPUS]``, with partitions
-derived from that core count.
+in one command, and the Python task floor: the p50 of a one-partition
+no-op ``mapInArrow`` job, the fixed cost every Python task pays (a
+regression in per-task worker cost shows there first). The fixture
+index is built once under the temp dir on the session default
+``local[$SPARK_GRAFT_CPUS]``, with partitions derived from that core
+count.
 
     python scripts/latency_bench.py [--docs 1000000] [--queries 60]
 """
@@ -28,6 +31,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_QUERIES = 10  # single Spark queries timed (after 2 warm-ups)
+FLOOR_JOBS = 20  # no-op Python jobs timed (after 3 warm-ups)
 
 
 def gen_queries(n: int, seed: int = 9) -> dict[int, str]:
@@ -44,6 +48,22 @@ def gen_queries(n: int, seed: int = 9) -> dict[int, str]:
         )
         out[qid] = " ".join(f"t{r}" for r in ranks)
     return out
+
+
+def _passthrough(batches):
+    yield from batches
+
+
+def python_task_floor_s(spark) -> float:
+    """p50 wall of a one-partition no-op ``mapInArrow`` job."""
+    df = spark.range(1, numPartitions=1)
+    lats = []
+    for i in range(3 + FLOOR_JOBS):
+        t0 = time.perf_counter()
+        df.mapInArrow(_passthrough, df.schema).collect()
+        if i >= 3:
+            lats.append(time.perf_counter() - t0)
+    return sorted(lats)[len(lats) // 2]
 
 
 def main() -> None:
@@ -128,6 +148,8 @@ def main() -> None:
         ss.search(q, k=args.k)
         spark_lats.append(time.perf_counter() - t0)
         jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    floor_s = python_task_floor_s(spark)
     spark.stop()
     spark_lats.sort()
     jobs.sort()
@@ -146,6 +168,7 @@ def main() -> None:
         "mean_hits": round(sum(n_hits) / len(n_hits), 1),
         "spark_p50_ms": round(spark_lats[len(spark_lats) // 2] * 1000, 1),
         "spark_jobs_per_query": jobs[len(jobs) // 2],
+        "python_task_floor_ms": round(floor_s * 1000, 1),
     }
     print(json.dumps(report, indent=2))
 
@@ -168,7 +191,9 @@ Cold on-disk pyarrow mode (open {report['cold_open_ms']} ms): p50
 {report['cold_p50_ms']} ms, p95 {report['cold_p95_ms']} ms.
 Spark engine (`SimpleSearcher.search`, {len(spark_lats)} queries after
 2 warm-ups): p50 {report['spark_p50_ms']} ms, median
-{report['spark_jobs_per_query']} Spark jobs per query.
+{report['spark_jobs_per_query']} Spark jobs per query; Python task
+floor (one-partition no-op `mapInArrow` job, p50 of {FLOOR_JOBS})
+{report['python_task_floor_ms']} ms.
 Reference SimpleSearcher: ~60 ms on MS MARCO passage dev (k=1000) —
 **the warm serving path beats the reference's latency at the same
 k on a comparable-posting-volume corpus.**

@@ -63,6 +63,10 @@ def spark_submit(master: str, pyfiles: str, script: str, *args: str,
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         env.setdefault(var, "1")
+    # the worker daemon (anserini_spark.pyworker) starts before --py-files
+    # arrive, so it imports the package from the same zip via PYTHONPATH
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (pyfiles, env.get("PYTHONPATH")) if p)
     t0 = time.time()
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     wall = time.time() - t0

@@ -158,6 +158,44 @@ def test_search_is_one_spark_job(spark, tiny_index):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def test_first_search_of_a_new_handle_skips_docvec(spark, tiny_index):
+    """A new handle's first search on an untombstoned index opens only
+    the sources it scores from: docvec (a schema-inference job) is not
+    touched when there is no tombstone marker."""
+    from anserini_spark.index.tombstones import has_tombstones
+
+    assert not has_tombstones(tiny_index)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("first-search", "first search of a new handle")
+        assert SimpleSearcher(spark, tiny_index).search("spark merge join",
+                                                        k=10)
+        jobs = sc.statusTracker().getJobIdsForGroup("first-search")
+        assert 1 <= len(jobs) <= 3, len(jobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_term_stats_read_error_surfaces(spark, tiny_index, monkeypatch):
+    """A failing dictionary read raises; it does not fall back to a
+    Spark scan of the dictionary."""
+    import pyarrow.dataset
+
+    def failing_dataset(*args, **kwargs):
+        raise OSError("dictionary unreadable")
+
+    idx = InvertedIndex(spark, tiny_index)
+    monkeypatch.setattr(pyarrow.dataset, "dataset", failing_dataset)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("term-stats-error", "term_stats read error")
+        with pytest.raises(OSError, match="dictionary unreadable"):
+            idx.term_stats(["spark", "merge"])
+        assert sc.statusTracker().getJobIdsForGroup("term-stats-error") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_spark_tail_matches_driver_tail(spark, tiny_index, monkeypatch):
     """A batch past DRIVER_TAIL_MAX_CANDIDATES keeps its merge, url
     join, order and tie rounding in Spark; that tail must give the run

@@ -43,3 +43,8 @@ def test_get_spark_compression_config_matches_fs(spark):
         assert compress == "false"
     else:
         assert compress == "true"
+
+
+def test_get_spark_sets_the_worker_daemon(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "anserini_spark.pyworker"
