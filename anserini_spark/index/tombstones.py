@@ -30,8 +30,9 @@ inherits exactly these semantics through Lucene). Same contract here:
   resolve recrawl overlap: the base's stale urls are tombstoned, the
   merge purges them, and the union equals latest-crawl-wins.
 
-Scale shape: tombstone lookup is one broadcast semi-join against the
-docvec (column-pruned scan) at searcher init, cached; the per-segment
+Scale shape: tombstone lookup is one pyarrow docvec read with the
+deleted urls pushed into it (``dead_doc_ids``, no Spark job), at first
+use by a searcher, cached; the per-segment
 dead-id arrays live on the driver and ride into the kernel closure —
 bounded by delete count, not corpus size. EVERY engine consults
 liveDocs, and every one at decode: the block kernel (BM25, the
@@ -43,7 +44,7 @@ by ``tests/test_tombstones.py``.
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterable
+from typing import Iterable
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -82,26 +83,20 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
         "url").distinct()
 
 
-def dead_by_segment(spark: SparkSession, index_dir: str,
-                    docvec: DataFrame, seg_shift: int
-                    ) -> Dict[int, np.ndarray]:
-    """segment -> sorted local doc ids of tombstoned docs. One
-    broadcast semi-join against the column-pruned docvec; driver
-    memory O(deletes)."""
-    dead = read_tombstones(spark, index_dir)
-    if dead is None:
-        return {}
-    rows = (
-        docvec.select("doc_id", "segment", "url")
-        .join(F.broadcast(dead), "url", "inner")
-        .select("segment", "doc_id")
-        .collect()
-    )
-    out: Dict[int, list] = {}
-    mask = (1 << seg_shift) - 1
-    for r in rows:
-        out.setdefault(int(r["segment"]), []).append(int(r["doc_id"]) & mask)
-    return {s: np.array(sorted(v), dtype=np.int64) for s, v in out.items()}
+def dead_doc_ids(index_dir: str) -> np.ndarray:
+    """Sorted doc ids of the tombstoned docs (empty when none): pyarrow
+    reads of the tombstone urls and of their docvec rows, ``url IN``
+    pushed into the read. Driver memory O(deletes), no Spark job."""
+    import pyarrow.dataset as ds
+
+    if not has_tombstones(index_dir):
+        return np.empty(0, dtype=np.int64)
+    urls = ds.dataset(tombstones_path(index_dir), format="parquet").to_table(
+        columns=["url"])["url"].unique()
+    ids = ds.dataset(os.path.join(index_dir, "docvec.parquet"),
+                     format="parquet").to_table(
+        columns=["doc_id"], filter=ds.field("url").isin(urls))["doc_id"]
+    return np.sort(ids.to_numpy().astype(np.int64))
 
 
 def drop_dead(ids: np.ndarray, dead: np.ndarray | None):

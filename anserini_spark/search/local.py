@@ -11,10 +11,11 @@ by tests).
 
 A query reads three columnar views of the index:
 
-- block runs: block rows sorted by (term, segment, first_doc); a
-  term's run is a searchsorted range [lo, hi) on the term column and
-  decodes straight from the Arrow values/offsets buffers of the binary
-  columns (``index.blocks.decode_block_range``) — no per-block Python
+- block runs (``kernel.BlockRuns``, the view the Spark search tasks
+  read too): block rows sorted by (term, segment, first_doc); a term's
+  run is a searchsorted range [lo, hi) on the term column and decodes
+  straight from the Arrow values/offsets buffers of the binary columns
+  (``index.blocks.decode_block_range``) — no per-block Python
   ``bytes``;
 - the dictionary as sorted (term, df) arrays: df lookup is a
   searchsorted;
@@ -48,15 +49,14 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 from ..analysis.analyzer import analyze_for
-from ..index.blocks import binary_buffers, decode_block_range
 from ..index.build import SEG_SHIFT
-from ..index.tombstones import drop_dead
+from ..index.tombstones import dead_doc_ids, drop_dead
 from .bm25 import BM25Params, BM25Scorer, tf_part
+from .kernel import BlockRuns
 from .tieadjust import Hit, Urls, rank_hits
 
 _BLOCK_COLS = ["term", "segment", "first_doc", "last_doc", "n",
                "docs_bin", "tfs_bin", "dls_bin"]
-_BINS = ("docs_bin", "tfs_bin", "dls_bin")
 
 
 def _read(dataset: ds.Dataset, columns: List[str], key: str,
@@ -65,35 +65,6 @@ def _read(dataset: ds.Dataset, columns: List[str], key: str,
     or every row when ``values`` is None."""
     flt = None if values is None else ds.field(key).isin(values)
     return dataset.to_table(columns=columns, filter=flt)
-
-
-class _BlockRuns:
-    """Block rows sorted by (term, segment, first_doc). The binary
-    columns are held as large_binary (int64 offsets), so one combined
-    chunk never overflows, and read through their buffers."""
-
-    def __init__(self, tbl: pa.Table):
-        schema = pa.schema([f.with_type(pa.large_binary())
-                            if f.name in _BINS else f for f in tbl.schema])
-        tbl = tbl.cast(schema).sort_by(
-            [("term", "ascending"), ("segment", "ascending"),
-             ("first_doc", "ascending")])
-
-        def col(name: str) -> pa.Array:
-            return tbl.column(name).combine_chunks()
-
-        self.terms = col("term").to_numpy(zero_copy_only=False)
-        self.ns = col("n").to_numpy()
-        self.first = col("first_doc").to_numpy()
-        self.last = col("last_doc").to_numpy()
-        self.bins = [binary_buffers(col(c)) for c in _BINS]
-
-    def decode(self, term: str):
-        """(doc_ids, tfs, doclens) of ``term``'s run; empty if absent."""
-        lo = int(np.searchsorted(self.terms, term, side="left"))
-        hi = int(np.searchsorted(self.terms, term, side="right"))
-        return decode_block_range(*self.bins, self.ns, self.first,
-                                  self.last, lo, hi)
 
 
 class _Dictionary:
@@ -164,19 +135,8 @@ class LocalSearcher:
         # liveDocs (tombstones): sorted dead accumulator slots, masked
         # after full accumulation (this engine never prunes, so the
         # post-accumulation mask is exact)
-        self._dead_slots = np.empty(0, dtype=np.int64)
-        tomb = os.path.join(index_dir, "tombstones.parquet")
-        if os.path.isdir(tomb):
-            urls = ds.dataset(tomb, format="parquet").to_table(
-                columns=["url"])["url"].to_pylist()
-            if urls:
-                t = self._docvec.to_table(
-                    filter=ds.field("url").isin(sorted(set(urls))),
-                    columns=["doc_id"],
-                )
-                self._dead_slots = np.sort(self._slots(
-                    t["doc_id"].to_numpy().astype(np.int64)))
-        self._pre: Optional[Tuple[_BlockRuns, _Dictionary, Urls]] = None
+        self._dead_slots = np.sort(self._slots(dead_doc_ids(index_dir)))
+        self._pre: Optional[Tuple[BlockRuns, _Dictionary, Urls]] = None
         if preload:
             self._pre = (self._block_runs(None), self._dictionary(None),
                          self._urls(None))
@@ -184,10 +144,10 @@ class LocalSearcher:
     # Each view over the whole index (``None``) or the rows a query
     # needs; a preloaded searcher answers from its whole-index views.
 
-    def _block_runs(self, terms: Optional[List[str]]) -> _BlockRuns:
+    def _block_runs(self, terms: Optional[List[str]]) -> BlockRuns:
         if self._pre is not None:
             return self._pre[0]
-        return _BlockRuns(_read(self._blocks, _BLOCK_COLS, "term", terms))
+        return BlockRuns(_read(self._blocks, _BLOCK_COLS, "term", terms))
 
     def _dictionary(self, terms: Optional[List[str]]) -> _Dictionary:
         if self._pre is not None:

@@ -10,8 +10,8 @@ merging anything:
 * **Zero re-encoding.** Posting binaries store within-block deltas;
   absolute doc ids are reconstructed at decode time from the
   ``first_doc``/``last_doc`` block columns (`blocks.py
-  decode_block_run`). Shifting those columns by
-  ``slice_offset << SEG_SHIFT`` — plain scan-time column arithmetic —
+  decode_block_range`). Shifting those columns by
+  ``slice_offset << SEG_SHIFT`` at read time (`kernel.read_blocks`)
   re-namespaces every decoded id into a globally dense segment space.
   The bytes on disk are never touched.
 * **Exact global stats.** doc counts and token totals sum across
@@ -19,10 +19,9 @@ merging anything:
   driver-side pyarrow lookups and the declarative dictionary view),
   so scores equal a from-scratch build over the union corpus exactly
   (pinned by ``tests/test_multislice.py``).
-* **Pushdown survives.** The ``term IN`` pruning predicate commutes
-  with the union + projections, so each slice's parquet scan still
-  prunes row groups; the per-segment Arrow kernels are oblivious to
-  slicing.
+* **Pushdown survives.** Each search task pushes ``term IN`` into
+  every slice's pyarrow read, so each slice still prunes row groups;
+  the per-segment kernel is oblivious to slicing.
 
 Scale shape: appending a day's crawl is O(new docs) — fold a slice,
 add its dir to the reader. Query cost grows with the number of slices
@@ -63,8 +62,7 @@ class MultiSliceIndex(InvertedIndex):
     rerankers, SDM over positional slices...)."""
 
     def __init__(self, spark: SparkSession, slice_dirs: Sequence[str],
-                 cache: bool = True, cache_blocks: bool = False,
-                 check_disjoint: bool = False):
+                 cache: bool = True, check_disjoint: bool = False):
         if not slice_dirs:
             raise ValueError("MultiSliceIndex needs at least one slice")
         self.spark = spark
@@ -108,7 +106,6 @@ class MultiSliceIndex(InvertedIndex):
             "segments": segments,
         }
         self._cache = cache
-        self._cache_blocks = cache_blocks
         self._dfs: Dict[str, DataFrame] = {}
         self._dict_ds = None
         if check_disjoint and len(self.slices) > 1:
@@ -177,6 +174,11 @@ class MultiSliceIndex(InvertedIndex):
                 df = df.cache()
             self._dfs[name] = df
         return self._dfs[name]
+
+    def block_sources(self) -> List[Tuple[str, int]]:
+        """Each slice's blocks with its segment offset."""
+        return [(path, off) for s, off in zip(self.slices, self.offsets)
+                for path, _ in s.block_sources()]
 
     @property
     def dead_by_segment(self):

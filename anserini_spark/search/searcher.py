@@ -1,25 +1,24 @@
 """BM25 top-k retrieval over the block index.
 
-One physical engine, the Spark analogue of Lucene's per-segment search
-(`SearchCollection.java:459-486`): posting blocks for the query terms
-are pruned at the parquet scan (``term IN`` pushdown on
-term-range-sorted files), grouped by segment, and scored inside one
-Arrow kernel per segment: vectorized varint decode (once per term,
-shared across the whole query batch), term-at-a-time accumulation into
-a dense per-segment array with MaxScore/block-max pruning, and a
-per-segment top k. That scan and kernel (``_score_blocks``) are a
-search's one Spark job; its packed hits, |segments| rows per qid, come
-to the driver through ``toArrow()``. There ``rank_runs`` keeps each
+One physical engine, Lucene's per-segment search
+(`SearchCollection.java:459-486`): each segment collects its own top k,
+then one merge runs. A search is ONE Spark job of ONE stage with no
+Exchange (``_search_blocks``): the segments are split into at most one
+group per core, and each task (``kernel.segment_task``) reads its
+segments' term-pruned blocks with pyarrow and scores them with
+MaxScore in numpy (PLANS.md §1). The hits, each segment's top k per
+qid, come back through ``collect()``. There ``rank_runs`` keeps each
 qid's docs scoring at or above the kth score, reads only their urls
-(``InvertedIndex.urls``), and orders by (score desc, url asc) — Lucene's
+(``InvertedIndex.urls``), orders by (score desc, url asc) — Lucene's
 BREAK_SCORE_TIES_BY_DOCID (`SearchCollection.java:115-116`) — and
 tie-adjusts through ``tieadjust.rank_hits``, the tail ``LocalSearcher``
 calls too.
 
 A batch whose segments could hand the driver more than
-``DRIVER_TAIL_MAX_CANDIDATES`` candidates keeps that tail in Spark
-instead (``_spark_tail``: a per-qid merge shuffle, a docmap join for
-the survivors' urls, a window order and ``adjust_score_ties``), so
+``DRIVER_TAIL_MAX_CANDIDATES`` candidates runs the same tasks through a
+``mapInArrow`` launcher (``_hits_frame``) and keeps the tail in Spark
+(``_spark_tail``: a per-qid merge shuffle, a docmap join for the
+survivors' urls, a window order and ``adjust_score_ties``), so
 whole-dev-set batches never leave the executors. Both tails give the
 same run.
 
@@ -29,9 +28,8 @@ weights and the per-posting contribution they hand ``_search_blocks``:
 the float32 BM25 tf-part (``bm25.tf_part``) or a float64 shape
 function. A run is driver rows or, from the Spark tail, a DataFrame;
 ``run_frame`` and ``run_rows`` give either form. Tweet search
-(`tweets.py`) takes ``_score_blocks``' hits and applies its own id
-filter and tie order. The tests hold it to ``oracle.py`` and the
-DuckDB SQL oracles.
+(`tweets.py`) takes ``_hits_frame``'s hits and applies its own id
+filter and tie order.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
 to float32 at the end — Lucene's DisjunctionSumScorer likewise sums
@@ -53,18 +51,17 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..index.blocks import decode_block_run
 from ..index.build import SEG_SHIFT
-from .bm25 import BM25Params, BM25Scorer, tf_part
+from ..index.tombstones import drop_dead
+from .bm25 import BM25Params, BM25Scorer
+from .kernel import (BINS, HITS_SCHEMA, BlockRuns, Task, assign_segments,
+                     segment_task)
 from .tieadjust import Hit, Urls, adjust_score_ties, keep_topk, rank_hits
 
 # the ranked run every search entry point returns
 RUN_SCHEMA = "qid int, docid string, rank int, score double"
-BATCH_REPARTITION_MIN_QUERIES = 16
-# the kernel emits ONE row per (segment, qid) with packed arrays:
-# |segments| * |queries| rows reach the driver, not ... * k rows
-ARRAY_RESULT_SCHEMA = "qid int, doc_id array<bigint>, score array<double>"
 # bound on the (doc_id, score) candidates a search may send the driver,
 # counted as |queries| x sum over segments of min(k, segment docs).
 # Past it the merge stays in Spark (``_spark_tail``): its extra jobs
@@ -83,13 +80,11 @@ class InvertedIndex:
 
     ``cache=True`` persists the dictionary and docmap in executor
     memory (the analogue of Lucene's term-dictionary/FS cache,
-    `SearchCollection.java:221-225` ``-inmem``); ``cache_blocks``
-    additionally pins the posting blocks — appropriate when the index
-    fits executor memory (bench/dev), not at full corpus scale where
-    parquet min/max pruning + OS page cache do this job."""
+    `SearchCollection.java:221-225` ``-inmem``). Search tasks read the
+    posting blocks with pyarrow, served from the OS page cache."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 cache: bool = True, cache_blocks: bool = False):
+                 cache: bool = True):
         self.spark = spark
         self.dir = index_dir
         with open(os.path.join(index_dir, "stats.json")) as f:
@@ -109,7 +104,6 @@ class InvertedIndex:
         check_seg_shift(self.manifest, index_dir, SEG_SHIFT)
         check_analysis_version(self.manifest, index_dir)
         self._cache = cache
-        self._cache_blocks = cache_blocks
         self._dfs: Dict[str, DataFrame] = {}
         self._dict_ds = None  # lazy pyarrow dataset for term_stats
         self._docvec_ds = None  # lazy pyarrow dataset for urls
@@ -131,16 +125,16 @@ class InvertedIndex:
     @property
     def dead_by_segment(self) -> Dict[int, np.ndarray]:
         """Lucene-liveDocs view: segment -> sorted local doc ids of
-        tombstoned docs ({} when none). Computed once (broadcast
-        semi-join against the column-pruned docvec), cached driver-
-        side — O(deletes), rides into the kernel closures. An index
-        without the tombstone marker never opens docvec (a Spark job)."""
+        tombstoned docs ({} when none). Read once with pyarrow
+        (``tombstones.dead_doc_ids``) and cached driver-side —
+        O(deletes), rides into the kernel closures."""
         if self._dead is None:
-            from ..index.tombstones import dead_by_segment, has_tombstones
+            from ..index.tombstones import dead_doc_ids
 
-            self._dead = (dead_by_segment(self.spark, self.dir, self.docvec,
-                                          SEG_SHIFT)
-                          if has_tombstones(self.dir) else {})
+            ids = dead_doc_ids(self.dir)
+            segs = ids >> SEG_SHIFT
+            self._dead = {int(s): ids[segs == s] & ((1 << SEG_SHIFT) - 1)
+                          for s in np.unique(segs)}
         return self._dead
 
     @property
@@ -162,7 +156,12 @@ class InvertedIndex:
 
     @property
     def blocks(self) -> DataFrame:
-        return self._load("blocks", self._cache_blocks)
+        return self._load("blocks", False)
+
+    def block_sources(self) -> List[Tuple[str, int]]:
+        """(blocks path, segment offset) of each part the search tasks
+        read (``kernel.read_blocks``): here the index's own blocks."""
+        return [(os.path.join(self.dir, "blocks.parquet"), 0)]
 
     @property
     def docvec(self) -> DataFrame:
@@ -284,251 +283,43 @@ def _query_weights(
     return weights, scorer
 
 
-def _segment_score_fn(
-    weights: Dict[int, Dict[str, np.float32]],
-    scorer_consts: Optional[Tuple[float, float, bool]],
-    seg_counts: Dict[int, int],
-    k: int,
-    shape_fns: Optional[Dict[str, object]] = None,
-    dead_by_seg: Optional[Dict[int, np.ndarray]] = None,
-):
-    """Per-segment scoring kernel. Default mode is float32 BM25:
-    ``scorer_consts`` is ``(cache1, cache2, lossy)`` for
-    ``bm25.tf_part``. When ``shape_fns`` is given
-    (term -> callable(tfs, dls) -> per-posting contribution, float64),
-    the kernel scores an arbitrary similarity through the SAME
-    term-pruned block scan + MaxScore machinery — the Spark analogue
-    of Lucene's pluggable Similarity (`SearchCollection.java:281-334`).
-    Shape functions must be non-negative, increasing in tf and
-    non-increasing in dl (all the reference's similarities are), so
-    shape(max_tf, min_dl) stays a valid block upper bound."""
-    out_dtype = np.float32 if shape_fns is None else np.float64
-
-    def _part(t: str, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        if shape_fns is None:
-            return tf_part(tfs, dls, *scorer_consts)
-        return shape_fns[t](np.asarray(tfs), np.asarray(dls))
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "qid": np.empty(0, dtype=np.int32),
-                "doc_id": np.empty(0, dtype=object),
-                "score": np.empty(0, dtype=object),
-            }
-        )
-
-    def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["segment"].iloc[0])
-        base = seg << SEG_SHIFT
-        count = seg_counts.get(seg, 0)
-        if count == 0:
-            return _empty()
-        # liveDocs (tombstones): dead postings drop at DECODE time, so
-        # accumulation and MaxScore thresholds never see them — ranked
-        # results equal an index that never held the docs (stats stay
-        # stale until a purging merge, Lucene-identical)
-        dead = dead_by_seg.get(seg) if dead_by_seg else None
-
-        def _live(ids: np.ndarray, parts: np.ndarray):
-            if dead is None or len(ids) == 0:
-                return ids, parts
-            from ..index.tombstones import drop_dead
-
-            keep = drop_dead(ids, dead)
-            if keep is None:
-                return ids, parts
-            return ids[keep], parts[keep]
-        pdf = pdf.sort_values(["term", "first_doc"], kind="mergesort")
-        groups = {t: g for t, g in pdf.groupby("term", sort=False)}
-
-        # per-term block metadata (no decode): postings count and the
-        # block-max score bound tf*/(tf* + c1 + c2*dl*) (SURVEY.md §4)
-        meta: Dict[str, Tuple[int, np.ndarray]] = {}
-        for t, g in groups.items():
-            bound = _part(t, g["max_tf"].to_numpy(), g["min_dl"].to_numpy())
-            meta[t] = (int(g["n"].sum()), bound)
-
-        # full-run decode cache, shared across queries
-        decoded: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
-
-        def decode(t: str, lo: Optional[int] = None,
-                   hi: Optional[int] = None):
-            """t's live postings here as (sorted local ids, parts).
-            Full runs are cached across queries. Given a local-doc
-            range [lo, hi], decode only the blocks overlapping it
-            (block-max skipping), unless the full run is cached."""
-            if t in decoded:
-                return decoded[t]
-            g = groups[t]
-            if lo is not None:
-                first = g["first_doc"].to_numpy() - base
-                last = g["last_doc"].to_numpy() - base
-                overlap = (last >= lo) & (first <= hi)
-                if not overlap.any():
-                    return (np.empty(0, dtype=np.int64),
-                            np.empty(0, out_dtype))
-                g = g.iloc[np.nonzero(overlap)[0]]
-            docs, tfs, dls = decode_block_run(
-                list(g["docs_bin"]), list(g["tfs_bin"]), list(g["dls_bin"]),
-                g["n"].to_numpy(), g["first_doc"].to_numpy(),
-                g["last_doc"].to_numpy(),
-            )
-            run = _live((docs - base).astype(np.int64), _part(t, tfs, dls))
-            if lo is None:
-                decoded[t] = run
-            return run
-
-        out_qid: List[np.ndarray] = []
-        out_doc: List[np.ndarray] = []
-        out_score: List[np.ndarray] = []
-        acc = np.zeros(count, dtype=np.float64)
-        # dense touched-doc mask: candidate collection is O(segment
-        # doc count) flatnonzero scans instead of O(n log n)
-        # unique/sort churn per query — the batch-throughput hot path
-        mask = np.zeros(count, dtype=bool)
-        for qid, wmap in weights.items():
-            # SEGMENT-INDEPENDENT term order, (query weight desc, term):
-            # float addition is order-sensitive, so two docs holding the
-            # same contribution multiset must accumulate in the same
-            # order in EVERY segment or their totals drift 1 ulp apart
-            # and break score ties inconsistently with the (score desc,
-            # docid asc) contract. The global weight (boost*idf) tracks
-            # the MaxScore impact order, so pruning stays effective;
-            # correctness of the suffix-bound logic is order-agnostic.
-            terms = sorted((t for t in wmap if t in groups),
-                           key=lambda t: (-float(wmap[t]), t))
-            if not terms:
-                continue
-            cand, scores = _maxscore_query(terms, wmap, meta, decode, acc,
-                                           mask, k, out_dtype)
-            # ties at the kth score are kept: the driver tail applies
-            # the final (score desc, url asc) order
-            cand, scores = keep_topk(cand, scores, k)
-            out_qid.append(qid)
-            out_doc.append(cand + base)
-            out_score.append(scores.astype(np.float64))
-        if not out_qid:
-            return _empty()
-        return pd.DataFrame(
-            {
-                "qid": np.asarray(out_qid, dtype=np.int32),
-                "doc_id": out_doc,
-                "score": out_score,
-            }
-        )
-
-    return score_segment
-
-
-def _maxscore_query(terms, wmap, meta, decode, acc, mask, k, out_dtype):
-    """MaxScore evaluation of one query over one segment.
-
-    Dense-accumulate terms in descending upper-bound order; once the
-    remaining terms' summed upper bound drops below the current kth
-    partial score (a valid lower bound of the final kth score), the
-    remaining terms can no longer introduce new top-k docs — finish
-    them with sorted lookups (searchsorted) restricted to the candidate
-    set, decoding only candidate-overlapping blocks (block-max skip).
-    Final scores of emitted docs are exact, and the top k equals a
-    dense recompute (pinned by ``tests/test_maxscore.py``).
-
-    A term's contribution is ``w * part`` in ``out_dtype`` (float32
-    for BM25, as Lucene multiplies floats), widened into the float64
-    accumulator by ``+=``. ``mask`` is the segment-wide touched-doc
-    workspace (candidate collection = one O(doc-count) flatnonzero
-    scan, no per-term unique/sort); it is returned to all-False before
-    exit."""
-    ws = {t: out_dtype(wmap[t]) for t in terms}
-    ubs = {t: float(ws[t] * meta[t][1].max()) for t in terms}
-    # keep the caller's segment-independent order (weight desc, term):
-    # the per-segment ubs feed the suffix-bound THRESHOLD math, which is
-    # valid in any processing order; re-sorting by segment-local ubs
-    # would make per-doc addition order segment-dependent (see
-    # score_segment) for a marginal pruning gain
-    order = list(terms)
-    suffix = np.concatenate(
-        [np.cumsum([ubs[t] for t in order][::-1])[::-1][1:], [0.0]]
-    )
-    theta = 0.0
-    switch = len(order)
-    for i, t in enumerate(order):
-        if i > 0 and suffix[i] > 0.0:
-            cur = np.flatnonzero(mask)
-            if len(cur) > k:
-                part_scores = acc[cur]
-                theta = float(np.partition(part_scores, len(cur) - k)[len(cur) - k])
-                if suffix[i - 1] < theta:
-                    switch = i
-                    break
-        idx, part = decode(t)
-        acc[idx] += (ws[t] * part).astype(out_dtype, copy=False)
-        mask[idx] = True
-    cand = np.flatnonzero(mask)
-    out = cand
-    if switch < len(order):
-        # candidates that cannot reach theta are dead: their final score
-        # is < theta <= final kth score, so dropping them is exact
-        rem_ub = suffix[switch - 1]
-        out = cand[acc[cand] + rem_ub >= theta]
-        if out.size:
-            lo, hi = int(out[0]), int(out[-1])
-            for t in order[switch:]:
-                d, part = decode(t, lo, hi)
-                if d.size == 0:
-                    continue
-                pos = np.searchsorted(d, out)
-                pos_c = np.minimum(pos, d.size - 1)
-                hit = d[pos_c] == out
-                hpos = pos_c[hit]
-                acc[out[hit]] += (ws[t] * part[hpos]).astype(out_dtype,
-                                                             copy=False)
-    scores = acc[out].astype(out_dtype)
-    acc[cand] = 0.0
-    mask[cand] = False
-    return out, scores
-
-
-def _score_blocks(
+def _segment_tasks(
     index: InvertedIndex,
     weights: Dict[int, Dict[str, float]],
     k: int,
     consts: Optional[Tuple[float, float, bool]],
     shape_fns: Optional[Dict[str, object]] = None,
-) -> Optional[DataFrame]:
-    """The scoring stage of ``_search_blocks``: term-pruned
-    ``blocks`` scan -> per-segment kernel (``_segment_score_fn``) ->
-    packed ``ARRAY_RESULT_SCHEMA`` hits, each segment's top k per qid
-    (docs tied at the kth score kept). ``weights`` is qid -> term ->
-    query weight; ``consts`` feeds the float32 BM25 tf-part, or
-    ``shape_fns`` gives each term's float64 contribution instead.
-    None when no query term has postings."""
-    terms = sorted({t for wmap in weights.values() for t in wmap})
-    if not terms:
-        return None
+) -> Optional[Tuple[List[List[int]], Task]]:
+    """A search's segment groups, at most one per core
+    (``kernel.assign_segments``), and the task that scores a group
+    (``kernel.segment_task``); None when no query term has postings.
+    ``weights`` is qid -> term -> query weight; ``consts`` feeds the
+    float32 BM25 tf-part, or ``shape_fns`` gives each term's float64
+    contribution instead."""
     seg_counts = {int(s): int(c) for s, c in index.stats["segments"].items()}
-    # column-pruned: positional indexes carry pos_bin, which scoring
-    # never reads — keep it out of the parquet scan
-    blocks = index.blocks.select(
-        "term", "segment", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin"
-    ).filter(F.col("term").isin(terms))
-    fn = _segment_score_fn(weights, consts, seg_counts, k,
-                           shape_fns=shape_fns,
-                           dead_by_seg=index.dead_by_segment or None)
-    # over-provision the group hash space for BATCH workloads: with
-    # |segments| groups into |segments| reducers, balls-in-bins
-    # collisions put 2-3 segments on one task and leave a third of the
-    # cores idle (the straggler IS the batch latency). 4x partitions
-    # make collisions rare; the explicit repartition satisfies
-    # applyInPandas's clustering requirement, so no second shuffle is
-    # added. Small batches skip it — their per-task python work is
-    # tiny, so collision cost is below the extra exchange's latency.
-    if len(weights) >= BATCH_REPARTITION_MIN_QUERIES:
-        n_parts = min(512, 4 * max(1, len(seg_counts)))
-        blocks = blocks.repartition(n_parts, "segment")
-    return blocks.groupBy("segment").applyInPandas(
-        fn, schema=ARRAY_RESULT_SCHEMA
-    )
+    groups = assign_segments(seg_counts,
+                             index.spark.sparkContext.defaultParallelism)
+    if not groups or not any(weights.values()):
+        return None
+    return groups, segment_task(index.block_sources(), weights, k,
+                                seg_counts, consts, shape_fns,
+                                index.dead_by_segment or None)
+
+
+def _hits_frame(index: InvertedIndex, groups: List[List[int]],
+                task: Task) -> DataFrame:
+    """The tasks launched through ``mapInArrow`` over a local relation
+    of the groups (one row, so one partition, per group), for callers
+    that keep the hits in Spark."""
+
+    def run(batches):
+        for b in batches:
+            for segs in b.column("segments").to_pylist():
+                yield from task(segs)
+
+    return index.spark.createDataFrame(
+        [(g,) for g in groups], "segments array<int>",
+    ).mapInArrow(run, from_arrow_schema(HITS_SCHEMA))
 
 
 def _search_blocks(
@@ -538,16 +329,19 @@ def _search_blocks(
     consts: Optional[Tuple[float, float, bool]],
     shape_fns: Optional[Dict[str, object]] = None,
 ) -> Run:
-    """The one Spark search: ``_score_blocks`` is its only job; its
-    packed hits come to the driver as Arrow for ``rank_runs``, unless
-    they could exceed ``DRIVER_TAIL_MAX_CANDIDATES`` (``_spark_tail``)."""
-    hits = _score_blocks(index, weights, k, consts, shape_fns)
-    if hits is None:
+    """The one Spark search: one job of one stage, a task per segment
+    group (``_segment_tasks``), whose hits come to the driver for
+    ``rank_runs``, unless they could exceed
+    ``DRIVER_TAIL_MAX_CANDIDATES`` (``_spark_tail``)."""
+    tasks = _segment_tasks(index, weights, k, consts, shape_fns)
+    if tasks is None:
         return {}
+    groups, task = tasks
     per_q = sum(min(k, int(c)) for c in index.stats["segments"].values())
     if len(weights) * per_q > DRIVER_TAIL_MAX_CANDIDATES:
-        return _spark_tail(index, hits, k)
-    t = hits.toArrow()
+        return _spark_tail(index, _hits_frame(index, groups, task), k)
+    t = pa.Table.from_batches(index.spark.sparkContext.parallelize(
+        groups, len(groups)).flatMap(task).collect(), HITS_SCHEMA)
     lens = pc.list_value_length(t["doc_id"]).to_numpy()
     return rank_runs(index, np.repeat(t["qid"].to_numpy(), lens),
                      pc.list_flatten(t["doc_id"]).to_numpy(),
@@ -577,8 +371,11 @@ def rank_runs(index: InvertedIndex, qids: np.ndarray, doc_ids: np.ndarray,
 def _spark_tail(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
     """``rank_runs`` kept in Spark for a batch too large for the driver:
     a per-qid shuffle merges the packed hits (``keep_topk``), the ~k
-    survivors per qid are broadcast into a streamed docmap scan for
-    their urls, then ordered (score desc, url asc) and tie-adjusted."""
+    survivors per qid join the docmap for their urls, then are ordered
+    (score desc, url asc) and tie-adjusted. The join is left to AQE,
+    which broadcasts the smaller side: forcing the survivors' side
+    (queries x k rows, 10M at 10K queries) ran a 3g driver out of
+    memory on the second such batch in one Spark session."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         docs, scores = keep_topk(
@@ -591,8 +388,7 @@ def _spark_tail(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
 
     merged = hits.groupBy("qid").applyInPandas(
         merge, schema="qid int, doc_id long, score double")
-    joined = index.docmap.select("doc_id", "url").join(
-        F.broadcast(merged), "doc_id")
+    joined = index.docmap.select("doc_id", "url").join(merged, "doc_id")
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
     ranked = (joined.withColumn("rank", F.row_number().over(w))
               .filter(F.col("rank") <= k)
@@ -655,49 +451,30 @@ def postings_from_blocks(index: InvertedIndex,
     scale-safe replacement for exploding the docvec posting arrays
     (O(matching postings), not O(corpus)). Blocks decode independently
     (each block's delta chain starts at its own ``first_doc``), so no
-    grouping shuffle is needed — one Arrow pass over the pruned scan."""
+    grouping shuffle is needed — one Arrow pass over the pruned scan,
+    each batch's term runs decoded through ``kernel.BlockRuns``."""
     if not terms:
         return index.spark.createDataFrame([], POSTINGS_SCHEMA)
     blocks = index.blocks.select(
-        "term", "segment", "first_doc", "last_doc", "n",
-        "docs_bin", "tfs_bin", "dls_bin",
+        "term", "segment", "first_doc", "last_doc", "n", *BINS,
     ).filter(F.col("term").isin(sorted(set(terms))))
     dead_global = index.dead_global  # liveDocs: drop tombstoned docs
 
     def decode(batches):
         for b in batches:
-            if len(b) == 0:
+            if not b.num_rows:
                 continue
-            b = b.sort_values(["term", "segment", "first_doc"],
-                              kind="mergesort")
-            out_t: List[np.ndarray] = []
-            out_d: List[np.ndarray] = []
-            out_f: List[np.ndarray] = []
-            out_l: List[np.ndarray] = []
-            for (t, _seg), g in b.groupby(["term", "segment"], sort=False):
-                docs, tfs, dls = decode_block_run(
-                    list(g["docs_bin"]), list(g["tfs_bin"]),
-                    list(g["dls_bin"]), g["n"].to_numpy(),
-                    g["first_doc"].to_numpy(), g["last_doc"].to_numpy(),
-                )
-                if len(dead_global):
-                    from ..index.tombstones import drop_dead
+            runs = BlockRuns(pa.Table.from_batches([b]))
+            for t in np.unique(runs.cols["term"]):
+                cols = runs.decode(t)
+                keep = drop_dead(cols[0], dead_global)
+                if keep is not None:
+                    cols = [c[keep] for c in cols]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.repeat(t, len(cols[0])), *cols],
+                    names=["term", "doc_id", "tf", "doclen"])
 
-                    keep = drop_dead(docs.astype(np.int64), dead_global)
-                    if keep is not None:
-                        docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-                out_t.append(np.full(len(docs), t, dtype=object))
-                out_d.append(docs)
-                out_f.append(tfs)
-                out_l.append(dls)
-            yield pd.DataFrame({
-                "term": np.concatenate(out_t),
-                "doc_id": np.concatenate(out_d),
-                "tf": np.concatenate(out_f),
-                "doclen": np.concatenate(out_l),
-            })
-
-    return blocks.mapInPandas(decode, schema=POSTINGS_SCHEMA)
+    return blocks.mapInArrow(decode, schema=POSTINGS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

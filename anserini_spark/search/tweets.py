@@ -12,10 +12,11 @@
   ``BREAK_SCORE_TIES_BY_TWEETID`` (`SearchCollection.java:117-119`),
   not the default (score desc, docid asc).
 
-Scoring is the block kernel's scoring stage (``searcher._score_blocks``,
-float32 BM25, tombstones masked at decode) with k = the index's slot
-count: MaxScore never cuts and no per-segment top-k fires, so every
-matching live doc comes out. The packed hits are exploded, joined to
+Scoring is the block kernel's segment tasks through ``mapInArrow``
+(``searcher._hits_frame``, float32 BM25, tombstones masked at decode)
+with k = the index's slot count: MaxScore never cuts and no
+per-segment top-k fires, so every matching live doc comes out. The
+packed hits are exploded, joined to
 the docmap, cut by the per-query id range (BEFORE the top-k), and
 ranked in the tweet tie order. The filter is a plain comparison on a
 numeric column, so at scale it is a pushed predicate, never a join.
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .searcher import (RUN_SCHEMA, BM25Params, InvertedIndex,
-                       _query_weights, _score_blocks)
+                       _hits_frame, _query_weights, _segment_tasks)
 from .tieadjust import adjust_score_ties
 
 
@@ -42,10 +43,11 @@ def search_tweets(index: InvertedIndex, queries: Dict[int, str],
     run-file sinks expect; ``id_long`` is its numeric value."""
     weights, scorer = _query_weights(index, queries, params)
     slots = sum(int(c) for c in index.stats["segments"].values())
-    packed = _score_blocks(index, weights, slots,
+    tasks = _segment_tasks(index, weights, slots,
                            (scorer.cache1, scorer.cache2, params.lossy))
-    if packed is None:
+    if tasks is None:
         return index.spark.createDataFrame([], RUN_SCHEMA)
+    packed = _hits_frame(index, *tasks)
     hits = packed.select(
         "qid", F.posexplode("doc_id").alias("i", "doc_id"), "score"
     ).select("qid", "doc_id", F.col("score")[F.col("i")].alias("score"))

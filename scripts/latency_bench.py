@@ -10,10 +10,12 @@ LocalSearcher p50/p95 at k=1000 over MS MARCO-style multi-term
 queries sampled log-uniformly from head/mid term ranks, plus the open
 time of both modes (preload and cold). Next to them it reports the
 Spark engine on the same index and queries: ``SimpleSearcher.search``
-p50 and the Spark jobs each query launches, so the serving gap shows
-in one command, and the Python task floor: the p50 of a one-partition
-no-op ``mapInArrow`` job, the fixed cost every Python task pays (a
-regression in per-task worker cost shows there first). The fixture
+p50 and the Spark jobs and stages each query launches, so the serving
+gap shows in one command, and two Python task floors: the p50 of a
+one-partition no-op RDD ``mapPartitions`` job (the launcher a search
+uses) and of a one-partition no-op ``mapInArrow`` job (the launcher of
+the Spark tail and tweet search), the fixed cost every Python task
+pays (a regression in per-task worker cost shows there first). The fixture
 index is built once under the temp dir on the session default
 ``local[$SPARK_GRAFT_CPUS]``, with partitions derived from that core
 count.
@@ -54,16 +56,24 @@ def _passthrough(batches):
     yield from batches
 
 
-def python_task_floor_s(spark) -> float:
-    """p50 wall of a one-partition no-op ``mapInArrow`` job."""
-    df = spark.range(1, numPartitions=1)
+def _p50_s(job) -> float:
+    """p50 wall of ``job()`` over FLOOR_JOBS runs after 3 warm-ups."""
     lats = []
     for i in range(3 + FLOOR_JOBS):
         t0 = time.perf_counter()
-        df.mapInArrow(_passthrough, df.schema).collect()
+        job()
         if i >= 3:
             lats.append(time.perf_counter() - t0)
     return sorted(lats)[len(lats) // 2]
+
+
+def python_task_floors_s(spark) -> tuple[float, float]:
+    """p50 walls of a one-partition no-op RDD ``mapPartitions`` job and
+    of a one-partition no-op ``mapInArrow`` job."""
+    rdd = spark.sparkContext.parallelize([0], 1)
+    df = spark.range(1, numPartitions=1)
+    return (_p50_s(lambda: rdd.mapPartitions(_passthrough).collect()),
+            _p50_s(lambda: df.mapInArrow(_passthrough, df.schema).collect()))
 
 
 def main() -> None:
@@ -140,19 +150,23 @@ def main() -> None:
     qs = list(queries.values())
     for q in qs[:2]:
         ss.search(q, k=args.k)
-    spark_lats, jobs = [], []
+    spark_lats, jobs, stages = [], [], []
     for i, q in enumerate(qs[:SPARK_QUERIES]):
         group = f"latency-bench-{i}"
         sc.setJobGroup(group, "latency_bench single query")
         t0 = time.perf_counter()
         ss.search(q, k=args.k)
         spark_lats.append(time.perf_counter() - t0)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        jobs.append(len(ids))
+        stages.append(sum(len(sc.statusTracker().getJobInfo(j).stageIds)
+                          for j in ids))
     sc.setLocalProperty("spark.jobGroup.id", None)
-    floor_s = python_task_floor_s(spark)
+    rdd_floor_s, arrow_floor_s = python_task_floors_s(spark)
     spark.stop()
     spark_lats.sort()
     jobs.sort()
+    stages.sort()
 
     report = {
         "docs": args.docs,
@@ -168,7 +182,9 @@ def main() -> None:
         "mean_hits": round(sum(n_hits) / len(n_hits), 1),
         "spark_p50_ms": round(spark_lats[len(spark_lats) // 2] * 1000, 1),
         "spark_jobs_per_query": jobs[len(jobs) // 2],
-        "python_task_floor_ms": round(floor_s * 1000, 1),
+        "spark_stages_per_query": stages[len(stages) // 2],
+        "rdd_task_floor_ms": round(rdd_floor_s * 1000, 1),
+        "python_task_floor_ms": round(arrow_floor_s * 1000, 1),
     }
     print(json.dumps(report, indent=2))
 
@@ -191,8 +207,10 @@ Cold on-disk pyarrow mode (open {report['cold_open_ms']} ms): p50
 {report['cold_p50_ms']} ms, p95 {report['cold_p95_ms']} ms.
 Spark engine (`SimpleSearcher.search`, {len(spark_lats)} queries after
 2 warm-ups): p50 {report['spark_p50_ms']} ms, median
-{report['spark_jobs_per_query']} Spark jobs per query; Python task
-floor (one-partition no-op `mapInArrow` job, p50 of {FLOOR_JOBS})
+{report['spark_jobs_per_query']} Spark jobs and
+{report['spark_stages_per_query']} stages per query; Python task
+floors (p50 of {FLOOR_JOBS} one-partition no-op jobs): RDD
+`mapPartitions` {report['rdd_task_floor_ms']} ms, `mapInArrow`
 {report['python_task_floor_ms']} ms.
 Reference SimpleSearcher: ~60 ms on MS MARCO passage dev (k=1000) —
 **the warm serving path beats the reference's latency at the same

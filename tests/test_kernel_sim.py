@@ -1,7 +1,7 @@
 """Pluggable-similarity kernel engine: ranks and scores of all six
-similarities vs a brute-force python recompute, and a plan assertion
+similarities vs a brute-force python recompute, and a read assertion
 that the kernel path never scans the full docvec postings (term-pruned
-blocks scan only)."""
+blocks read only)."""
 
 import pytest
 
@@ -13,7 +13,8 @@ from anserini_spark.search.similarities import (
     search_inl2,
     search_spl,
 )
-from tests.runcheck import assert_matches_brute, scoring_plan
+from tests.runcheck import (assert_matches_brute, assert_term_pruned,
+                            kernel_reads)
 from tests.test_qld import brute_qld, brute_qljm
 from tests.test_similarities import (
     brute,
@@ -59,13 +60,14 @@ def test_kernel_matches_dataframe(spark, tiny_index, tiny_docs, fn, kw):
                          BRUTE[fn](tiny_docs, kw), QUERIES, K)
 
 
-def test_kernel_plan_is_term_pruned(spark, tiny_index, monkeypatch):
-    """The kernel similarity's scoring stage must read blocks.parquet
-    with the query terms pushed into the scan, and must NOT explode
-    docvec postings (no full-corpus scan)."""
+def test_kernel_read_is_term_pruned(spark, tiny_index, monkeypatch):
+    """The kernel similarity's tasks read blocks.parquet with the query
+    terms pushed into the pyarrow read and only the kernel's columns
+    (never pos_bin), and open nothing else (no docvec, no full-corpus
+    scan)."""
     idx = InvertedIndex(spark, tiny_index)
-    plan = scoring_plan(monkeypatch,
-                        lambda: search_qld(idx, {1: "spark merge"}, k=10))
-    assert "blocks" in plan
-    assert "PushedFilters: [In(term" in plan
-    assert "Generate explode" not in plan and "arrays_zip" not in plan
+    reads = kernel_reads(monkeypatch, lambda: search_qld(
+        idx, {1: "spark merge"}, k=10).collect(), idx)
+    terms = idx.analyze_query("spark merge")
+    assert len(terms) == 2
+    assert_term_pruned(reads, terms)

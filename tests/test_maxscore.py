@@ -1,12 +1,14 @@
 """MaxScore/block-max pruned kernel vs a dense numpy recompute —
 property-style randomized identity test, no Spark session (drives
-``_segment_score_fn`` directly on encoded blocks). float32 scores
-must match exactly."""
+``kernel.segment_task`` directly over encoded blocks written as
+parquet). float32 scores must match exactly."""
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from anserini_spark.index.blocks import encode_blocks
-from anserini_spark.search.searcher import _segment_score_fn
+from anserini_spark.search.kernel import HITS_SCHEMA, segment_task
 
 
 def _mk_segment(rng, n_docs, terms, zipf_df):
@@ -29,17 +31,22 @@ def _mk_segment(rng, n_docs, terms, zipf_df):
     return bl, rows
 
 
-def _kernel_topk(fn, pdf, k):
-    """Run the kernel on one segment's blocks; the kernel emits packed
-    per-qid arrays (possibly a superset of the top-k when scores tie
-    at the kth boundary): explode, apply the deterministic (score
-    desc, doc asc) order, cut to k."""
+def _kernel_topk(tmp_path, bl, weights, consts, seg_counts, k):
+    """Run the kernel's task over one segment's blocks; it emits each
+    qid's hits (possibly a superset of the top-k when scores tie at
+    the kth boundary): apply the deterministic (score desc, doc asc)
+    order, cut to k."""
+    path = tmp_path / "blocks.parquet"
+    path.mkdir(exist_ok=True)
+    pq.write_table(pa.Table.from_pandas(bl, preserve_index=False),
+                   str(path / "part-0.parquet"))
+    task = segment_task([(str(path), 0)], weights, k, seg_counts, consts)
     out = {}
-    for _, row in fn(pdf.copy()).iterrows():
-        out.setdefault(int(row["qid"]), []).extend(
-            (int(d), float(np.float32(s)))
-            for d, s in zip(row["doc_id"], row["score"])
-        )
+    for row in pa.Table.from_batches(task(sorted(seg_counts)),
+                                     HITS_SCHEMA).to_pylist():
+        out.setdefault(row["qid"], []).extend(
+            (d, float(np.float32(s))) for d, s in zip(row["doc_id"],
+                                                      row["score"]))
     return {qid: sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
             for qid, pairs in out.items()}
 
@@ -68,7 +75,7 @@ def _dense_topk(rows, weights, c1, c2, k):
     return out
 
 
-def test_maxscore_identical_to_dense():
+def test_maxscore_identical_to_dense(tmp_path):
     rng = np.random.default_rng(23)
     n_docs = 4000
     terms = [f"t{i}" for i in range(12)]
@@ -85,18 +92,40 @@ def test_maxscore_identical_to_dense():
         }
     seg_counts = {0: n_docs}
     for k in (5, 50, 1000):
-        fn = _segment_score_fn(weights, (0.54, 0.0036, False), seg_counts, k)
-        got = _kernel_topk(fn, bl, k)
+        got = _kernel_topk(tmp_path, bl, weights, (0.54, 0.0036, False),
+                           seg_counts, k)
         want = _dense_topk(rows, weights, 0.54, 0.0036, k)
         assert got.keys() == want.keys()
         for qid in want:
             assert got[qid] == want[qid], f"qid {qid} k={k}"
 
 
-def test_maxscore_single_term_and_tiny_k():
+def test_maxscore_single_term_and_tiny_k(tmp_path):
     rng = np.random.default_rng(5)
     bl, rows = _mk_segment(rng, 500, ["only"], [0.5])
     weights = {1: {"only": np.float32(2.0)}}
-    fn = _segment_score_fn(weights, (0.54, 0.004, False), {0: 500}, 1)
-    assert _kernel_topk(fn, bl, 1) == _dense_topk(rows, weights, 0.54,
-                                                  0.004, 1)
+    got = _kernel_topk(tmp_path, bl, weights, (0.54, 0.004, False),
+                       {0: 500}, 1)
+    assert got == _dense_topk(rows, weights, 0.54, 0.004, 1)
+
+
+def test_assign_segments_is_lpt_and_fills_every_task():
+    """Each segment with docs lands on exactly one task; no task gets a
+    second segment while another task is empty; largest segments go
+    first onto the least-loaded task."""
+    from anserini_spark.search.kernel import assign_segments
+
+    rng = np.random.default_rng(11)
+    for _ in range(200):
+        counts = {int(s): int(c) for s, c in enumerate(
+            rng.integers(0, 1000, rng.integers(1, 40)))}
+        n = int(rng.integers(1, 12))
+        groups = assign_segments(counts, n)
+        placed = sorted(s for g in groups for s in g)
+        assert placed == sorted(s for s, c in counts.items() if c > 0)
+        assert len(groups) == min(n, len(placed))
+        assert all(groups), groups
+        assert all(g == sorted(g) for g in groups)
+    assert assign_segments({0: 10, 1: 6, 2: 5, 3: 4, 4: 0}, 2) == [[0, 3],
+                                                                   [1, 2]]
+    assert assign_segments({}, 4) == [] and assign_segments({3: 0}, 4) == []

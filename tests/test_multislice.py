@@ -72,6 +72,19 @@ def test_union_reads_urls_across_slice_schemas(spark, sliced, tmp_path):
     assert union == _hits(InvertedIndex(spark, batch_dir))
 
 
+def test_union_spark_tail_matches_batch(spark, sliced, monkeypatch):
+    """Past the driver-tail bound the union's segment tasks run under
+    the ``mapInArrow`` launcher (slice offsets applied to each read)
+    and the tail stays in Spark: the run still equals the batch
+    build's."""
+    from anserini_spark.search import searcher
+
+    batch_dir, dirs = sliced
+    want = _hits(InvertedIndex(spark, batch_dir))
+    monkeypatch.setattr(searcher, "DRIVER_TAIL_MAX_CANDIDATES", 0)
+    assert _hits(MultiSliceIndex(spark, dirs)) == want
+
+
 def test_union_matches_batch_similarity_and_rm3(spark, sliced):
     from anserini_spark.search.kernel_sim import search_kernel_similarity
     from anserini_spark.search.rm3 import search_rm3

@@ -15,6 +15,7 @@ from anserini_spark.search.searcher import (
     SimpleSearcher,
     search_kernel,
 )
+from tests.runcheck import jobs_and_stages
 
 QUERIES = {
     1: "spark merge join",
@@ -133,47 +134,34 @@ def test_simple_searcher_set_qld(spark, tiny_index):
 
 
 def test_search_is_one_spark_job(spark, tiny_index):
-    """A search() and a 50-query list-form batch_search each run only
-    the scoring job (a scan stage and a per-segment kernel stage under
-    AQE): the merge, url lookup, order and tie rounding run on the
-    driver. The first search also opens the index's parquet sources,
-    so it is asked before the job group is set."""
+    """A search() and a 50-query list-form batch_search each run one
+    Spark job of one stage (no Exchange): a task per segment group
+    reads and scores its blocks; the merge, url lookup, order and tie
+    rounding run on the driver."""
     s = SimpleSearcher(spark, tiny_index)
     s.search("spark merge join", k=10)
-    sc = spark.sparkContext
     texts = [QUERIES[q] for q in (1, 2, 4, 5, 6)] * 10
     calls = {
         "single": lambda: s.search("customer value", k=1000),
         "batch50": lambda: s.batch_search(
             texts, [str(i) for i in range(50)], k=1000),
     }
-    try:
-        for name, call in calls.items():
-            group = f"one-job-{name}"
-            sc.setJobGroup(group, name)
-            assert call()
-            jobs = sc.statusTracker().getJobIdsForGroup(group)
-            assert 1 <= len(jobs) <= 2, (name, len(jobs))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    for name, call in calls.items():
+        assert jobs_and_stages(spark.sparkContext, f"one-job-{name}",
+                                call) == (1, 1), name
 
 
 def test_first_search_of_a_new_handle_skips_docvec(spark, tiny_index):
-    """A new handle's first search on an untombstoned index opens only
-    the sources it scores from: docvec (a schema-inference job) is not
-    touched when there is no tombstone marker."""
+    """A new handle's first search on an untombstoned index runs only
+    its scoring job: no Spark source is opened (blocks are read by the
+    tasks, docvec is not touched without a tombstone marker)."""
     from anserini_spark.index.tombstones import has_tombstones
 
     assert not has_tombstones(tiny_index)
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("first-search", "first search of a new handle")
-        assert SimpleSearcher(spark, tiny_index).search("spark merge join",
-                                                        k=10)
-        jobs = sc.statusTracker().getJobIdsForGroup("first-search")
-        assert 1 <= len(jobs) <= 3, len(jobs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_and_stages(
+        spark.sparkContext, "first-search",
+        lambda: SimpleSearcher(spark, tiny_index).search(
+            "spark merge join", k=10))[0] == 1
 
 
 def test_term_stats_read_error_surfaces(spark, tiny_index, monkeypatch):
@@ -224,3 +212,29 @@ def test_spark_tail_matches_driver_tail(spark, tiny_index, monkeypatch):
     assert [searcher.run_rows(r) for r in spark_side[:2]] == list(driver[:2])
     assert spark_side[2] == driver[2]
     assert any(r for r in driver[0].values())
+
+
+@pytest.mark.parametrize("damage,message", [
+    ("empty", "holds no parquet file"),
+    ("no_max_tf", r"lacks \['max_tf'\]"),
+])
+def test_search_raises_on_a_broken_blocks_dir(spark, tiny_index, tmp_path,
+                                              damage, message):
+    """A search over a blocks.parquet that holds no parquet file, or
+    whose files lack a column the kernel reads, raises; it does not
+    return an empty or partial run."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    copy = str(tmp_path / "broken")
+    shutil.copytree(tiny_index, copy)
+    for f in glob.glob(os.path.join(copy, "blocks.parquet", "*.parquet")):
+        if damage == "empty":
+            os.remove(f)
+        else:
+            pq.write_table(pq.read_table(f).drop_columns(["max_tf"]), f)
+    with pytest.raises(Exception, match=message):
+        SimpleSearcher(spark, copy).search("spark merge join", k=10)

@@ -20,7 +20,7 @@ from anserini_spark.index.tombstones import add_tombstones
 from anserini_spark.search.bm25 import BM25Params
 from anserini_spark.search.searcher import (InvertedIndex, SimpleSearcher,
                                             search_kernel)
-from tests.runcheck import assert_matches_brute_exactly
+from tests.runcheck import assert_matches_brute_exactly, jobs_and_stages
 from tests.test_sdm import _brute_sdm
 
 Q = "spark merge join"
@@ -62,6 +62,14 @@ def test_deleted_docs_vanish_surviving_scores_unchanged(spark, tombed):
         # ranks close up — compare the 4-decimal base within that
         assert u1 == u2
         assert abs(s1 - s2) < 2e-5, (u1, s1, s2)
+
+
+def test_first_search_of_a_tombstoned_index_is_one_job(spark, tombed):
+    """A new handle reads its tombstones with pyarrow: its first search
+    on a tombstoned index is still one Spark job."""
+    _, d, _, _, _ = tombed
+    assert jobs_and_stages(spark.sparkContext, "tombstoned-first", lambda:
+                           SimpleSearcher(spark, d).search(Q, k=10)) == (1, 1)
 
 
 def test_similarity_kernel_consults_tombstones(spark, tombed):

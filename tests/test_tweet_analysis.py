@@ -128,17 +128,22 @@ def test_tweet_search_range_and_tiebreak(spark, tweet_idx):
         assert s450[d] == sall[d]
 
 
-def test_tweet_search_plan_is_term_pruned(spark, tweet_idx):
-    """Tweet search scores through the term-pruned block kernel: the
-    executed plan scans ``blocks`` and explodes no docvec postings."""
+def test_tweet_search_read_is_term_pruned(spark, tweet_idx, monkeypatch):
+    """Tweet search scores through the block kernel's segment tasks:
+    they read blocks.parquet with the query terms pushed into the
+    pyarrow read, and the Spark plan explodes no docvec postings."""
     from anserini_spark.search.searcher import BM25Params, InvertedIndex
     from anserini_spark.search.tweets import search_tweets
+    from tests.runcheck import assert_term_pruned, kernel_reads
 
     idx = InvertedIndex(spark, tweet_idx)
-    plan = (search_tweets(idx, {1: "spark"}, {1: 450}, BM25Params(k=5))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "blocks" in plan
-    assert "arrays_zip" not in plan  # no docvec posting explode
+    plans = []
+    reads = kernel_reads(monkeypatch, lambda: plans.append(
+        search_tweets(idx, {1: "spark"}, {1: 450}, BM25Params(k=5))
+        ._jdf.queryExecution().executedPlan().toString()), idx)
+    assert "MapInArrow" in plans[0]
+    assert "arrays_zip" not in plans[0]  # no docvec posting explode
+    assert_term_pruned(reads, idx.analyze_query("spark"))
 
 
 def test_tweet_search_scores_equal_kernel(spark, tweet_idx):
