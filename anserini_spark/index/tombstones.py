@@ -15,7 +15,7 @@ inherits exactly these semantics through Lucene). Same contract here:
   first consulted and caches them; deletes added afterwards are seen
   by NEW reader instances, not retroactively by old ones — reopen to
   observe, exactly like ``DirectoryReader.openIfChanged``.
-* Query time: `search/searcher.py`'s kernel drops dead postings at
+* Query time: the kernel (`search/kernel.py`) drops dead postings at
   DECODE time (before accumulation), so MaxScore's threshold never
   feeds on dead docs and the ranked result equals an index that never
   contained them — EXCEPT stats/df/cf, which stay stale until a merge
@@ -32,9 +32,9 @@ inherits exactly these semantics through Lucene). Same contract here:
 
 Scale shape: tombstone lookup is one pyarrow docvec read with the
 deleted urls pushed into it (``dead_doc_ids``, no Spark job), at first
-use by a searcher, cached; the per-segment
-dead-id arrays live on the driver and ride into the kernel closure —
-bounded by delete count, not corpus size. EVERY engine consults
+use by a searcher, cached; the sorted dead-id
+array lives on the driver and rides into the kernel closure — bounded
+by delete count, not corpus size. EVERY engine consults
 liveDocs, and every one at decode: the block kernel (BM25, the
 similarities, impact and tweet search), SDM's positional kernel and
 `postings_from_blocks` (boolean set ops) — pinned across all of them

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import Dict, Optional, Tuple
 
 import numpy as np
 
@@ -69,3 +70,55 @@ def tf_part(tfs, dls, cache1, cache2, lossy: bool) -> np.ndarray:
     dl32 = (quantize_length(dls) if lossy
             else np.asarray(dls)).astype(np.float32)
     return tf32 / (tf32 + np.float32(cache1) + np.float32(cache2) * dl32)
+
+
+def query_weights(
+    index, queries: Dict[int, str], params: BM25Params,
+    boosts: Optional[Dict[int, Dict[str, float]]] = None,
+    boosts_are_final: bool = False,
+) -> Tuple[Dict[int, Dict[str, np.float32]], BM25Scorer]:
+    """Analyze queries, look up dfs, precompute float32 term weights,
+    for any ``index`` with ``stats``, ``analyze_query(text)`` and
+    ``term_dfs(terms)`` (the Spark and the local searcher alike).
+
+    Bag-of-words semantics (`BagOfWordsQueryGenerator.java:34-43`):
+    duplicate query terms act as boost = occurrence count. When
+    ``boosts`` is given (RM3/expansion path: pre-analyzed term ->
+    boost maps, `Rm3Reranker.java:96-116` BoostQuery analogue), the
+    per-term weight is boost * idf and ``queries`` text is ignored for
+    those qids."""
+    scorer = BM25Scorer(index.stats["doc_count"], index.stats["avgdl"], params)
+    boosts = boosts or {}
+    per_q_tokens = {
+        qid: index.analyze_query(text)
+        for qid, text in queries.items()
+        if qid not in boosts
+    }
+    all_terms = {t for toks in per_q_tokens.values() for t in toks}
+    all_terms |= {t for m in boosts.values() for t in m}
+    dfs = index.term_dfs(all_terms)
+    weights: Dict[int, Dict[str, np.float32]] = {}
+    for qid, toks in per_q_tokens.items():
+        wmap: Dict[str, np.float32] = {}
+        for t in toks:
+            if t not in dfs:  # zero-hit term: no postings, contributes 0
+                continue
+            if t in wmap:
+                wmap[t] = np.float32(wmap[t] + scorer.weight(dfs[t]))
+            else:
+                wmap[t] = scorer.weight(dfs[t])
+        weights[qid] = wmap
+    for qid, bmap in boosts.items():
+        if boosts_are_final:
+            # BM25PRF path: the boost IS the term weight (idf ≡ 1,
+            # `BM25PrfReranker.java:54-65` BM25PrfSimilarity)
+            weights[qid] = {
+                t: np.float32(b) for t, b in bmap.items() if t in dfs
+            }
+        else:
+            weights[qid] = {
+                t: np.float32(np.float32(b) * scorer.weight(dfs[t]))
+                for t, b in bmap.items()
+                if t in dfs
+            }
+    return weights, scorer

@@ -1,11 +1,13 @@
-"""The per-segment scoring kernel of a search, without Spark or pandas.
+"""The scoring kernel of every BM25-family search, without Spark or
+pandas.
 
-A search splits the index's segments into task groups
-(``assign_segments``). Each task (``segment_task``) reads its segments'
-term-pruned blocks with pyarrow into one ``BlockRuns`` view, the view
-``LocalSearcher`` reads too, scores every segment with MaxScore
-(``_maxscore_query``) and returns each segment's top k per qid. Spark
-only schedules the tasks (``searcher._search_blocks``).
+``score_group`` scores a group of segments as one dense slot space
+(``Group``) with MaxScore (``_maxscore_query``) and returns each qid's
+top k. ``LocalSearcher`` calls it over all of an index's segments; a
+Spark search splits the segments into task groups
+(``assign_segments``), and each task (``segment_task``) reads its
+group's term-pruned blocks with pyarrow into one ``BlockRuns`` view and
+calls it. Spark only schedules the tasks (``searcher._search_blocks``).
 """
 
 from __future__ import annotations
@@ -29,9 +31,9 @@ BINS = ("docs_bin", "tfs_bin", "dls_bin")
 # the block columns the kernel reads: never pos_bin or sum_tf
 KERNEL_COLS = ["term", "segment", "first_doc", "last_doc", "n", "max_tf",
                "min_dl", *BINS]
-# a task's hits: a batch per segment, a row per qid with the docs the
-# segment keeps packed (one segment's batch, not a task's, bounds the
-# memory a task's output holds at once)
+# a task's hits: one batch per segment group, a row per qid with the
+# group's top k packed (at most |queries| x k docs, however many
+# segments the group has)
 HITS_SCHEMA = pa.schema([("qid", pa.int32()),
                          ("doc_id", pa.list_(pa.int64())),
                          ("score", pa.list_(pa.float64()))])
@@ -55,17 +57,11 @@ class BlockRuns:
         self.cols = {c: a.to_numpy(zero_copy_only=False)
                      for c, a in cols.items()}
 
-    def run(self, term: str, segment: Optional[int] = None) -> Tuple[int, int]:
-        """Row range [lo, hi) of ``term``'s run, or of its ``segment``
-        part: searchsorted on the term, then the segment column."""
+    def run(self, term: str) -> Tuple[int, int]:
+        """Row range [lo, hi) of ``term``'s run (a searchsorted)."""
         terms = self.cols["term"]
-        lo = int(np.searchsorted(terms, term, side="left"))
-        hi = int(np.searchsorted(terms, term, side="right"))
-        if segment is not None:
-            segs = self.cols["segment"][lo:hi]
-            lo, hi = (lo + int(np.searchsorted(segs, segment, side="left")),
-                      lo + int(np.searchsorted(segs, segment, side="right")))
-        return lo, hi
+        return (int(np.searchsorted(terms, term, side="left")),
+                int(np.searchsorted(terms, term, side="right")))
 
     def decode(self, term: str):
         """(doc_ids, tfs, doclens) of ``term``'s run; empty if absent."""
@@ -76,6 +72,35 @@ class BlockRuns:
         c = self.cols
         return decode_block_range(*self.bins, c["n"], c["first_doc"],
                                   c["last_doc"], lo, hi)
+
+
+class Group:
+    """Segments scored as one dense slot space: a doc's slot is its
+    segment's offset in the group plus its local id, the offsets laid
+    out in segment order from the ``stats.json`` doc counts. Sorted doc
+    ids map to sorted slots. ``dead``: the sorted doc ids of tombstoned
+    docs, kept as the group's sorted dead slots. Built once per task or
+    searcher, never per query."""
+
+    def __init__(self, segs: Iterable[int], seg_counts: Dict[int, int],
+                 dead: Optional[np.ndarray] = None):
+        self.segs = np.array(sorted(s for s in segs if seg_counts[s]),
+                             dtype=np.int64)
+        counts = np.array([seg_counts[s] for s in self.segs], dtype=np.int64)
+        self.starts = np.cumsum(counts) - counts
+        self.size = int(counts.sum())
+        # slot = doc id + shift[segment]
+        self._shift = np.zeros(int(self.segs.max(initial=0)) + 1, np.int64)
+        self._shift[self.segs] = self.starts - (self.segs << SEG_SHIFT)
+        dead = np.empty(0, np.int64) if dead is None else dead
+        self.dead = self.slots(dead[np.isin(dead >> SEG_SHIFT, self.segs)])
+
+    def slots(self, doc_ids: np.ndarray) -> np.ndarray:
+        return doc_ids + self._shift[doc_ids >> SEG_SHIFT]
+
+    def doc_ids(self, slots: np.ndarray) -> np.ndarray:
+        seg = self.segs[np.searchsorted(self.starts, slots, side="right") - 1]
+        return slots - self._shift[seg]
 
 
 def assign_segments(seg_counts: Dict[int, int], n: int) -> List[List[int]]:
@@ -128,18 +153,19 @@ def read_blocks(sources: Sequence[Tuple[str, int]], segs: Iterable[int],
     return pa.concat_tables(parts, promote_options="permissive")
 
 
-def segment_task(
-    sources: Sequence[Tuple[str, int]],
+def score_group(
+    runs: BlockRuns,
+    group: Group,
     weights: Dict[int, Dict[str, np.float32]],
     k: int,
-    seg_counts: Dict[int, int],
     scorer_consts: Optional[Tuple[float, float, bool]],
     shape_fns: Optional[Dict[str, Callable]] = None,
-    dead_by_seg: Optional[Dict[int, np.ndarray]] = None,
-) -> Task:
-    """The task of a search: segments -> ``HITS_SCHEMA`` batches, per
-    segment and qid every doc scoring at or above the kth score (ties
-    kept for the merge's (score desc, url asc) order).
+) -> List[Tuple[int, np.ndarray, np.ndarray]]:
+    """``[(qid, doc_ids, float64 scores)]``: per qid of ``weights``
+    (qid -> term -> query weight) with a term in ``runs``, every doc of
+    ``group`` scoring at or above the kth score (ties kept for the
+    merge's (score desc, url asc) order). ``runs`` holds the blocks of
+    the group's segments only.
 
     ``scorer_consts`` (``(cache1, cache2, lossy)``) gives float32 BM25
     through ``bm25.tf_part``; ``shape_fns`` (term -> callable(tfs, dls)
@@ -148,98 +174,105 @@ def segment_task(
     non-negative, increasing in tf and non-increasing in dl, so
     shape(max_tf, min_dl) bounds a block."""
     out_dtype = np.float32 if shape_fns is None else np.float64
-    terms = sorted({t for wmap in weights.values() for t in wmap})
 
     def part(t: str, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
         if shape_fns is None:
             return tf_part(tfs, dls, *scorer_consts)
         return shape_fns[t](np.asarray(tfs), np.asarray(dls))
 
-    def score_segment(runs: BlockRuns, seg: int) -> List[tuple]:
-        base = seg << SEG_SHIFT
-        count = seg_counts[seg]
-        # liveDocs (tombstones): dead postings drop at DECODE time, so
-        # accumulation and MaxScore thresholds never see them — ranked
-        # results equal an index that never held the docs (stats stay
-        # stale until a purging merge, Lucene-identical)
-        dead = dead_by_seg.get(seg) if dead_by_seg else None
-        spans = {t: runs.run(t, seg) for t in terms}
-        spans = {t: ab for t, ab in spans.items() if ab[1] > ab[0]}
-        # per-term block-max score bound tf*/(tf* + c1 + c2*dl*)
-        # (SURVEY.md §4), from block metadata only
-        bounds = {t: part(t, runs.cols["max_tf"][a:b],
-                          runs.cols["min_dl"][a:b])
-                  for t, (a, b) in spans.items()}
-        # full-run decode cache, shared across queries
-        decoded: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
+    terms = sorted({t for wmap in weights.values() for t in wmap})
+    spans = {t: runs.run(t) for t in terms}
+    spans = {t: ab for t, ab in spans.items() if ab[1] > ab[0]}
+    # per-term block-max score bound tf*/(tf* + c1 + c2*dl*)
+    # (SURVEY.md §4), from block metadata only
+    bounds = {t: part(t, runs.cols["max_tf"][a:b], runs.cols["min_dl"][a:b])
+              for t, (a, b) in spans.items()}
+    # full-run decode cache, shared across queries
+    decoded: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
 
-        def decode(t: str, lo: Optional[int] = None, hi: Optional[int] = None):
-            """t's live postings here as (sorted local ids, parts),
-            full runs cached across queries. Given a local-doc range
-            [lo, hi], decode only the (contiguous) blocks overlapping
-            it, unless the full run is cached."""
-            if t in decoded:
-                return decoded[t]
-            a, b = spans[t]
-            if lo is not None:
-                first = runs.cols["first_doc"][a:b] - base
-                last = runs.cols["last_doc"][a:b] - base
-                overlap = np.flatnonzero((last >= lo) & (first <= hi))
-                if not overlap.size:
-                    return np.empty(0, dtype=np.int64), np.empty(0, out_dtype)
-                a, b = a + int(overlap[0]), a + int(overlap[-1]) + 1
-            docs, tfs, dls = runs.decode_rows(a, b)
-            ids, parts = docs - base, part(t, tfs, dls)
-            keep = drop_dead(ids, dead)
-            if keep is not None:
-                ids, parts = ids[keep], parts[keep]
-            if lo is None:
-                decoded[t] = (ids, parts)
-            return ids, parts
+    def decode(t: str, lo: Optional[int] = None, hi: Optional[int] = None):
+        """t's live postings as (sorted slots, parts), full runs cached
+        across queries. Given a slot range [lo, hi], decode only the
+        (contiguous) blocks overlapping it, unless the full run is
+        cached. liveDocs (tombstones): dead postings drop here, so
+        accumulation and MaxScore thresholds never see them — ranked
+        results equal an index that never held the docs (stats stay
+        stale until a purging merge, Lucene-identical)."""
+        if t in decoded:
+            return decoded[t]
+        a, b = spans[t]
+        if lo is not None:
+            first = group.slots(runs.cols["first_doc"][a:b])
+            last = group.slots(runs.cols["last_doc"][a:b])
+            overlap = np.flatnonzero((last >= lo) & (first <= hi))
+            if not overlap.size:
+                return np.empty(0, dtype=np.int64), np.empty(0, out_dtype)
+            a, b = a + int(overlap[0]), a + int(overlap[-1]) + 1
+        docs, tfs, dls = runs.decode_rows(a, b)
+        ids, parts = group.slots(docs), part(t, tfs, dls)
+        keep = drop_dead(ids, group.dead)
+        if keep is not None:
+            ids, parts = ids[keep], parts[keep]
+        if lo is None:
+            decoded[t] = (ids, parts)
+        return ids, parts
 
-        acc = np.zeros(count, dtype=np.float64)
-        # dense touched-doc mask: candidate collection is O(segment
-        # doc count) flatnonzero scans instead of O(n log n)
-        # unique/sort churn per query — the batch-throughput hot path
-        mask = np.zeros(count, dtype=bool)
-        out = []
-        for qid, wmap in weights.items():
-            # SEGMENT-INDEPENDENT term order, (query weight desc, term):
-            # float addition is order-sensitive, so two docs holding the
-            # same contribution multiset must accumulate in the same
-            # order in EVERY segment or their totals drift 1 ulp apart
-            # and break score ties inconsistently with the (score desc,
-            # docid asc) contract. The global weight (boost*idf) tracks
-            # the MaxScore impact order, so pruning stays effective;
-            # correctness of the suffix-bound logic is order-agnostic.
-            qterms = sorted((t for t in wmap if t in spans),
-                            key=lambda t: (-float(wmap[t]), t))
-            if not qterms:
-                continue
-            cand, scores = _maxscore_query(qterms, wmap, bounds, decode,
-                                           acc, mask, k, out_dtype)
-            cand, scores = keep_topk(cand, scores, k)
-            out.append((qid, cand + base, scores.astype(np.float64)))
-        return out
+    acc = np.zeros(group.size, dtype=np.float64)
+    # dense touched-slot mask: candidate collection is O(group doc
+    # count) flatnonzero scans instead of O(n log n) unique/sort churn
+    # per query — the batch-throughput hot path
+    mask = np.zeros(group.size, dtype=bool)
+    out = []
+    for qid, wmap in weights.items():
+        # GROUP-INDEPENDENT term order, (query weight desc, term):
+        # float addition is order-sensitive, so two docs holding the
+        # same contribution multiset must accumulate in the same order
+        # in EVERY group or their totals drift 1 ulp apart and break
+        # score ties inconsistently with the (score desc, docid asc)
+        # contract. The global weight (boost*idf) tracks the MaxScore
+        # impact order, so pruning stays effective; correctness of the
+        # suffix-bound logic is order-agnostic.
+        qterms = sorted((t for t in wmap if t in spans),
+                        key=lambda t: (-float(wmap[t]), t))
+        if not qterms:
+            continue
+        cand, scores = _maxscore_query(qterms, wmap, bounds, decode, acc,
+                                       mask, k, out_dtype)
+        cand, scores = keep_topk(cand, scores, k)
+        out.append((qid, group.doc_ids(cand), scores.astype(np.float64)))
+    return out
+
+
+def segment_task(
+    sources: Sequence[Tuple[str, int]],
+    weights: Dict[int, Dict[str, np.float32]],
+    k: int,
+    seg_counts: Dict[int, int],
+    scorer_consts: Optional[Tuple[float, float, bool]],
+    shape_fns: Optional[Dict[str, Callable]] = None,
+    dead: Optional[np.ndarray] = None,
+) -> Task:
+    """The task of a search: a segment group -> one ``HITS_SCHEMA``
+    batch, ``read_blocks`` then ``score_group`` (whose arguments these
+    are; ``dead`` feeds the ``Group``)."""
+    terms = sorted({t for wmap in weights.values() for t in wmap})
 
     def task(segs: List[int]) -> Iterator[pa.RecordBatch]:
         tbl = read_blocks(sources, segs, terms)
         if not tbl.num_rows:
             return
-        runs = BlockRuns(tbl)
-        for seg in segs:
-            hits = score_segment(runs, seg)
-            if hits:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, f.type)
-                     for c, f in zip(zip(*hits), HITS_SCHEMA)],
-                    schema=HITS_SCHEMA)
+        hits = score_group(BlockRuns(tbl), Group(segs, seg_counts, dead),
+                           weights, k, scorer_consts, shape_fns)
+        if hits:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(zip(*hits), HITS_SCHEMA)],
+                schema=HITS_SCHEMA)
 
     return task
 
 
 def _maxscore_query(terms, wmap, bounds, decode, acc, mask, k, out_dtype):
-    """MaxScore evaluation of one query over one segment.
+    """MaxScore evaluation of one query over one segment group.
 
     Dense-accumulate terms in descending upper-bound order; once the
     remaining terms' summed upper bound drops below the current kth
@@ -252,17 +285,17 @@ def _maxscore_query(terms, wmap, bounds, decode, acc, mask, k, out_dtype):
 
     A term's contribution is ``w * part`` in ``out_dtype`` (float32
     for BM25, as Lucene multiplies floats), widened into the float64
-    accumulator by ``+=``. ``mask`` is the segment-wide touched-doc
+    accumulator by ``+=``. ``mask`` is the group-wide touched-slot
     workspace (candidate collection = one O(doc-count) flatnonzero
     scan, no per-term unique/sort); it is returned to all-False before
     exit."""
     ws = {t: out_dtype(wmap[t]) for t in terms}
     ubs = {t: float(ws[t] * bounds[t].max()) for t in terms}
-    # keep the caller's segment-independent order (weight desc, term):
-    # the per-segment ubs feed the suffix-bound THRESHOLD math, which is
-    # valid in any processing order; re-sorting by segment-local ubs
-    # would make per-doc addition order segment-dependent (see
-    # segment_task) for a marginal pruning gain
+    # keep the caller's group-independent order (weight desc, term):
+    # the per-group ubs feed the suffix-bound THRESHOLD math, which is
+    # valid in any processing order; re-sorting by group-local ubs
+    # would make per-doc addition order group-dependent (see
+    # score_group) for a marginal pruning gain
     order = list(terms)
     suffix = np.concatenate(
         [np.cumsum([ubs[t] for t in order][::-1])[::-1][1:], [0.0]]

@@ -5,9 +5,9 @@ The reference's `SimpleSearcher` answers single queries in ~60 ms
 (`docs/experiments-msmarco-passage.md:65`) against an OS-page-cached
 mmap'd Lucene index; a Spark job can't (fixed scheduling floor).
 Because the index is open parquet, a driver-side searcher reads the
-term-pruned slices directly via pyarrow and scores with the same
-float32 BM25 math — result-identical to the distributed engine (pinned
-by tests).
+term-pruned slices directly via pyarrow and scores them with the Spark
+search tasks' own kernel — result-identical to the distributed engine
+(pinned by tests).
 
 A query reads three columnar views of the index:
 
@@ -19,9 +19,9 @@ A query reads three columnar views of the index:
   ``bytes``;
 - the dictionary as sorted (term, df) arrays: df lookup is a
   searchsorted;
-- doc urls keyed by accumulator slot (``tieadjust.Urls``), with each
-  url's rank in url order, so the final (score desc, url asc) order is
-  one ``np.lexsort``.
+- doc urls keyed by doc id (``tieadjust.Urls``), with each url's rank
+  in url order, so the final (score desc, url asc) order is one
+  ``np.lexsort``.
 
 Serving mode (``preload=True``, the latency-bench configuration and
 the honest analogue of Lucene's warm mmap) builds the three views once
@@ -30,11 +30,14 @@ at open over the whole index, so a query does no parquet I/O. With
 from term- and doc-id-filtered pyarrow reads with row-group pruning;
 scoring and ordering are the same code in both modes.
 
-Scoring is one dense float64 accumulator over the whole index
-(segments are dense id ranges: global slot = seg_offset[segment] +
-row), one vectorized update per query term in sorted term order. The
-final order and tie rounding are ``tieadjust.rank_hits``, the same
-function the distributed engine's driver tail calls.
+Scoring is ``kernel.score_group`` over one group of all the index's
+segments (``kernel.Group``, laid out once at open), the function every
+Spark search task calls on its own group; the query weights are
+``bm25.query_weights``, the Spark searcher's too. The final order and
+tie rounding are ``tieadjust.rank_hits``, the same function the
+distributed engine's driver tail calls. A search holds no state of the
+searcher's but the read-only views, so concurrent ``search`` calls are
+safe.
 """
 
 from __future__ import annotations
@@ -50,13 +53,10 @@ import pyarrow.dataset as ds
 
 from ..analysis.analyzer import analyze_for
 from ..index.build import SEG_SHIFT
-from ..index.tombstones import dead_doc_ids, drop_dead
-from .bm25 import BM25Params, BM25Scorer, tf_part
-from .kernel import BlockRuns
+from ..index.tombstones import dead_doc_ids
+from .bm25 import BM25Params, query_weights
+from .kernel import KERNEL_COLS, BlockRuns, Group, score_group
 from .tieadjust import Hit, Urls, rank_hits
-
-_BLOCK_COLS = ["term", "segment", "first_doc", "last_doc", "n",
-               "docs_bin", "tfs_bin", "dls_bin"]
 
 
 def _read(dataset: ds.Dataset, columns: List[str], key: str,
@@ -87,11 +87,7 @@ class _Dictionary:
 
 
 class LocalSearcher:
-    """Driver-local BM25 searcher over one index directory.
-
-    Not safe for concurrent ``search`` calls: every query accumulates
-    into one score buffer and touched-slot mask owned by the searcher.
-    """
+    """Driver-local BM25 searcher over one index directory."""
 
     def __init__(self, index_dir: str, k1: float = 0.9, b: float = 0.4,
                  lossy: bool = False, preload: bool = False):
@@ -113,29 +109,14 @@ class LocalSearcher:
         self.params = BM25Params(k1=k1, b=b, lossy=lossy)
         self.seg_counts = {int(s): int(c)
                            for s, c in self.stats["segments"].items()}
-        # dense global slots: segment -> offset into one accumulator
-        segs = sorted(self.seg_counts)
-        self._seg_ids = np.array(segs, dtype=np.int64)
-        self._seg_bounds = np.zeros(len(segs), dtype=np.int64)
-        if segs:
-            self._seg_bounds[1:] = np.cumsum(
-                [self.seg_counts[s] for s in segs])[:-1]
-        self._n_slots = sum(self.seg_counts.values())
-        self._offsets_arr = np.zeros(max(segs) + 1 if segs else 1,
-                                     dtype=np.int64)
-        self._offsets_arr[self._seg_ids] = self._seg_bounds
-        self._acc = np.zeros(self._n_slots, dtype=np.float64)
-        self._touched = np.zeros(self._n_slots, dtype=bool)
+        self._group = Group(self.seg_counts, self.seg_counts,
+                            dead_doc_ids(index_dir))
         self._blocks = ds.dataset(os.path.join(index_dir, "blocks.parquet"),
                                   format="parquet")
         self._dict = ds.dataset(os.path.join(index_dir, "dictionary.parquet"),
                                 format="parquet")
         self._docvec = ds.dataset(os.path.join(index_dir, "docvec.parquet"),
                                   format="parquet")
-        # liveDocs (tombstones): sorted dead accumulator slots, masked
-        # after full accumulation (this engine never prunes, so the
-        # post-accumulation mask is exact)
-        self._dead_slots = np.sort(self._slots(dead_doc_ids(index_dir)))
         self._pre: Optional[Tuple[BlockRuns, _Dictionary, Urls]] = None
         if preload:
             self._pre = (self._block_runs(None), self._dictionary(None),
@@ -147,83 +128,46 @@ class LocalSearcher:
     def _block_runs(self, terms: Optional[List[str]]) -> BlockRuns:
         if self._pre is not None:
             return self._pre[0]
-        return BlockRuns(_read(self._blocks, _BLOCK_COLS, "term", terms))
+        return BlockRuns(_read(self._blocks, KERNEL_COLS, "term", terms))
 
     def _dictionary(self, terms: Optional[List[str]]) -> _Dictionary:
         if self._pre is not None:
             return self._pre[1]
         return _Dictionary(_read(self._dict, ["term", "df"], "term", terms))
 
-    def _urls(self, slots: Optional[np.ndarray]) -> Urls:
+    def _urls(self, doc_ids: Optional[np.ndarray]) -> Urls:
         if self._pre is not None:
             return self._pre[2]
-        ids = None if slots is None else self._unslot(slots).tolist()
+        ids = None if doc_ids is None else doc_ids.tolist()
         t = _read(self._docvec, ["doc_id", "url"], "doc_id", ids)
-        return Urls(self._slots(t["doc_id"].to_numpy().astype(np.int64)),
+        return Urls(t["doc_id"].to_numpy().astype(np.int64),
                     t["url"].combine_chunks())
 
     def set_bm25(self, k1: float, b: float) -> None:
         self.params = BM25Params(k1=k1, b=b, k=self.params.k,
                                  lossy=self._lossy)
 
-    def _analyze(self, text: str) -> List[str]:
+    def analyze_query(self, text: str) -> List[str]:
         return analyze_for(self.analyzer)(text or "")
 
-    def _slots(self, docs: np.ndarray) -> np.ndarray:
-        """global doc_id (segment<<40|row) -> dense accumulator slot."""
-        seg = (docs >> SEG_SHIFT).astype(np.int64)
-        row = (docs & ((1 << SEG_SHIFT) - 1)).astype(np.int64)
-        return self._offsets_arr[seg] + row
-
-    def _unslot(self, slots: np.ndarray) -> np.ndarray:
-        """dense slot -> global doc_id (inverse of _slots)."""
-        idx = np.searchsorted(self._seg_bounds, slots, side="right") - 1
-        return (self._seg_ids[idx] << SEG_SHIFT) + (
-            slots - self._seg_bounds[idx])
+    def term_dfs(self, terms) -> Dict[str, int]:
+        uterms = sorted(set(terms))
+        return self._dictionary(uterms).lookup(uterms)
 
     def search(self, query: str, k: int = 10) -> List[Hit]:
         """Returns [(url, rank, tie-adjusted score)] — same semantics
         as the distributed engine (float32 BM25, url tie-break,
         ScoreTiesAdjuster rounding)."""
         p = self.params
-        toks = self._analyze(query)
-        if not toks:
+        weights, scorer = query_weights(self, {0: query}, p)
+        if not weights[0]:
             return []
-        uterms = sorted(set(toks))
-        dfs = self._dictionary(uterms).lookup(uterms)
-        scorer = BM25Scorer(self.stats["doc_count"], self.stats["avgdl"], p)
-        wmap: Dict[str, np.float32] = {}
-        for t in toks:
-            if t not in dfs:
-                continue
-            w = scorer.weight(dfs[t])
-            wmap[t] = np.float32(wmap.get(t, np.float32(0.0)) + w)
-        if not wmap:
+        hits = score_group(self._block_runs(sorted(weights[0])), self._group,
+                           weights, k, (scorer.cache1, scorer.cache2, p.lossy))
+        if not hits:
             return []
-        runs = self._block_runs(sorted(wmap))
-
-        acc, touched = self._acc, self._touched
-        cand = None
-        try:
-            for t in sorted(wmap):
-                docs, tfs, dls = runs.decode(t)
-                slots = self._slots(docs)
-                part = tf_part(tfs, dls, scorer.cache1, scorer.cache2,
-                               p.lossy)
-                contrib = (wmap[t] * part).astype(np.float32)
-                acc[slots] += contrib.astype(np.float64)
-                touched[slots] = True
-            cand = np.flatnonzero(touched)
-            scores = acc[cand].astype(np.float32)
-        finally:
-            # reset only the touched slots, also after a failed query
-            reset = np.flatnonzero(touched) if cand is None else cand
-            acc[reset] = 0.0
-            touched[reset] = False
-        keep = drop_dead(cand, self._dead_slots)
-        if keep is not None:
-            cand, scores = cand[keep], scores[keep]
-        return rank_hits(cand, scores, self._urls, k)
+        _, ids, scores = hits[0]
+        return rank_hits(ids, scores, self._urls, k)
 
     def batch_search(self, queries: Dict[int, str], k: int = 10):
         return {qid: self.search(q, k) for qid, q in queries.items()}

@@ -181,14 +181,14 @@ class MultiSliceIndex(InvertedIndex):
                 for path, _ in s.block_sources()]
 
     @property
-    def dead_by_segment(self):
-        """Per-slice liveDocs with the union's segment re-namespacing
-        applied (local ids within a segment are offset-invariant)."""
-        out = {}
-        for s, off in zip(self.slices, self.offsets):
-            for seg, arr in s.dead_by_segment.items():
-                out[seg + off] = arr
-        return out
+    def dead_global(self) -> np.ndarray:
+        """Each slice's liveDocs with the union's segment re-namespacing
+        applied; slices are in offset order, so the union stays
+        sorted."""
+        return np.concatenate(
+            [np.empty(0, np.int64)]
+            + [s.dead_global + (off << SEG_SHIFT)
+               for s, off in zip(self.slices, self.offsets)])
 
     @property
     def live_docvec(self):

@@ -1,20 +1,21 @@
 """BM25 top-k retrieval over the block index.
 
 One physical engine, Lucene's per-segment search
-(`SearchCollection.java:459-486`): each segment collects its own top k,
-then one merge runs. A search is ONE Spark job of ONE stage with no
-Exchange (``_search_blocks``): the segments are split into at most one
-group per core, and each task (``kernel.segment_task``) reads its
-segments' term-pruned blocks with pyarrow and scores them with
-MaxScore in numpy (PLANS.md §1). The hits, each segment's top k per
-qid, come back through ``collect()``. There ``rank_runs`` keeps each
-qid's docs scoring at or above the kth score, reads only their urls
-(``InvertedIndex.urls``), orders by (score desc, url asc) — Lucene's
-BREAK_SCORE_TIES_BY_DOCID (`SearchCollection.java:115-116`) — and
-tie-adjusts through ``tieadjust.rank_hits``, the tail ``LocalSearcher``
-calls too.
+(`SearchCollection.java:459-486`): each part of the index collects its
+own top k, then one merge runs. A search is ONE Spark job of ONE stage
+with no Exchange (``_search_blocks``): the segments are split into at
+most one group per core, and each task (``kernel.segment_task``) reads
+its group's term-pruned blocks with pyarrow and scores the group as one
+with MaxScore in numpy (``kernel.score_group``, the function
+``LocalSearcher`` calls over all segments; PLANS.md §1). The hits, each
+group's top k per qid, come back through ``collect()``. There
+``rank_runs`` keeps each qid's docs scoring at or above the kth score,
+reads only their urls (``InvertedIndex.urls``), orders by (score desc,
+url asc) — Lucene's BREAK_SCORE_TIES_BY_DOCID
+(`SearchCollection.java:115-116`) — and tie-adjusts through
+``tieadjust.rank_hits``, the tail ``LocalSearcher`` calls too.
 
-A batch whose segments could hand the driver more than
+A batch whose groups could hand the driver more than
 ``DRIVER_TAIL_MAX_CANDIDATES`` candidates runs the same tasks through a
 ``mapInArrow`` launcher (``_hits_frame``) and keeps the tail in Spark
 (``_spark_tail``: a per-qid merge shuffle, a docmap join for the
@@ -33,7 +34,8 @@ filter and tie order.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
 to float32 at the end — Lucene's DisjunctionSumScorer likewise sums
-float subscores in a double and narrows.
+float subscores in a double and narrows. The query weights are
+``bm25.query_weights``, shared with ``LocalSearcher``.
 
 API mirrors `search/SimpleSearcher.java:80-478` (search, batch_search,
 set_bm25) — the pyserini-bridge surface (SURVEY.md §3.3).
@@ -55,7 +57,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..index.build import SEG_SHIFT
 from ..index.tombstones import drop_dead
-from .bm25 import BM25Params, BM25Scorer
+from .bm25 import BM25Params, query_weights
 from .kernel import (BINS, HITS_SCHEMA, BlockRuns, Task, assign_segments,
                      segment_task)
 from .tieadjust import Hit, Urls, adjust_score_ties, keep_topk, rank_hits
@@ -63,12 +65,12 @@ from .tieadjust import Hit, Urls, adjust_score_ties, keep_topk, rank_hits
 # the ranked run every search entry point returns
 RUN_SCHEMA = "qid int, docid string, rank int, score double"
 # bound on the (doc_id, score) candidates a search may send the driver,
-# counted as |queries| x sum over segments of min(k, segment docs).
+# counted as |queries| x sum over groups of min(k, group docs).
 # Past it the merge stays in Spark (``_spark_tail``): its extra jobs
 # cost ~1 s, which the driver tail's per-candidate work matched at
-# ~2M candidates on 4 cores (BENCH.md), and 1K queries x k=1000 over 32
-# segments would put ~0.5 GB of task results on the driver, 10K more
-# than spark.driver.maxResultSize (1g)
+# ~2M candidates on 4 cores (BENCH.md), and 10K queries x k=1000 over
+# 4 groups would put ~0.6 GB of task results on the driver, near
+# spark.driver.maxResultSize (1g)
 DRIVER_TAIL_MAX_CANDIDATES = 1_000_000
 # a search's ranked run: qid -> [(docid, rank, score)] on the driver,
 # or a RUN_SCHEMA DataFrame when the tail ran in Spark
@@ -107,7 +109,7 @@ class InvertedIndex:
         self._dfs: Dict[str, DataFrame] = {}
         self._dict_ds = None  # lazy pyarrow dataset for term_stats
         self._docvec_ds = None  # lazy pyarrow dataset for urls
-        self._dead: Optional[Dict[int, np.ndarray]] = None
+        self._dead: Optional[np.ndarray] = None
 
     @property
     def live_docvec(self) -> DataFrame:
@@ -123,28 +125,16 @@ class InvertedIndex:
         return self.docvec.join(F.broadcast(dead), "url", "left_anti")
 
     @property
-    def dead_by_segment(self) -> Dict[int, np.ndarray]:
-        """Lucene-liveDocs view: segment -> sorted local doc ids of
-        tombstoned docs ({} when none). Read once with pyarrow
+    def dead_global(self) -> np.ndarray:
+        """Lucene-liveDocs view: sorted doc ids of tombstoned docs
+        (empty when none). Read once with pyarrow
         (``tombstones.dead_doc_ids``) and cached driver-side —
         O(deletes), rides into the kernel closures."""
         if self._dead is None:
             from ..index.tombstones import dead_doc_ids
 
-            ids = dead_doc_ids(self.dir)
-            segs = ids >> SEG_SHIFT
-            self._dead = {int(s): ids[segs == s] & ((1 << SEG_SHIFT) - 1)
-                          for s in np.unique(segs)}
+            self._dead = dead_doc_ids(self.dir)
         return self._dead
-
-    @property
-    def dead_global(self) -> np.ndarray:
-        """Sorted absolute doc ids of tombstoned docs (may be empty)."""
-        parts = [(s << SEG_SHIFT) | ids
-                 for s, ids in self.dead_by_segment.items()]
-        if not parts:
-            return np.empty(0, dtype=np.int64)
-        return np.sort(np.concatenate(parts))
 
     def _load(self, name: str, do_cache: bool) -> DataFrame:
         if name not in self._dfs:
@@ -233,56 +223,6 @@ class InvertedIndex:
         return {t: df for t, (df, _cf) in self.term_stats(terms).items()}
 
 
-def _query_weights(
-    index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
-    boosts: Optional[Dict[int, Dict[str, float]]] = None,
-    boosts_are_final: bool = False,
-) -> Tuple[Dict[int, Dict[str, np.float32]], BM25Scorer]:
-    """Analyze queries, look up dfs, precompute float32 term weights.
-
-    Bag-of-words semantics (`BagOfWordsQueryGenerator.java:34-43`):
-    duplicate query terms act as boost = occurrence count. When
-    ``boosts`` is given (RM3/expansion path: pre-analyzed term ->
-    boost maps, `Rm3Reranker.java:96-116` BoostQuery analogue), the
-    per-term weight is boost * idf and ``queries`` text is ignored for
-    those qids."""
-    scorer = BM25Scorer(index.stats["doc_count"], index.stats["avgdl"], params)
-    boosts = boosts or {}
-    per_q_tokens = {
-        qid: index.analyze_query(text)
-        for qid, text in queries.items()
-        if qid not in boosts
-    }
-    all_terms = {t for toks in per_q_tokens.values() for t in toks}
-    all_terms |= {t for m in boosts.values() for t in m}
-    dfs = index.term_dfs(all_terms)
-    weights: Dict[int, Dict[str, np.float32]] = {}
-    for qid, toks in per_q_tokens.items():
-        wmap: Dict[str, np.float32] = {}
-        for t in toks:
-            if t not in dfs:  # zero-hit term: no postings, contributes 0
-                continue
-            if t in wmap:
-                wmap[t] = np.float32(wmap[t] + scorer.weight(dfs[t]))
-            else:
-                wmap[t] = scorer.weight(dfs[t])
-        weights[qid] = wmap
-    for qid, bmap in boosts.items():
-        if boosts_are_final:
-            # BM25PRF path: the boost IS the term weight (idf ≡ 1,
-            # `BM25PrfReranker.java:54-65` BM25PrfSimilarity)
-            weights[qid] = {
-                t: np.float32(b) for t, b in bmap.items() if t in dfs
-            }
-        else:
-            weights[qid] = {
-                t: np.float32(np.float32(b) * scorer.weight(dfs[t]))
-                for t, b in bmap.items()
-                if t in dfs
-            }
-    return weights, scorer
-
-
 def _segment_tasks(
     index: InvertedIndex,
     weights: Dict[int, Dict[str, float]],
@@ -303,7 +243,7 @@ def _segment_tasks(
         return None
     return groups, segment_task(index.block_sources(), weights, k,
                                 seg_counts, consts, shape_fns,
-                                index.dead_by_segment or None)
+                                index.dead_global)
 
 
 def _hits_frame(index: InvertedIndex, groups: List[List[int]],
@@ -337,7 +277,8 @@ def _search_blocks(
     if tasks is None:
         return {}
     groups, task = tasks
-    per_q = sum(min(k, int(c)) for c in index.stats["segments"].values())
+    docs = {int(s): int(c) for s, c in index.stats["segments"].items()}
+    per_q = sum(min(k, sum(docs[s] for s in g)) for g in groups)
     if len(weights) * per_q > DRIVER_TAIL_MAX_CANDIDATES:
         return _spark_tail(index, _hits_frame(index, groups, task), k)
     t = pa.Table.from_batches(index.spark.sparkContext.parallelize(
@@ -427,8 +368,8 @@ def kernel_runs(
 ) -> Run:
     """float32 BM25 (bit-parity with the reference) through
     ``_search_blocks``."""
-    weights, scorer = _query_weights(index, queries, params, boosts,
-                                     boosts_are_final)
+    weights, scorer = query_weights(index, queries, params, boosts,
+                                    boosts_are_final)
     return _search_blocks(index, weights, params.k,
                           (scorer.cache1, scorer.cache2, params.lossy))
 

@@ -15,7 +15,7 @@
 Scoring is the block kernel's segment tasks through ``mapInArrow``
 (``searcher._hits_frame``, float32 BM25, tombstones masked at decode)
 with k = the index's slot count: MaxScore never cuts and no
-per-segment top-k fires, so every matching live doc comes out. The
+per-group top-k fires, so every matching live doc comes out. The
 packed hits are exploded, joined to
 the docmap, cut by the per-query id range (BEFORE the top-k), and
 ranked in the tweet tie order. The filter is a plain comparison on a
@@ -29,8 +29,8 @@ from typing import Dict
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .searcher import (RUN_SCHEMA, BM25Params, InvertedIndex,
-                       _hits_frame, _query_weights, _segment_tasks)
+from .bm25 import BM25Params, query_weights
+from .searcher import RUN_SCHEMA, InvertedIndex, _hits_frame, _segment_tasks
 from .tieadjust import adjust_score_ties
 
 
@@ -41,7 +41,7 @@ def search_tweets(index: InvertedIndex, queries: Dict[int, str],
     per-qid ``querytweettime`` range filter and the (score desc,
     id_long desc) tie order. ``docid`` stays the string column the
     run-file sinks expect; ``id_long`` is its numeric value."""
-    weights, scorer = _query_weights(index, queries, params)
+    weights, scorer = query_weights(index, queries, params)
     slots = sum(int(c) for c in index.stats["segments"].values())
     tasks = _segment_tasks(index, weights, slots,
                            (scorer.cache1, scorer.cache2, params.lossy))

@@ -11,11 +11,12 @@ Prints one JSON line. Usage:
 """
 
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from anserini_spark.corpus.synth import web_corpus  # noqa: E402
 from anserini_spark.index.build import IndexConfig  # noqa: E402

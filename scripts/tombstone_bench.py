@@ -8,11 +8,12 @@ Prints one JSON line. Usage:
 """
 
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -62,7 +63,7 @@ def main(sf_dir="/root/testdata/sf0.1", multiplier=100, repeats=3):
     add_tombstones(spark, d, dead_urls)
     idx = InvertedIndex(spark, d)
     t0 = time.time()
-    _ = idx.dead_by_segment  # one-time liveDocs materialization
+    _ = idx.dead_global  # one-time liveDocs materialization
     live_init_s = round(time.time() - t0, 2)
     tomb_s, tomb_hits = _timed(idx, repeats)
 

@@ -105,22 +105,49 @@ def test_preloaded_search_reads_no_parquet(tiny_index):
 
 
 def test_failed_query_leaves_no_partial_scores(tiny_index, monkeypatch):
-    """The searcher's accumulator is reset even when a query fails
-    part-way, so the next query scores from zero."""
+    """A query that fails part-way through the kernel's decode leaves
+    nothing behind: the next query scores from zero."""
     ls = LocalSearcher(tiny_index, preload=True)
     want = ls.search("spark merge join", k=30)
     runs = ls._pre[0]
-    decode = runs.decode
+    decode_rows = runs.decode_rows
     calls = []
 
-    def failing(term):
-        calls.append(term)
+    def failing(lo, hi):
+        calls.append((lo, hi))
         if len(calls) == 2:
             raise RuntimeError("decode failed")
-        return decode(term)
+        return decode_rows(lo, hi)
 
-    monkeypatch.setattr(runs, "decode", failing)
+    monkeypatch.setattr(runs, "decode_rows", failing)
     with pytest.raises(RuntimeError):
         ls.search("spark merge join", k=30)
-    monkeypatch.setattr(runs, "decode", decode)
+    assert len(calls) == 2
+    monkeypatch.setattr(runs, "decode_rows", decode_rows)
     assert ls.search("spark merge join", k=30) == want
+
+
+def test_concurrent_searches_match_serial(tiny_index):
+    """``search`` holds no shared scoring state: 8 threads (more than
+    the cores) searching one searcher at once, switching often, get the
+    serial results, in both modes."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    texts = ["spark merge join", "customer value", "scan", "merge scan",
+             "spark spark join", "value", "window batch stream",
+             "slow query table"]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for preload in (True, False):
+            ls = LocalSearcher(tiny_index, preload=preload)
+            want = [ls.search(t, k=50) for t in texts]
+            assert all(want)
+            with ThreadPoolExecutor(len(texts)) as pool:
+                for _ in range(3):
+                    got = list(pool.map(lambda t: ls.search(t, k=50),
+                                        texts, timeout=60))
+                    assert got == want, preload
+    finally:
+        sys.setswitchinterval(interval)

@@ -50,18 +50,60 @@ def test_kernel_engine_matches_oracle(spark, tiny_index, golden):
     assert got == golden
 
 
-def test_segment_count_invariance(spark, tiny_docs, golden, tmp_path):
-    """Same corpus indexed with a different segment/partition layout
-    must produce the identical run (Lucene's thread-count invariance)."""
+@pytest.fixture(scope="module")
+def idx7(spark, tmp_path_factory):
+    """The tiny corpus in 7 segments, more than the session's 4 cores."""
     from anserini_spark.corpus.synth import web_corpus
     from anserini_spark.index.build import IndexConfig, build_index
 
-    out = str(tmp_path / "idx7")
+    out = str(tmp_path_factory.mktemp("idx7") / "idx7")
     corpus = web_corpus(spark, "/root/testdata/sf0.001")
     build_index(spark, corpus, IndexConfig(out_dir=out, doc_partitions=7,
                                            block_partitions=2))
-    idx = InvertedIndex(spark, out)
+    return out
+
+
+def test_segment_count_invariance(spark, idx7, golden):
+    """Same corpus indexed with a different segment/partition layout
+    must produce the identical run (Lucene's thread-count invariance)."""
+    idx = InvertedIndex(spark, idx7)
     assert _rows(search_kernel(idx, QUERIES, BM25Params(k=20))) == golden
+
+
+def test_segment_groups_send_one_batch_and_fit_the_driver_tail(
+        spark, idx7, golden, monkeypatch):
+    """With more segments than cores, a task scores its group of
+    segments as one: it sends one hits batch per group, and the
+    driver-tail bound counts |queries| x sum over groups of min(k,
+    group docs), so a batch that fits by groups (though not by
+    segments) runs the driver tail and gives the golden run."""
+    from anserini_spark.search import searcher
+    from anserini_spark.search.bm25 import query_weights
+    from anserini_spark.search.kernel import HITS_SCHEMA
+
+    idx = InvertedIndex(spark, idx7)
+    p = BM25Params(k=20)
+    counts = {int(s): int(c) for s, c in idx.stats["segments"].items()}
+    weights, scorer = query_weights(idx, QUERIES, p)
+    groups, task = searcher._segment_tasks(
+        idx, weights, p.k, (scorer.cache1, scorer.cache2, p.lossy))
+    assert len(counts) > len(groups) == spark.sparkContext.defaultParallelism
+    assert max(len(g) for g in groups) > 1
+    for g in groups:
+        batches = list(task(g))
+        assert len(batches) == 1 and batches[0].schema == HITS_SCHEMA, g
+    by_group = len(QUERIES) * sum(
+        min(p.k, sum(counts[s] for s in g)) for g in groups)
+    assert by_group < len(QUERIES) * sum(min(p.k, c) for c in counts.values())
+
+    def no_spark_tail(*args):
+        raise AssertionError("the Spark tail ran")
+
+    monkeypatch.setattr(searcher, "DRIVER_TAIL_MAX_CANDIDATES", by_group)
+    monkeypatch.setattr(searcher, "_spark_tail", no_spark_tail)
+    run = searcher.kernel_runs(idx, QUERIES, p)
+    assert isinstance(run, dict)
+    assert _rows(searcher.run_frame(spark, run)) == golden
 
 
 def test_simple_searcher_api(spark, tiny_index):
