@@ -66,11 +66,13 @@ from .tieadjust import Hit, Urls, adjust_score_ties, keep_topk, rank_hits
 RUN_SCHEMA = "qid int, docid string, rank int, score double"
 # bound on the (doc_id, score) candidates a search may send the driver,
 # counted as |queries| x sum over groups of min(k, group docs).
-# Past it the merge stays in Spark (``_spark_tail``): its extra jobs
-# cost ~1 s, which the driver tail's per-candidate work matched at
-# ~2M candidates on 4 cores (BENCH.md), and 10K queries x k=1000 over
-# 4 groups would put ~0.6 GB of task results on the driver, near
-# spark.driver.maxResultSize (1g)
+# Past it the merge stays in Spark (``_spark_tail``). On 4 cores the
+# Spark tail's extra jobs cost ~0.3 s at 40K candidates, the two tails
+# tie at 0.4M and the Spark tail is faster at 4M, where the driver tail
+# also holds 0.6 GB of Python RSS (BENCH.md 2026-10-20, "Driver-tail
+# break-even"), so the break-even lies between 0.4M and 4M; and 10K
+# queries x k=1000 over 4 groups would put ~0.6 GB of task results on
+# the driver, near spark.driver.maxResultSize (1g)
 DRIVER_TAIL_MAX_CANDIDATES = 1_000_000
 # a search's ranked run: qid -> [(docid, rank, score)] on the driver,
 # or a RUN_SCHEMA DataFrame when the tail ran in Spark

@@ -12,6 +12,15 @@ alike: (score desc, url asc) — BREAK_SCORE_TIES_BY_DOCID on the
 collection docid (`SearchCollection.java:115-116`) — then the rounding
 above. ``adjust_score_ties`` is the same rounding as window ops, for
 the DataFrame paths that keep their own order (tweets, boolean).
+
+The rounding is vectorized (``round4``): ``np.rint(x * 1e4) / 1e4``
+is Python's ``round(x, 4)`` bit for bit off a 4-place midpoint, since
+``rint`` then finds the correctly rounded integer and IEEE division of
+that exact integer by 1e4 is correctly rounded. Only scores whose
+``x * 1e4`` lies within 1e-5 of a half take a per-score ``Decimal``
+HALF_UP path: at an exact midpoint Spark rounds half up where ``rint``
+and ``round`` round half to even. These are rare, and ``rank_hits``
+does no other per-hit Python work than building its returned tuples.
 """
 
 from __future__ import annotations
@@ -64,32 +73,34 @@ class Urls:
 
 def round4(scores: np.ndarray) -> np.ndarray:
     """Spark's ``round(x, 4)``: HALF_UP on the double's shortest
-    decimal form. Python's ``round`` (np.round is not bit-identical)
-    agrees except on exact midpoints, where it rounds the binary value
-    half-even (``round(1.03125, 4)`` is 1.0312, Spark's 1.0313); only
-    scores within 1e-9 of a 4-place midpoint take the decimal path."""
+    decimal form. Off a 4-place midpoint ``np.rint(x * 1e4) / 1e4`` is
+    Python's ``round(x, 4)`` bit for bit (np.round is not); at one,
+    both round the binary value half-even (``round(1.03125, 4)`` is
+    1.0312, Spark's 1.0313), so scores whose ``x * 1e4`` is within 1e-5
+    of a half take the decimal path."""
     x = np.asarray(scores, dtype=np.float64)
-    vals = x.tolist()
-    out = [round(s, 4) for s in vals]
     y = x * 1e4
+    out = np.rint(y) / 1e4
     for i in np.flatnonzero(np.abs(y - np.floor(y) - 0.5) < 1e-5).tolist():
-        out[i] = float(Decimal(repr(vals[i])).quantize(
+        out[i] = float(Decimal(repr(float(x[i]))).quantize(
             Decimal("1e-4"), rounding=ROUND_HALF_UP))
-    return np.array(out, dtype=np.float64)
+    return out
 
 
 def rank_hits(ids: np.ndarray, scores: np.ndarray,
               urls: Callable[[np.ndarray], Urls], k: int) -> List[Hit]:
     """One query's ranked run ``[(url, rank, tie-adjusted score)]``
-    from its candidates; ``urls(ids)`` is asked for the survivors of
-    ``keep_topk`` only."""
-    ids, scores = keep_topk(ids, scores, k)
+    from its candidates, which the caller has already cut with
+    ``keep_topk`` (``score_group`` per group, ``rank_runs`` when it
+    merges the groups): the run is their first ``k`` in (score desc,
+    url asc) order. ``urls(ids)`` is asked for these candidates."""
     if not len(ids):
         return []
     u = urls(ids)
     pos = np.searchsorted(u.keys, ids)
     order = np.lexsort((u.rank[pos], -scores))[:k]
-    names = u.urls.take(pa.array(pos[order])).to_pylist()
+    names = u.urls.take(pa.array(pos[order])).to_numpy(
+        zero_copy_only=False).tolist()
     r = round4(scores[order])
     # each score steps down 1e-6 per earlier equal rounded score
     starts = np.flatnonzero(np.r_[True, r[1:] != r[:-1]])

@@ -3,8 +3,11 @@
 k=1000 through the Spark kernel engine (term-pruned block scan +
 MaxScore, one batch) over the natural-vocabulary corpus
 (`corpus/synth.py natural_corpus`, 100K-term Zipf vocab — realistic
-long-tail dfs). Reports aggregate qps + peak RSS and appends a
-BENCH.md section.
+long-tail dfs). Reports aggregate qps, the Python driver's and the
+driver JVM's peak RSS, and appends a BENCH.md section. ``--tail driver``
+or ``--tail spark`` forces the batch onto one tail whatever its
+candidate count (``searcher.DRIVER_TAIL_MAX_CANDIDATES``), to measure
+where the two break even.
 
     python scripts/batch_bench.py --docs 1000000 --queries 1000
 """
@@ -39,6 +42,17 @@ def gen_queries(n: int, seed: int = 9) -> dict[int, str]:
     return out
 
 
+def jvm_peak_rss_gb() -> float:
+    """Peak RSS (VmHWM) of the running driver JVM, the gateway's
+    process."""
+    from pyspark import SparkContext
+
+    with open(f"/proc/{SparkContext._gateway.proc.pid}/status") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("VmHWM:"))
+    return kb / 1e6
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=1_000_000)
@@ -46,6 +60,10 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=1000)
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--repeats", type=int, default=5)
+    ap.add_argument("--tail", choices=("auto", "driver", "spark"),
+                    default="auto",
+                    help="force the driver tail or the Spark tail "
+                         "(default: by candidate count)")
     ap.add_argument("--no-bench-append", action="store_true",
                     help="print the JSON line only; skip the BENCH.md "
                          "section (scripts/batch_curve.py aggregates "
@@ -59,8 +77,13 @@ def main() -> None:
     from anserini_spark.corpus.synth import natural_corpus
     from anserini_spark.index.build import IndexConfig, build_index
     from anserini_spark.search.bm25 import BM25Params
+    from anserini_spark.search import searcher
     from anserini_spark.search.searcher import InvertedIndex, search_kernel
     from anserini_spark.session import get_spark
+
+    if args.tail != "auto":
+        searcher.DRIVER_TAIL_MAX_CANDIDATES = (
+            float("inf") if args.tail == "driver" else 0)
 
     spark = get_spark(app="batch-bench", master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus)
@@ -106,7 +129,9 @@ def main() -> None:
         "qps": round(args.queries / best, 1),
         "result_rows": n_rows,
         "runs": [round(t, 2) for t in times],
+        "tail": args.tail,
         "driver_peak_rss_gb": round(peak_rss_gb, 2),
+        "jvm_peak_rss_gb": round(jvm_peak_rss_gb(), 2),
     }
     print(json.dumps(report))
 
@@ -127,7 +152,8 @@ block kernel with MaxScore on local[{args.cpus}]:
 
 Whole-dev-set batching (SURVEY §7.1 M5): {report['qps']} qps aggregate
 (min of {args.repeats}; runs {report['runs']}), driver peak RSS
-{report['driver_peak_rss_gb']} GB.
+{report['driver_peak_rss_gb']} GB, driver JVM peak RSS
+{report['jvm_peak_rss_gb']} GB.
 """)
 
 

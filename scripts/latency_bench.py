@@ -8,7 +8,11 @@ unfalsifiable. This bench builds a passage-scale index with a 100K
 Zipf vocabulary (`corpus/synth.py natural_corpus`) and measures
 LocalSearcher p50/p95 at k=1000 over MS MARCO-style multi-term
 queries sampled log-uniformly from head/mid term ranks, plus the open
-time of both modes (preload and cold). Next to them it reports the
+time of both modes (preload and cold). Next to the warm total p50 it
+prints the p50 of a query's two phases, timed apart in a second pass
+over the same queries: scoring (``kernel.score_group``) and the ranked
+run tail (``tieadjust.rank_hits``: order, url names, tie rounding), so
+a regression in either shows here. Next to them it reports the
 Spark engine on the same index and queries: ``SimpleSearcher.search``
 p50 and the Spark jobs and stages each query launches, so the serving
 gap shows in one command, and two Python task floors: the p50 of a
@@ -65,6 +69,34 @@ def _p50_s(job) -> float:
         if i >= 3:
             lats.append(time.perf_counter() - t0)
     return sorted(lats)[len(lats) // 2]
+
+
+def phase_p50s_ms(searcher, queries, k: int) -> dict[str, float]:
+    """p50 ms of each phase of ``searcher.search`` over ``queries``:
+    ``score_group`` and ``rank_hits`` are wrapped with timers where
+    ``LocalSearcher.search`` looks them up, for this pass only."""
+    from anserini_spark.search import local
+
+    lats = {"score_group": [], "rank_hits": []}
+
+    def timed(name, fn):
+        def call(*args):
+            t0 = time.perf_counter()
+            out = fn(*args)
+            lats[name].append(time.perf_counter() - t0)
+            return out
+        return call
+
+    orig = local.score_group, local.rank_hits
+    local.score_group = timed("score_group", orig[0])
+    local.rank_hits = timed("rank_hits", orig[1])
+    try:
+        for q in queries:
+            searcher.search(q, k=k)
+    finally:
+        local.score_group, local.rank_hits = orig
+    return {name: round(sorted(v)[len(v) // 2] * 1000, 2)
+            for name, v in lats.items() if v}
 
 
 def python_task_floors_s(spark) -> tuple[float, float]:
@@ -127,6 +159,7 @@ def main() -> None:
     p50 = lats[len(lats) // 2]
     p95 = lats[int(len(lats) * 0.95)]
     mean = sum(lats) / len(lats)
+    phases = phase_p50s_ms(s, queries.values(), args.k)
 
     # cold (on-disk pyarrow) mode for reference
     t0 = time.time()
@@ -176,6 +209,8 @@ def main() -> None:
         "p50_ms": round(p50 * 1000, 1),
         "p95_ms": round(p95 * 1000, 1),
         "mean_ms": round(mean * 1000, 1),
+        "score_group_p50_ms": phases.get("score_group"),
+        "rank_hits_p50_ms": phases.get("rank_hits"),
         "cold_open_ms": round(cold_open_s * 1000, 1),
         "cold_p50_ms": round(cold[len(cold) // 2] * 1000, 1),
         "cold_p95_ms": round(cold[int(len(cold) * 0.95)] * 1000, 1),
@@ -202,7 +237,9 @@ Warm serving mode (preload=True, in-RAM block runs, dictionary and
 url views — the analogue of the reference's OS-page-cached mmap index;
 open {report['open_ms']} ms):
 **p50 {report['p50_ms']} ms, p95 {report['p95_ms']} ms, mean
-{report['mean_ms']} ms** (mean hits/query {report['mean_hits']}).
+{report['mean_ms']} ms** (mean hits/query {report['mean_hits']}); phase
+p50s over the same queries: `score_group` {report['score_group_p50_ms']}
+ms, `rank_hits` {report['rank_hits_p50_ms']} ms.
 Cold on-disk pyarrow mode (open {report['cold_open_ms']} ms): p50
 {report['cold_p50_ms']} ms, p95 {report['cold_p95_ms']} ms.
 Spark engine (`SimpleSearcher.search`, {len(spark_lats)} queries after
